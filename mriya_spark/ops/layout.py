@@ -81,6 +81,10 @@ def write_zordered(
 #: cliff EARLIER, which the estimate's byte basis tracks.
 SALT_AUTO_ROWS_PER_SHARD = 1_000_000
 
+#: Catalyst's sizeInBytes for a leaf without statistics (an RDD-backed
+#: ``createDataFrame``, a ``LogicalRDD``): Long.MaxValue, "unknown"
+_LONG_MAX = 2**63 - 1
+
 #: optimized-plan node names whose presence makes Catalyst's
 #: non-CBO sizeInBytes estimate meaningless (join estimates multiply,
 #: grouped-map/UDF output defaults to huge) — measured r20: the
@@ -124,8 +128,11 @@ def resolve_auto_salt_chars(df: DataFrame, num_shards: int) -> int:
         if rc.isDefined():
             est_rows = int(str(rc.get()))
         else:
+            size = int(str(stats.sizeInBytes()))
+            if size >= _LONG_MAX:
+                return 0  # no statistics (e.g. an RDD-backed frame)
             width = max(int(plan.schema().defaultSize()), 1)
-            est_rows = int(str(stats.sizeInBytes())) // width
+            est_rows = size // width
     except Exception:
         return 0  # estimate unavailable: keep the pinned default
     per_shard = est_rows / max(int(num_shards), 1)

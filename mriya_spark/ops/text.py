@@ -14,6 +14,10 @@ speed with no shuffle at all (group-bys excepted).
 
 from __future__ import annotations
 
+import heapq as _heapq
+import re as _re
+from collections import defaultdict as _defaultdict
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1491,18 +1495,18 @@ def classifier_train(
     return w
 
 
-# -- BPE tokenizer training (distributed, engine-replayable) -----------
+# -- BPE tokenizer training (engine-replayable) -------------------------
 #
 # The missing tokenizer half of the training-data engine: learn the
-# byte-pair-encoding merge table FROM the corpus, on-cluster. Classic
-# distributed BPE: reduce the corpus once to the (distinct word,
-# count) table — tiny relative to the corpus however big the corpus —
-# then iterate: count weighted adjacent symbol pairs, take the most
-# frequent (deterministic tie-break), rewrite the vocabulary, repeat.
-# Every quantity is an integer and every rewrite is a plain string
-# replace with private '<sym>' delimiters, so a fixed merge count is
-# bit-replayable in SQL (the graph_pagerank unrolled-CTE posture with
-# nothing float at all).
+# byte-pair-encoding merge table FROM the corpus. The corpus is reduced
+# once, on-cluster, to the (distinct word, count) table — tiny relative
+# to the corpus however big the corpus — which is collected to the
+# driver; there the trainer iterates: take the most frequent weighted
+# adjacent symbol pair (deterministic tie-break), rewrite the words
+# that hold it, repeat. Every quantity is an integer and every rewrite
+# is a plain string replace with private '<sym>' delimiters, so a fixed
+# merge count is bit-replayable in SQL (the graph_pagerank
+# unrolled-CTE posture with nothing float at all).
 
 #: symbols are wrapped as '<sym>' — '<'/'>' cannot appear inside a
 #: symbol because BPE runs over the classifier tokenizer's lowercase
@@ -1575,102 +1579,155 @@ def bpe_word_freq(
     )
 
 
-def _bpe_pair_counts(vocab: DataFrame) -> DataFrame:
-    """Weighted adjacent-symbol-pair counts over a ``bpe_word_freq``
-    vocabulary frame — the per-round aggregate both trainers share:
-    explode each word's symbol bigrams (zip_with over the shifted
-    symbol array, scan-local), weight by word count, map-side combine
-    into the distinct-pair groupBy (vocab-shaped, never corpus-shaped
-    after round 0). Must stay expression-equivalent to
-    ``_BPE_PAIR_COUNTS_SQL`` (the trainers' low-latency SQL form of
-    the same aggregate — parity is property-tested via the trainers)."""
-    syms = F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)")
-    return (
-        vocab.withColumn("__s", syms)
-        .select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "zip_with("
-                    "slice(__s, 1, greatest(size(__s) - 1, 0)), "
-                    "slice(__s, 2, greatest(size(__s) - 1, 0)), "
-                    "(a, b) -> concat(a, ' ', b))"
-                )
-            ).alias("pair"),
+#: symbols of one delimiter-wrapped ``seq`` — the same pattern the SQL
+#: side reads with ``regexp_extract_all(seq, '<([^>]*)>', 1)``
+_BPE_SYM_RE = _re.compile(r"<([^>]*)>")
+
+#: fail-loud ceiling on the vocabulary table the BPE trainers and the
+#: symbol lists collect to the driver (the ``FFD_MAX_GROUP_ROWS``
+#: pattern). The table holds distinct words, not corpus rows, so it is
+#: small at gate scale; at 100 TB it can reach ~1e8 rows, where the
+#: explicit trade is a frequency floor:
+#: ``word_freq=bpe_word_freq(df).where("cnt >= k")``. Measured on a
+#: 4-vCPU VM over generated 2-12 letter words: 64 merges take ~2 s and
+#: ~0.1 GB of driver memory for 1e5 words, ~22 s and ~0.6 GB for 1e6;
+#: the collect adds ~0.5 s and ~2.5 s. The ceiling sits at 1e6.
+BPE_MAX_TRAIN_WORDS = 1_000_000
+
+
+def _bpe_collect(frame: DataFrame, cols: tuple[str, ...], who: str) -> list:
+    """ONE bounded Spark job: the ``cols`` of a vocabulary-shaped
+    frame as Python lists, fetched through Arrow. ``limit(ceiling +
+    1)`` caps what reaches the driver."""
+    tbl = frame.select(*cols).limit(BPE_MAX_TRAIN_WORDS + 1).toArrow()
+    if tbl.num_rows > BPE_MAX_TRAIN_WORDS:
+        raise ValueError(
+            f"{who}: vocabulary has more than BPE_MAX_TRAIN_WORDS="
+            f"{BPE_MAX_TRAIN_WORDS} distinct words — pass a frequency "
+            "floor, word_freq=bpe_word_freq(df).where(\"cnt >= k\"), "
+            "so the word table fits the driver"
         )
-        .groupBy("pair")
-        .agg(F.sum("cnt").alias("c"))
-    )
+    return [tbl.column(c).to_pylist() for c in cols]
 
 
-# SQL-string twin of _bpe_pair_counts, parameterised on the vocab temp
-# view. The trainer loops are driver-latency-bound at any corpus scale
-# (the per-round frames are vocab-sized by construction), and building
-# the round's plan through the DataFrame API costs ~15 py4j round
-# trips per round; one spark.sql() call over a temp view builds the
-# identical plan in 2 (measured 3-4x cheaper per round, r20). The
-# expression text matches _bpe_pair_counts node for node so the two
-# forms plan identically.
-_BPE_PAIR_COUNTS_SQL = """
-SELECT pair, SUM(cnt) AS c FROM (
-  SELECT cnt, explode(zip_with(
-      slice(__s, 1, greatest(size(__s) - 1, 0)),
-      slice(__s, 2, greatest(size(__s) - 1, 0)),
-      (a, b) -> concat(a, ' ', b))) AS pair
-  FROM (SELECT cnt, regexp_extract_all(seq, '<([^>]*)>', 1) AS __s
-        FROM {vocab_view})
-) GROUP BY pair
-"""
+class _BpePairIndex:
+    """Weighted adjacent-pair counts over a driver-side word table,
+    kept exact under merges. ``where`` maps a pair to the words that
+    hold (or once held) it, so a merge rewrites only those words; the
+    heap is lazy — an entry counts only while it matches ``counts`` —
+    and is keyed ``(-count, "left right")``, the SQL ``ORDER BY c DESC,
+    pair ASC`` tie-break compared as the same string."""
+
+    def __init__(self, frame: DataFrame, who: str):
+        seqs, cnts = _bpe_collect(frame, ("seq", "cnt"), who)
+        # duplicate seqs (a unioned caller table) sum, as the SQL
+        # pair aggregate did; non-positive and NULL counts carry no
+        # weight
+        table: dict[tuple[str, ...], int] = {}
+        for seq, cnt in zip(seqs, cnts):
+            if seq is not None and cnt is not None and cnt > 0:
+                syms = tuple(_BPE_SYM_RE.findall(seq))
+                table[syms] = table.get(syms, 0) + cnt
+        self.words = [list(syms) for syms in table]
+        self.cnts = list(table.values())
+        counts: dict[tuple[str, str], int] = _defaultdict(int)
+        where: dict[tuple[str, str], list[int]] = _defaultdict(list)
+        for i, (syms, c) in enumerate(zip(self.words, self.cnts)):
+            for p in zip(syms, syms[1:]):
+                counts[p] += c
+                where[p].append(i)
+        self.counts, self.where = counts, where
+        self.heap = [(-c, f"{a} {b}", a, b) for (a, b), c in self.counts.items()]
+        _heapq.heapify(self.heap)
+
+    def top(self, m: int) -> list[tuple[str, str, int]]:
+        """The ``m`` best pairs by (count DESC, pair ASC)."""
+        out: list[tuple[str, str, int]] = []
+        while self.heap and len(out) < m:
+            neg, _key, a, b = _heapq.heappop(self.heap)
+            if self.counts.get((a, b)) == -neg and (a, b, -neg) not in out:
+                out.append((a, b, -neg))
+        for a, b, c in out:  # still live until merged
+            _heapq.heappush(self.heap, (-c, f"{a} {b}", a, b))
+        return out
+
+    def merge(self, a: str, b: str) -> None:
+        """Rewrite every word greedily left to right, ``<a><b>`` ->
+        ``<ab>`` (SQL ``replace`` on the wrapped form), moving only the
+        pair counts around each rewritten occurrence."""
+        ab = a + b
+        counts, where = self.counts, self.where
+        touched: set[tuple[str, str]] = set()
+        for i in set(where.pop((a, b), ())):
+            word = self.words[i]
+            n = len(word)
+            occ: list[int] = []  # start of each merged occurrence
+            j = 0
+            while j < n - 1:
+                if word[j] == a and word[j + 1] == b:
+                    occ.append(j)
+                    j += 2
+                else:
+                    j += 1
+            if not occ:
+                continue  # the pair left this word in an earlier merge
+            c = self.cnts[i]
+            gone = [(a, b)] * len(occ)
+            for t, j in enumerate(occ):
+                # a (b, a) between back-to-back occurrences is removed
+                # once, as the earlier occurrence's right neighbour
+                if j and not (t and occ[t - 1] == j - 2):
+                    gone.append((word[j - 1], a))
+                if j + 2 < n:
+                    gone.append((b, word[j + 2]))
+            for j in reversed(occ):
+                word[j : j + 2] = [ab]
+            n = len(word)
+            made = [j - t for t, j in enumerate(occ)]
+            born = []
+            for t, k in enumerate(made):
+                if k and not (t and made[t - 1] == k - 1):
+                    born.append((word[k - 1], ab))
+                if k + 1 < n:
+                    born.append((ab, word[k + 1]))
+            for p in gone:
+                counts[p] -= c
+            for p in born:
+                counts[p] += c
+                where[p].append(i)
+            touched.update(gone)
+            touched.update(born)
+        for p in touched:
+            c = counts[p]
+            if c > 0:
+                _heapq.heappush(self.heap, (-c, f"{p[0]} {p[1]}", *p))
+            else:
+                del counts[p]
+                where.pop(p, None)
+
+    def learn(
+        self, n_merges: int, batch: int, probe: list | None = None
+    ) -> list[tuple[str, str, int]]:
+        """Rounds of: take the top ``batch`` pairs, apply them in
+        listed order. ``batch=1`` is sequential BPE."""
+        merges: list[tuple[str, str, int]] = []
+        while len(merges) < n_merges:
+            accepted = self.top(min(batch, n_merges - len(merges)))
+            if not accepted:
+                break  # every word is one symbol: remaining rounds no-op
+            merges.extend(accepted)
+            if probe is not None:
+                probe.append(len(accepted))
+            for left, right, _c in accepted:
+                self.merge(left, right)
+        return merges
 
 
-from contextlib import contextmanager
-
-import threading as _threading
-
-#: _aqe_off mutates SESSION-GLOBAL conf (save/restore). The reentrant
-#: lock serializes overlapping scopes from concurrent driver threads
-#: so a nested/overlapping pair cannot restore the wrong saved value.
-#: NOTE the remaining documented constraint (r19 ADVICE): an UNRELATED
-#: query planned on the same session while a scope is open still sees
-#: AQE off + the clamped partition count — results are invariant, but
-#: a corpus-scale concurrent query can regress. Callers that submit
-#: queries from a thread pool must either route trainer loops through
-#: their own session (``spark.newSession()`` shares the cluster but
-#: not the SQL conf) or accept the window. Bench and foreachBatch are
-#: single-threaded, so nothing in the gate surface hits this.
-_AQE_OFF_LOCK = _threading.RLock()
-
-
-@contextmanager
-def _aqe_off(spark, shuffle_partitions: int = 8):
-    """Tune the session for the trainer's per-round driver actions
-    (restored after). The per-round frames are vocab-sized BY
-    CONSTRUCTION at any corpus scale (distinct words, then distinct
-    pairs — a few MB however big the corpus), so (a) AQE's runtime
-    re-planning buys nothing, but it splits every round's single
-    collect into ~3 jobs (one per materialized query stage) — 35
-    collect jobs for a 12-merge train, 13 without (measured r19);
-    and (b) the session's scale-sized shuffle-partition count fans
-    each round's two tiny exchanges into 32-task waves of ~2 ms tasks
-    where task-launch overhead dominates — the same fixed-overhead
-    argument as ``streaming._bounded_state_partitions``, and the same
-    bounded clamp (8) is right at ANY corpus size because the frames
-    do not scale with the corpus. At gate scale the loop is
-    driver-latency-bound, so both are pure wall-clock. Results are
-    partition- and AQE-invariant; the corpus-sized ``bpe_word_freq``
-    pass runs OUTSIDE this scope."""
-    with _AQE_OFF_LOCK:
-        saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
+def _bpe_check_counts(n_merges: int, name: str, value: int) -> None:
+    if n_merges < 0:
+        raise ValueError(f"n_merges must be >= 0, got {n_merges}")
+    if value < 1:
+        raise ValueError(f"{name} must be >= 1, got {value}")
 
 
 def bpe_train(
@@ -1686,180 +1743,37 @@ def bpe_train(
     ``[(left_sym, right_sym, weighted_pair_count), ...]`` in learned
     order (the merges.txt a tokenizer ships).
 
-    Per round: symbol bigrams of every vocab word (explode over the
-    vocab table, weighted by word count, map-side combined to the
-    distinct-pair groupBy), the winning row(s) collected (count DESC,
-    pair ASC tie-break — a bounded driver scalar), then a SCAN-LOCAL
-    ``replace`` rewrites the vocabulary; the rewritten vocab is
-    LAZILY local-checkpointed, so the next round's single collect
-    action materializes it and lineage stays flat across rounds
-    without a separate per-round checkpoint job (one driver action
-    per round total — r19). The
-    corpus itself is read exactly once (``bpe_word_freq``). Stops
-    early if every word is a single symbol — identical to running the
-    remaining no-op rounds, so a fixed-round SQL replay matches.
+    The corpus is reduced once to the ``bpe_word_freq`` table, which
+    ONE bounded Spark job collects to the driver (at most
+    ``BPE_MAX_TRAIN_WORDS`` rows, else it fails loud and names the
+    ``word_freq=`` frequency-floor lever). All merges are then learned
+    in a single Python loop, the way HF ``tokenizers`` and
+    SentencePiece train from an in-memory word-count table: each round
+    takes the most frequent weighted adjacent pair (count DESC, then
+    ``"left right"`` ASC — the SQL tie-break the DuckDB oracle
+    replays), rewrites the words that hold it greedily left to right
+    (the ``replace`` semantics of ``bpe_segment_vocab``), and updates
+    only the pair counts of those words. Stops early once every word is
+    a single symbol — identical to running the remaining no-op rounds,
+    so a fixed-round SQL replay matches.
 
-    ``max_batch > 1`` (r10 judge directive 5a — the production-vocab
-    scale path: per-merge driver round-trips + checkpoints are the
-    honest ceiling of the sequential loop) accepts UP TO that many
-    merges from one counted table, provably identical to the
-    sequential trainer. Accepted pairs are a STRICT PREFIX of the
-    (count DESC, pair ASC) order satisfying, for every accepted pair
-    after the first:
+    ``max_batch`` (>= 1) is accepted for compatibility and has no
+    effect: the batched selection it used to enable (a symbol-disjoint
+    strict-count prefix of each round's ranking) was proven and
+    property-tested identical to this sequential loop, which on the
+    driver costs no more than one batch.
 
-    - symbol-disjoint from every earlier accepted pair (rewrites of
-      disjoint delimiter-wrapped pairs cannot create, destroy, or
-      re-rank each other's occurrences);
-    - count strictly greater than the first NON-accepted row's count
-      (pairs newly created by applying an earlier accepted merge
-      (a,b) are each bounded by the OLD count of some pair sharing a
-      symbol with (a,b) — which, by prefix-disjointness, ranks below
-      every accepted row — so the strict bound keeps them from
-      beating or TYING a later accepted pair);
-
-    and the batch is cut AFTER any accepted pair that is a self-pair
-    (left == right: its rewrite spawns pairs bounded only by its own
-    count) or whose concatenation already exists as an adjacent
-    symbol (the rewrite would INFLATE existing pairs carrying that
-    symbol, breaking the counts-never-increase premise). With
-    ``max_batch=1`` the loop is exactly the classic sequential
-    trainer. Parity is property-tested against the pure-Python model
-    on tie-heavy corpora.
-
-    ``word_freq``: a precomputed ``bpe_word_freq`` frame to train
-    over instead of re-deriving it — callers that ALSO need the
-    vocabulary downstream (``bpe_token_ids`` in the corpus→windows
-    capstone) share ONE corpus word reduce across train and encode;
-    pass it cached/checkpointed, since round 1 reads it twice."""
-    vocab = (
-        word_freq
-        if word_freq is not None
-        else bpe_word_freq(
-            df, text_col=text_col, token_re=token_re
-        ).localCheckpoint(eager=True)
+    ``word_freq``: a precomputed ``bpe_word_freq`` frame (``seq`` and
+    ``cnt`` are read) to train over instead of re-deriving it —
+    callers that ALSO need the vocabulary downstream (``bpe_token_ids``
+    in the corpus->windows capstone) share ONE corpus word reduce
+    across train and encode. Without it the word reduce and the collect
+    are one action, with no checkpoint job."""
+    _bpe_check_counts(n_merges, "max_batch", max_batch)
+    vocab = word_freq if word_freq is not None else bpe_word_freq(
+        df, text_col=text_col, token_re=token_re
     )
-    import uuid as _uuid
-
-    spark = df.sparkSession
-    # Per-call uuid'd temp-view names: the SQL-string round (see
-    # _BPE_PAIR_COUNTS_SQL) needs a view, and unique names keep two
-    # concurrent trainers on one session from clobbering each other.
-    _tag = _uuid.uuid4().hex[:8]
-    vview, pview = f"__bpe_vocab_{_tag}", f"__bpe_pairs_{_tag}"
-    merges: list[tuple[str, str, int]] = []
-    try:
-        merges = _bpe_train_loop(
-            spark, vocab, n_merges, max_batch, vview, pview
-        )
-    finally:
-        for _v in (vview, pview):
-            try:
-                spark.catalog.dropTempView(_v)
-            except Exception:
-                pass
-    return merges
-
-
-def _bpe_train_loop(
-    spark, vocab, n_merges: int, max_batch: int, vview: str, pview: str
-) -> list[tuple[str, str, int]]:
-    """The exact trainer's round loop (see ``bpe_train`` for the
-    algorithm contract). Split out so the temp views are dropped on
-    any exit path."""
-    pairs_sql = _BPE_PAIR_COUNTS_SQL.format(vocab_view=vview)
-    merges: list[tuple[str, str, int]] = []
-    while len(merges) < n_merges:
-        vocab.createOrReplaceTempView(vview)
-        m = min(max_batch, n_merges - len(merges))
-        # ONE driver action per round (r19 optimization, guide §1.2:
-        # the loop is driver-latency-bound at gate scale — 3 actions/
-        # round was the measured cost, not the aggregates themselves):
-        # the top-(m+1) rows and, for m > 1, the adjacent-symbol set
-        # for the concat-collision cut ride one union over the
-        # persisted pairs frame (both branches vocab-shaped). Branch
-        # rows are tagged; the top rows' (count DESC, pair ASC) rank
-        # is re-derived driver-side with the same tie-break, so the
-        # accepted list is unchanged row-for-row. The round's plan is
-        # built as ONE spark.sql() over temp views instead of a
-        # DataFrame chain — identical plan, ~15 py4j round trips fewer
-        # per round (r20; the loop is driver-latency-bound).
-        if m > 1:
-            pairs = spark.sql(pairs_sql).persist()
-            pairs.createOrReplaceTempView(pview)
-            union_sql = f"""
-                SELECT * FROM (SELECT pair, c, 0 AS k FROM {pview}
-                               ORDER BY c DESC, pair ASC LIMIT {m + 1})
-                UNION ALL
-                SELECT DISTINCT pair, CAST(NULL AS BIGINT) AS c, 1 AS k
-                FROM (SELECT explode(split(pair, ' ', 2)) AS pair
-                      FROM {pview})
-            """
-            try:
-                with _aqe_off(spark):
-                    collected = spark.sql(union_sql).collect()
-            finally:
-                # exception-safe: a failed collect must not leak the
-                # per-round cache for the session (r19 ADVICE)
-                pairs.unpersist()
-        else:
-            with _aqe_off(spark):
-                collected = spark.sql(
-                    f"SELECT pair, c, 0 AS k FROM ({pairs_sql}) "
-                    f"ORDER BY c DESC, pair ASC LIMIT {m + 1}"
-                ).collect()
-        top = sorted(
-            (r for r in collected if r["k"] == 0),
-            key=lambda r: (-r["c"], r["pair"]),
-        )
-        sym_set = {r["pair"] for r in collected if r["k"] == 1}
-        if not top:
-            break  # all words fully merged: remaining rounds are no-ops
-        rows = [
-            (*r["pair"].split(" ", 1), int(r["c"])) for r in top
-        ]
-        accepted = [rows[0]]
-        used = {rows[0][0], rows[0][1]}
-        cut_count: int | None = None
-        closed = (
-            rows[0][0] == rows[0][1]
-            or rows[0][0] + rows[0][1] in sym_set
-        )
-        for left, right, c in rows[1:m]:
-            if closed:
-                cut_count = c
-                break
-            if left in used or right in used:
-                cut_count = c
-                break
-            accepted.append((left, right, c))
-            used.update((left, right))
-            if left == right or left + right in sym_set:
-                closed = True
-        if cut_count is None:
-            cut_count = rows[m][2] if len(rows) > m else -1
-        accepted = accepted[:1] + [
-            a for a in accepted[1:] if a[2] > cut_count
-        ]
-        merges.extend(accepted)
-        if len(merges) >= n_merges:
-            # the returned value is the merge list alone — the final
-            # round's vocabulary rewrite (and its checkpoint job) would
-            # be computed and thrown away (r19 optimization)
-            break
-        seq_expr = "seq"
-        for left, right, _c in accepted:
-            seq_expr = (
-                f"replace({seq_expr}, '<{left}><{right}>', "
-                f"'<{left}{right}>')"
-            )
-        # lazy checkpoint: the NEXT round's (single) collect action
-        # materializes the rewritten vocab and truncates lineage in
-        # the same job — the per-round eager-checkpoint job was pure
-        # driver-latency overhead (r19 optimization, guide §1.2)
-        vocab = vocab.withColumn(
-            "seq", F.expr(seq_expr)
-        ).localCheckpoint(eager=False)
-    return merges
+    return _BpePairIndex(vocab, "bpe_train").learn(n_merges, 1)
 
 
 def bpe_train_approx(
@@ -1872,106 +1786,41 @@ def bpe_train_approx(
     token_re: str = ASCII_TOKEN_RE,
     _probe: list | None = None,
 ) -> list[tuple[str, str, int]]:
-    """APPROXIMATE batched BPE training — the production-vocab scale
-    path the exact trainer deliberately is not. ``bpe_train``'s
-    symbol-disjoint prefix batching is provably identical to the
-    sequential trainer, but that exactness bounds it: chained merges
-    (a+b, then ab+c) can never share a batch, so real corpora
-    saturate near one merge per driver round (~850-900 rounds per 1k
-    merges, measured r11) and a 30k-merge production vocab would be
-    ~30k driver round-trips — the loop is driver-latency-bound, not
-    data-bound. This trainer accepts the TOP ``batch`` pairs of each
-    round's counted table unconditionally, in (count DESC, pair ASC)
-    rank order, so rounds == ceil(n_merges / batch): a 30k-merge
-    vocab at batch=512 is ~59 corpus-independent vocab-sized rounds.
+    """APPROXIMATE batched BPE training: each round accepts the TOP
+    ``batch`` pairs of that round's counts unconditionally, in
+    (count DESC, pair ASC) rank order, then applies them to the words
+    in listed order, so rounds == ceil(n_merges / batch). It runs on
+    the driver like ``bpe_train`` — one bounded collect of the word
+    table (same ``BPE_MAX_TRAIN_WORDS`` ceiling and ``word_freq=``
+    lever), then one Python loop.
 
     The approximation, stated precisely: within one batch, ranks 2..k
     are chosen from counts that predate the batch's earlier merges —
-    a pair whose count would have changed (the chained-merge case the
-    exact trainer refuses to batch) may be accepted with a stale
-    count, accepted in a different order than sequential BPE, or
-    spend a merge slot on occurrences an earlier rewrite consumed
-    (GPT-2-family trainers accept the same class of drift when they
-    prune-and-batch). What is NOT approximate: the learned list
-    replays deterministically — merges apply in listed order here (one
-    chained scan-local ``replace`` per round, exactly how
-    ``bpe_segment_vocab``/``bpe_token_ids`` replay them at encode
-    time), so any merges list this returns IS a valid shippable
-    tokenizer, and ``batch=1`` degenerates to the exact sequential
-    trainer (property-tested). Rank 1 of every round is always the
-    exact greedy choice.
+    a pair whose count would have changed (the chained-merge case,
+    a+b then ab+c) may be accepted with a stale count, accepted in a
+    different order than sequential BPE, or spend a merge slot on
+    occurrences an earlier rewrite consumed (GPT-2-family trainers
+    accept the same class of drift when they prune-and-batch). What is
+    NOT approximate: the learned list replays deterministically —
+    merges apply in listed order here, exactly how
+    ``bpe_segment_vocab``/``bpe_token_ids`` replay them at encode time,
+    so any merges list this returns IS a valid shippable tokenizer, and
+    ``batch=1`` degenerates to the exact sequential trainer
+    (property-tested). Rank 1 of every round is always the exact
+    greedy choice.
 
     Not oracle-registered: DuckDB replay of the exact trainer exists
     (``tokenizer_bpe_train``); this variant's value is the round-count
     envelope, pinned by tests via ``_probe`` (appends each round's
-    accepted count), not by a value hash. ``word_freq``/checkpoint
-    semantics as in ``bpe_train``."""
-    if batch < 1:
-        raise ValueError(f"batch must be >= 1, got {batch}")
-    vocab = (
-        word_freq
-        if word_freq is not None
-        else bpe_word_freq(
-            df, text_col=text_col, token_re=token_re
-        ).localCheckpoint(eager=True)
+    accepted count), not by a value hash. ``word_freq`` as in
+    ``bpe_train``."""
+    _bpe_check_counts(n_merges, "batch", batch)
+    vocab = word_freq if word_freq is not None else bpe_word_freq(
+        df, text_col=text_col, token_re=token_re
     )
-    import uuid as _uuid
-
-    spark = df.sparkSession
-    vview = f"__bpe_vocab_{_uuid.uuid4().hex[:8]}"
-    pairs_sql = _BPE_PAIR_COUNTS_SQL.format(vocab_view=vview)
-    merges: list[tuple[str, str, int]] = []
-    try:
-        while len(merges) < n_merges:
-            m = min(batch, n_merges - len(merges))
-            vocab.createOrReplaceTempView(vview)
-            # one spark.sql() instead of a DataFrame chain — identical
-            # plan, fewer py4j round trips per driver-latency-bound
-            # round (r20, as in bpe_train)
-            with _aqe_off(spark):
-                top = spark.sql(
-                    f"SELECT pair, c FROM ({pairs_sql}) "
-                    f"ORDER BY c DESC, pair ASC LIMIT {m}"
-                ).collect()
-            if not top:
-                break  # every word is one symbol: remaining rounds no-op
-            accepted = [
-                (*r["pair"].split(" ", 1), int(r["c"])) for r in top
-            ]
-            merges.extend(accepted)
-            if _probe is not None:
-                _probe.append(len(accepted))
-            if len(merges) >= n_merges:
-                # the final round's rewrite (and its checkpoint job)
-                # would be thrown away — the return value is the merge
-                # list alone (r19 optimization, as in ``bpe_train``)
-                break
-            # large batches chunk the replace chain like
-            # bpe_segment_vocab (a >=~1000-deep nest overflows Catalyst
-            # codegen's recursion; batch=512 is within one order of
-            # magnitude of the cliff)
-            for i in range(0, len(accepted), _BPE_REPLACE_CHUNK):
-                if i:
-                    vocab = vocab.localCheckpoint(eager=False)
-                seq_expr = "seq"
-                for left, right, _c in accepted[
-                    i : i + _BPE_REPLACE_CHUNK
-                ]:
-                    seq_expr = (
-                        f"replace({seq_expr}, '<{left}><{right}>', "
-                        f"'<{left}{right}>')"
-                    )
-                vocab = vocab.withColumn("seq", F.expr(seq_expr))
-            # lazy: the next round's collect materializes it (r19 — the
-            # per-round eager checkpoint job was driver-latency
-            # overhead)
-            vocab = vocab.localCheckpoint(eager=False)
-    finally:
-        try:
-            spark.catalog.dropTempView(vview)
-        except Exception:
-            pass
-    return merges
+    return _BpePairIndex(vocab, "bpe_train_approx").learn(
+        n_merges, batch, _probe
+    )
 
 
 def bpe_save_merges(spark, merges: list[tuple[str, str, int]], path: str) -> None:
@@ -2023,28 +1872,27 @@ def bpe_symbols(
     list of the segmented vocabulary (token id = 1-based index, the
     same lexicographic assignment ``bpe_token_ids`` uses on both its
     literal and broadcast paths). Vocab-bounded driver state
-    (≤ alphabet + n_merges entries — the bounded-collect control
-    point), so a plain list: persist it next to merges.txt with
-    ``bpe_save_vocab`` and any later session decodes ids without
-    retraining. Pass the same ``word_freq`` the encode call uses so
-    the corpus word reduce isn't paid twice; pass ``vseg`` (a
-    checkpointed ``bpe_segment_vocab`` frame) to also share the
-    merge-replay projection with a sibling encode/truncate call
-    (r15 self-review: train -> symbols -> encode otherwise replays
-    the merge chain twice)."""
+    (≤ alphabet + n_merges entries), so a plain list: persist it next
+    to merges.txt with ``bpe_save_vocab`` and any later session
+    decodes ids without retraining. The segmented word table's
+    ``seq`` column reaches the driver in ONE bounded Spark job (the
+    trainers' ``BPE_MAX_TRAIN_WORDS`` ceiling and ``word_freq=``
+    frequency-floor lever); the distinct set and the sort are plain
+    Python. Pass the same ``word_freq`` the encode call uses so the
+    corpus word reduce isn't paid twice; pass ``vseg`` (a checkpointed
+    ``bpe_segment_vocab`` frame) to also share the merge-replay
+    projection with a sibling encode/truncate call (r15 self-review:
+    train -> symbols -> encode otherwise replays the merge chain
+    twice)."""
     if vseg is None:
         vseg = bpe_segment_vocab(
             df, merges, text_col=text_col, word_freq=word_freq,
             token_re=token_re,
         )
-    syms = F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)")
-    with _aqe_off(df.sparkSession):  # vocab-sized collect (see there)
-        return sorted(
-            r["sym"]
-            for r in vseg.select(F.explode(syms).alias("sym"))
-            .distinct()
-            .collect()
-        )
+    (seqs,) = _bpe_collect(vseg, ("seq",), "bpe_symbols")
+    return sorted(
+        {s for seq in seqs if seq is not None for s in _BPE_SYM_RE.findall(seq)}
+    )
 
 
 def bpe_symbols_topk(
@@ -2065,25 +1913,25 @@ def bpe_symbols_topk(
     vocab.json — and the honest source of OOV: encoding under the
     truncated list makes every dropped symbol hit the ``oov_id``
     policy (or fail loud), exactly the UNK budget a pipeline tunes.
-    All work is vocab-sized (one explode + sum over the segmented
-    vocabulary, one bounded driver collect of ``keep`` rows); the
-    ranking is integer-exact and SQL-replayable. ``word_freq`` /
+    The segmented word table reaches the driver in one bounded
+    collect, as in ``bpe_symbols``; the counting and the ranking are
+    plain Python, integer-exact and SQL-replayable. ``word_freq`` /
     ``vseg`` share frames with sibling calls as in ``bpe_symbols``."""
+    if keep < 0:
+        raise ValueError(f"keep must be >= 0, got {keep}")
     if vseg is None:
         vseg = bpe_segment_vocab(
             df, merges, text_col=text_col, word_freq=word_freq,
             token_re=token_re,
         )
-    syms = F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)")
-    freq = (
-        vseg.select(F.col("cnt"), F.explode(syms).alias("sym"))
-        .groupBy("sym")
-        .agg(F.sum("cnt").cast("long").alias("freq"))
-        .orderBy(F.col("freq").desc(), F.col("sym").asc())
-        .limit(keep)
-    )
-    with _aqe_off(df.sparkSession):  # vocab-sized collect (see there)
-        return sorted(r["sym"] for r in freq.collect())
+    seqs, cnts = _bpe_collect(vseg, ("seq", "cnt"), "bpe_symbols_topk")
+    freq: dict[str, int] = {}
+    for seq, cnt in zip(seqs, cnts):
+        if seq is not None and cnt is not None:
+            for s in _BPE_SYM_RE.findall(seq):
+                freq[s] = freq.get(s, 0) + cnt
+    ranked = sorted(freq, key=lambda s: (-freq[s], s))
+    return sorted(ranked[:keep])
 
 
 def bpe_save_vocab(spark, symbols: list[str], path: str) -> None:
@@ -2106,8 +1954,6 @@ def bpe_load_vocab(spark, path: str) -> list[str]:
     HERE with a clear message instead of surfacing later as a
     confusing SQL parse error or a semantically shifted map literal
     (r13 ADVICE)."""
-    import re as _re
-
     from mriya_spark.fsutil import fs_read_text
 
     bad = _re.compile(r"[\s<>]")

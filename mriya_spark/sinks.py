@@ -21,6 +21,9 @@ side effect. That keeps the data plane lazy and oracle-checkable.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -306,11 +309,18 @@ def write_training_shards(
     (measured 1.7e6x on the pack capstone, r20) and a false-positive
     salt costs two exchanges per write; such callers size explicitly.
     Positions are bit-identical either way (property-tested), so the
-    knob only ever changes plan shape, never the export."""
+    knob only ever changes plan shape, never the export. Any other
+    value than ``"auto"`` or an int in 0..8 raises ``ValueError``."""
     import json
 
     from mriya_spark.ops.layout import resolve_auto_salt_chars, shard_shuffle
 
+    if salt_chars != "auto" and (
+        type(salt_chars) is not int or not 0 <= salt_chars <= 8
+    ):
+        raise ValueError(
+            f'salt_chars must be "auto" or an int in 0..8, got {salt_chars!r}'
+        )
     if salt_chars == "auto":
         salt_chars = resolve_auto_salt_chars(df, num_shards)
     sharded = shard_shuffle(
@@ -572,6 +582,41 @@ def _shard_stats(df: DataFrame, key_col: str) -> dict:
     return {int(r["shard"]): (int(r["n"]), int(r["x"])) for r in rows}
 
 
+_AQE_OFF_LOCK = threading.RLock()
+
+
+@contextmanager
+def _aqe_off(spark, shuffle_partitions: int = 8):
+    """Run the enclosed actions with AQE off and the shuffle-partition
+    count clamped to ``shuffle_partitions``, restoring both after.
+    Its one caller is ``_shard_row_stats``, whose reduce side is
+    ``num_shards`` rows however big the export: AQE's runtime
+    re-planning buys nothing there but splits the single collect into
+    one job per query stage, and a scale-sized partition count fans the
+    tiny reduce into waves of ~2 ms tasks where launch overhead
+    dominates. Results are partition- and AQE-invariant.
+
+    The conf is SESSION-GLOBAL. The reentrant lock serializes
+    overlapping scopes from concurrent driver threads, so a nested or
+    overlapping pair cannot restore the wrong saved value; an
+    unrelated query planned on the same session while a scope is open
+    still sees the clamp (results unchanged, a corpus-scale query may
+    run slower). Callers that submit from a thread pool either use
+    their own ``spark.newSession()`` or accept that window."""
+    with _AQE_OFF_LOCK:
+        saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(shuffle_partitions)
+        )
+        try:
+            yield
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
+            spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
+
+
 def _shard_row_stats(
     df: DataFrame, cols: list, *, null_flags: bool = True
 ) -> dict:
@@ -595,13 +640,8 @@ def _shard_row_stats(
         rh = F.xxhash64(*parts)
     else:
         rh = F.xxhash64(*[F.col(c) for c in cols])
-    from mriya_spark.ops.text import _aqe_off
-
-    # the reduce side is num_shards rows however big the export (the
-    # aggregates partial-combine map-side), so the trainer-loop clamp
-    # applies: AQE's per-query-stage job splits and the scale-sized
-    # reduce partition count are pure launch overhead here (r19); the
-    # map side's partitioning comes from the input scan either way
+    # the aggregates partial-combine map-side, whose partitioning comes
+    # from the input scan; only the num_shards-row reduce is clamped
     with _aqe_off(df.sparkSession):
         rows = (
             df.withColumn("__rh", rh)

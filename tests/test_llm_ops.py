@@ -1766,6 +1766,110 @@ def test_bpe_train_approx_tracks_exact_selection(spark):
     assert overlap >= 0.7, (sorted(exact), sorted(approx))
 
 
+def test_bpe_train_validates_counts(spark):
+    """``max_batch=-1`` used to turn the round query into ``LIMIT 0``
+    and silently return ``[]``; every count argument is now checked
+    at entry and the error names it."""
+    from mriya_spark.ops.text import bpe_train, bpe_train_approx
+
+    df = spark.createDataFrame([(0, "low lower")], "doc_id long, text string")
+    for kwargs, name in (
+        ({"max_batch": -1}, "max_batch"),
+        ({"max_batch": 0}, "max_batch"),
+        ({"n_merges": -1}, "n_merges"),
+    ):
+        with pytest.raises(ValueError, match=name):
+            bpe_train(df, **kwargs)
+    with pytest.raises(ValueError, match="batch"):
+        bpe_train_approx(df, batch=0)
+    with pytest.raises(ValueError, match="n_merges"):
+        bpe_train_approx(df, n_merges=-1)
+    assert bpe_train(df, n_merges=0) == []
+    # max_batch is accepted and has no effect
+    assert bpe_train(df, n_merges=3, max_batch=5) == bpe_train(df, n_merges=3)
+
+
+def _spark_jobs(spark, fn):
+    """(result, number of Spark jobs ``fn`` issued), counted through a
+    job group and the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(prop, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bpe_driver_trainers_issue_one_job(spark):
+    """Given a materialized ``word_freq``, each trainer and the symbol
+    list is ONE Spark job (the bounded collect) however many merges
+    it learns; the merge loop itself runs on the driver. The word
+    table is spread over several partitions so the collect's limit
+    has to gather them."""
+    from mriya_spark.ops.text import (
+        bpe_symbols,
+        bpe_train,
+        bpe_train_approx,
+        bpe_word_freq,
+    )
+
+    texts = [
+        "low lower lowest slower slowest",
+        "new newer newest wide wider widest",
+        "deep deeper deepest steep steeper",
+    ]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    wf = bpe_word_freq(df).repartition(3).localCheckpoint(eager=True)
+    merges, n = _spark_jobs(
+        spark, lambda: bpe_train(df, n_merges=12, word_freq=wf)
+    )
+    assert len(merges) == 12 and n == 1, (merges, n)
+    approx, n = _spark_jobs(
+        spark,
+        lambda: bpe_train_approx(df, n_merges=12, batch=5, word_freq=wf),
+    )
+    assert len(approx) == 12 and n == 1, (approx, n)
+    symbols, n = _spark_jobs(
+        spark, lambda: bpe_symbols(df, merges, word_freq=wf)
+    )
+    assert symbols and n == 1, (symbols, n)
+
+
+def test_bpe_word_ceiling_fails_loud(spark, monkeypatch):
+    """Past ``BPE_MAX_TRAIN_WORDS`` distinct words the driver collect
+    refuses, and the message names the frequency-floor lever; taking
+    that lever brings the same corpus back under the ceiling."""
+    import mriya_spark.ops.text as text
+
+    texts = ["low low low lower", "new new newer wide"]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    wf = text.bpe_word_freq(df).localCheckpoint(eager=True)  # 5 words
+    merges = text.bpe_train(df, n_merges=2, word_freq=wf)
+    monkeypatch.setattr(text, "BPE_MAX_TRAIN_WORDS", 3)
+    for call in (
+        lambda: text.bpe_train(df, n_merges=2, word_freq=wf),
+        lambda: text.bpe_train_approx(df, n_merges=2, word_freq=wf),
+        lambda: text.bpe_symbols(df, merges, word_freq=wf),
+    ):
+        with pytest.raises(ValueError, match="BPE_MAX_TRAIN_WORDS=3") as e:
+            call()
+        assert 'word_freq=bpe_word_freq(df).where("cnt >= k")' in str(e.value)
+    floored = wf.where("cnt >= 2")  # low, new
+    assert text.bpe_train(df, n_merges=2, word_freq=floored) == [
+        ("l", "o", 3),
+        ("lo", "w", 3),
+    ]
+
+
 def test_qsketch_grouped_oracle_is_null_safe(spark):
     """r10 advice (medium): the DuckDB oracle must keep NULL-segment
     rows exactly like the Spark side's eqNullSafe join does — both in

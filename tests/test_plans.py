@@ -869,10 +869,12 @@ def test_registry_outputs_are_primitive_only(spark, queries):
     # SERIAL: streams/sinks (conf clamps via _bounded_state_partitions,
     # checkpoint machinery), the on-disk IVF/BM25 index caches (two
     # concurrent builders of one content-keyed index could race), and
-    # the e2e pipelines that compose them. _aqe_off is lock-serialized
-    # and the catalog's nanosAsLong set is idempotent, so the threaded
-    # trainer gates are safe. Session conf is snapshotted and checked
-    # after, so a leaked clamp would fail HERE, not flake downstream.
+    # the e2e pipelines that compose them. The BPE trainers change no
+    # session conf (they learn merges on the driver), the shard sinks'
+    # _aqe_off is lock-serialized, and the catalog's nanosAsLong set is
+    # idempotent, so the threaded gates are safe. Session conf is
+    # snapshotted and checked after, so a leaked clamp would fail HERE,
+    # not flake downstream.
     from concurrent.futures import ThreadPoolExecutor
 
     conf_before = {
@@ -1181,6 +1183,20 @@ def test_auto_salt_switches_at_both_regimes(spark):
     auto_like.collect()
     plan = executed_plan(auto_like)
     assert "__salt" not in plan, plan
+
+
+def test_auto_salt_treats_missing_stats_as_unknown(spark):
+    """An RDD-backed frame has no statistics: Catalyst reports
+    ``sizeInBytes = Long.MaxValue``, which the resolver used to read as
+    ~1e17 rows and answer with the maximum salt (8). It is "estimate
+    unavailable", so the answer is 0."""
+    from mriya_spark.ops.layout import resolve_auto_salt_chars
+
+    rdd = spark.sparkContext.parallelize([(i,) for i in range(10)])
+    df = spark.createDataFrame(rdd, "doc_id long")
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    assert size == 2**63 - 1, size
+    assert resolve_auto_salt_chars(df, 16) == 0
 
 
 def test_salted_shard_shuffle_no_whole_shard_sort(spark):

@@ -213,6 +213,28 @@ def test_training_shards_manifest_verifier(spark, tmp_path):
         sinks.read_training_shards(spark, path)
 
 
+def test_training_shards_salt_chars_validated_at_entry(spark, tmp_path):
+    """``salt_chars`` is exactly "auto" or an int in 0..8; a near miss
+    (wrong case, a numeric string, out of range, a bool) fails before
+    anything is written instead of reaching the shuffle."""
+    import os
+
+    import pytest
+
+    from mriya_spark import sinks
+
+    df = spark.range(0, 20).selectExpr("id AS doc_id")
+    for bad in ("Auto", "4", 9, True):
+        path = str(tmp_path / f"bad_{bad}")
+        with pytest.raises(ValueError, match="salt_chars"):
+            sinks.write_training_shards(df, path, num_shards=2, salt_chars=bad)
+        assert not os.path.exists(path)
+    manifest = sinks.write_training_shards(
+        df, str(tmp_path / "ok"), num_shards=2, salt_chars=0
+    )
+    assert manifest["total_rows"] == 20
+
+
 def test_shard_shuffle_epoch_keying(spark):
     """shard_shuffle(epoch=N): each epoch's (shard, pos) assignment is
     deterministic and individually replayable; different epochs give
