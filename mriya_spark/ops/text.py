@@ -14,6 +14,7 @@ speed with no shuffle at all (group-bys excepted).
 
 from __future__ import annotations
 
+import bisect as _bisect
 import heapq as _heapq
 import re as _re
 from collections import defaultdict as _defaultdict
@@ -1512,9 +1513,10 @@ def classifier_train(
 #: symbol because BPE runs over the classifier tokenizer's lowercase
 #: ALNUM words, so 'a b' adjacency is the unambiguous substring
 #: '<a><b>' and replace() rewrites every non-overlapping occurrence
-#: left to right (both engines share that scan semantics; consecutive
-#: merged pairs don't share delimiter characters, unlike the naive
-#: space-separated form where ' a b a b ' only matches once)
+#: left to right (``_merge_rank_segment`` scans symbol lists the same
+#: way; consecutive merged pairs don't share delimiter characters,
+#: unlike the naive space-separated form where ' a b a b ' only
+#: matches once)
 def _bpe_wrap(word: Column) -> Column:
     return F.concat(
         F.lit("<"),
@@ -1585,9 +1587,10 @@ _BPE_SYM_RE = _re.compile(r"<([^>]*)>")
 
 #: fail-loud ceiling on the vocabulary table the BPE trainers and the
 #: symbol lists collect to the driver (the ``FFD_MAX_GROUP_ROWS``
-#: pattern). The table holds distinct words, not corpus rows, so it is
-#: small at gate scale; at 100 TB it can reach ~1e8 rows, where the
-#: explicit trade is a frequency floor:
+#: pattern); encode collects no word table, so it has no ceiling.
+#: The table holds distinct words, not corpus rows, so it is small at
+#: gate scale; at 100 TB it can reach ~1e8 rows, where the explicit
+#: trade is a frequency floor:
 #: ``word_freq=bpe_word_freq(df).where("cnt >= k")``. Measured on a
 #: 4-vCPU VM over generated 2-12 letter words: 64 merges take ~2 s and
 #: ~0.1 GB of driver memory for 1e5 words, ~22 s and ~0.6 GB for 1e6;
@@ -1870,20 +1873,19 @@ def bpe_symbols(
 ) -> list[str]:
     """The tokenizer's vocab.json half: the SORTED distinct symbol
     list of the segmented vocabulary (token id = 1-based index, the
-    same lexicographic assignment ``bpe_token_ids`` uses on both its
-    literal and broadcast paths). Vocab-bounded driver state
-    (≤ alphabet + n_merges entries), so a plain list: persist it next
-    to merges.txt with ``bpe_save_vocab`` and any later session
-    decodes ids without retraining. The segmented word table's
-    ``seq`` column reaches the driver in ONE bounded Spark job (the
-    trainers' ``BPE_MAX_TRAIN_WORDS`` ceiling and ``word_freq=``
-    frequency-floor lever); the distinct set and the sort are plain
-    Python. Pass the same ``word_freq`` the encode call uses so the
-    corpus word reduce isn't paid twice; pass ``vseg`` (a checkpointed
-    ``bpe_segment_vocab`` frame) to also share the merge-replay
-    projection with a sibling encode/truncate call (r15 self-review:
-    train -> symbols -> encode otherwise replays the merge chain
-    twice)."""
+    same lexicographic assignment ``bpe_token_ids`` uses without
+    ``symbols=``). Vocab-bounded driver state (≤ alphabet + n_merges
+    entries), so a plain list: persist it next to merges.txt with
+    ``bpe_save_vocab`` and any later session decodes ids without
+    retraining. The segmented word table's ``seq`` column reaches the
+    driver in ONE bounded Spark job (the trainers'
+    ``BPE_MAX_TRAIN_WORDS`` ceiling and ``word_freq=`` frequency-floor
+    lever — a floored list pairs with an ``oov_id=`` encode); the
+    distinct set and the sort are plain Python. Pass the same
+    ``word_freq`` the encode call uses so the corpus word reduce isn't
+    paid twice; pass ``vseg`` (a checkpointed ``bpe_segment_vocab``
+    frame) to also share the segmentation with a sibling
+    encode/truncate call."""
     if vseg is None:
         vseg = bpe_segment_vocab(
             df, merges, text_col=text_col, word_freq=word_freq,
@@ -1973,9 +1975,9 @@ def bpe_load_vocab(spark, path: str) -> list[str]:
             )
         if line in seen:
             # a duplicated line would fail inconsistently downstream:
-            # the map-literal encode/decode path errors on duplicate
-            # map keys while the broadcast-join path silently fans out
-            # (two ids per symbol / duplicated decode tokens)
+            # encode rejects a repeated symbol, the map-literal decode
+            # path errors on duplicate map keys and the broadcast-join
+            # decode path silently duplicates tokens
             raise ValueError(
                 f"bpe_load_vocab: line {lineno} of {path!r} duplicates "
                 f"symbol {line!r} (first seen on line {seen[line]}) — "
@@ -1985,6 +1987,17 @@ def bpe_load_vocab(spark, path: str) -> list[str]:
         seen[line] = lineno
         symbols.append(line)
     return symbols
+
+
+#: Above this symbol count ``bpe_decode`` stops inlining the id->symbol
+#: mapping as one SQL-parsed map literal, whose driver-side build cost
+#: is superlinear (MEASURED r12, map literal parse+fold: 0.4s at 4096
+#: entries, 2s at 16384, 62s at 65536 — string-valued maps fold far
+#: worse than the classifier's int array, hence a lower gate than
+#: ``CLF_INLINE_MAX_BUCKETS``) and re-shipped per stage; past it the
+#: mapping ships as a broadcast TABLE instead. Decode only: encode
+#: maps symbols to ids inside one UDF at every size.
+BPE_INLINE_MAX_SYMS = 4096
 
 
 def _sql_str(s: str) -> str:
@@ -2013,8 +2026,8 @@ def bpe_decode(
     with '' — exactly the invariant a lossless-roundtrip gate checks
     against raw text without replaying training.
 
-    Same size gate as the encode side: at/below ``max_inline_syms``
-    (default ``BPE_INLINE_MAX_SYMS``) the id->symbol map rides the
+    Size gate: at/below ``max_inline_syms`` (default
+    ``BPE_INLINE_MAX_SYMS``) the id->symbol map rides the
     plan as ONE SQL-parsed map literal and decode is scan-local; past
     it the mapping ships as a broadcast table into a
     posexplode -> join -> per-row regroup (ids are vocab-bounded —
@@ -2074,82 +2087,58 @@ def bpe_decode(
     )
 
 
-#: Max StringReplace expressions nested in one projection before the
-#: chain is cut with a plan-truncating checkpoint: Catalyst's codegen
-#: recurses once per nesting level and a ~1000-deep chain overflows
-#: the JVM stack (measured r15 — the 1k-merge fidelity probe crashed
-#: in defineCodeGen). 128 keeps ~8x headroom per stage; every
-#: oracle-registered gate (12 merges) stays single-chunk, plan
-#: byte-identical to the pre-r15 form. Above this count the default
-#: ``engine="auto"`` abandons the chain entirely for the merge-rank
-#: segmenter (see ``_merge_rank_segment``) — per-word cost independent
-#: of merge count, the way a production tokenizer actually applies a
-#: 30k-merge vocab.
-_BPE_REPLACE_CHUNK = 128
+def _merge_ranks(merges) -> dict[tuple[str, str], list[int]]:
+    """pair -> every rank (list position) it holds in ``merges``,
+    ascending — a pair listed twice is applied twice by the in-order
+    replay, so it keeps both ranks."""
+    ranks: dict[tuple[str, str], list[int]] = {}
+    for i, (left, right, _cnt) in enumerate(merges):
+        ranks.setdefault((left, right), []).append(i)
+    return ranks
 
 
-def _merge_rank_premise_ok(merges) -> bool:
-    """Validate the premise the rank engine's chain-equivalence proof
-    rests on (r15 ADVICE): every pair's components must be BASE symbols
-    (single codepoints) or products of EARLIER merges. Any trained list
-    (exact or approximate) satisfies it by construction — each round
-    counts pairs over the previous round's segmentation, so accepted
-    components always predate their pair — but an arbitrary or
-    hand-edited merges.txt loaded via ``bpe_load_merges`` can violate
-    it (e.g. ``[(ab, c), (a, b)]``: the chain replays ``<ab><c>``
-    before ``ab`` exists — a no-op — while the lowest-rank-first loop
-    merges ``a+b`` THEN ``ab+c``, silently diverging). O(n_merges)
-    driver-side; duplicates are fine (first rank wins in both
-    engines)."""
-    produced: set[str] = set()
-    for left, right, _cnt in merges:
-        if (len(left) > 1 and left not in produced) or (
-            len(right) > 1 and right not in produced
-        ):
-            return False
-        produced.add(left + right)
-    return True
+def _merge_rank_segment(word, ranks: dict) -> list[str]:
+    """Segment ONE word under a merge list the way a shipped tokenizer
+    does (HF ``tokenizers`` / GPT-2 merge-rank apply from an in-memory
+    rank table): start from the symbols of ``word`` (a string is one
+    symbol per codepoint), then repeatedly take the adjacent pair whose
+    next rank is the lowest one ABOVE the last rank applied and merge
+    all its non-overlapping occurrences, leftmost first; stop when no
+    adjacent pair holds such a rank. ``ranks`` is ``_merge_ranks``.
 
-
-def _merge_rank_segment(word: str, ranks: dict) -> str:
-    """Segment ONE pretokenized word under a learned merge list the
-    way a shipped tokenizer does (GPT-2/SentencePiece merge-rank
-    apply): start from codepoints, repeatedly merge the adjacent pair
-    with the LOWEST rank (all non-overlapping occurrences, leftmost
-    first) until no adjacent pair is in the table. Provably identical
-    to replaying the merges in listed order with global string
-    replaces (the ``bpe_segment_vocab`` chain / DuckDB-oracle form):
-    merging a pair can only create adjacencies involving its PRODUCT
-    symbol, and any learned pair containing that product has a later
-    rank — so the lowest applicable rank at every step is exactly the
-    next in-order merge that applies, and one pass per pair is
-    complete (a replace can never create a new occurrence of its own
-    pattern). Equality with the chain is pinned by a Hypothesis
-    property test, not argued. Cost: O(passes × word_len) with
-    word_len-bounded passes — independent of merge-list size, which is
-    the whole point at 30k merges."""
+    This is exactly the in-order replay with global string replaces
+    that the DuckDB oracles run, for ANY merge list — hand-edited,
+    out of order, with duplicates or ``left == right``: every rank
+    between the last applied and the chosen one belongs to a pair
+    absent from the word, which the replay passes as a no-op, and a
+    merge never creates a new occurrence of its own pair. Equality
+    with the replay is property-tested
+    (``test_merge_rank_equals_replace_chain``). Cost per applied merge
+    is one pass over the word, independent of the merge-list size."""
     syms = list(word)
+    last = -1
     while len(syms) > 1:
         best = None
-        best_rank = None
-        for i in range(len(syms) - 1):
-            r = ranks.get((syms[i], syms[i + 1]))
-            if r is not None and (best_rank is None or r < best_rank):
-                best_rank = r
-                best = (syms[i], syms[i + 1])
+        for pair in zip(syms, syms[1:]):
+            rs = ranks.get(pair)
+            if rs is not None:
+                k = _bisect.bisect_right(rs, last)
+                if k < len(rs) and (best is None or rs[k] < best[0]):
+                    best = (rs[k], pair)
         if best is None:
             break
-        out = []
-        i = 0
-        while i < len(syms):
-            if i + 1 < len(syms) and (syms[i], syms[i + 1]) == best:
-                out.append(syms[i] + syms[i + 1])
+        last, (a, b) = best
+        out: list[str] = []
+        i, n = 0, len(syms)
+        while i < n:
+            if i + 1 < n and syms[i] == a and syms[i + 1] == b:
+                out.append(a + b)
                 i += 2
             else:
                 out.append(syms[i])
                 i += 1
         syms = out
-    return "".join(f"<{s}>" for s in syms)
+    return syms
 
 
 def bpe_segment_vocab(
@@ -2159,93 +2148,38 @@ def bpe_segment_vocab(
     text_col: str = "text",
     word_freq: DataFrame | None = None,
     token_re: str = ASCII_TOKEN_RE,
-    engine: str = "auto",
 ) -> DataFrame:
     """Apply a learned merge list to the corpus vocabulary: the
     (word, cnt, seq, n_syms) table under the learned vocab. This IS
     the tokenizer's applied form: joining corpus words against it
     segments the corpus (the train->serve pair of ``bpe_train``).
     ``word_freq`` shares a precomputed vocabulary frame (see
-    ``bpe_train``).
+    ``bpe_train``); its ``seq`` is re-segmented.
 
-    Two result-identical engines (equality Hypothesis-pinned in
-    ``test_merge_rank_equals_replace_chain``):
-
-    - ``"chain"``: replay every merge in order as chained scan-local
-      string replaces — the exact form the DuckDB gate oracles replay,
-      zero Python. r15 (found by the >=1k-merge fidelity probe, not
-      review): one projection nesting ``len(merges)`` StringReplace
-      expressions overflows Catalyst codegen's recursion below ~1000
-      levels, so the chain is cut every ``_BPE_REPLACE_CHUNK`` merges
-      with a lazy plan-truncating checkpoint; at or below one chunk —
-      every oracle-registered gate (12 merges) — the plan is
-      byte-identical to the pre-r15 form. Peak storage is
-      ``ceil(n/128)`` vocab-sized cached frames while the result is
-      alive (lineage-pinned, ContextCleaner-freed after) and per-row
-      cost grows WITH the merge count — fine to a few hundred merges,
-      the wrong algorithm at 30k.
-    - ``"rank"``: the production form — broadcast the merge-rank table
-      in the UDF closure and segment each vocab word with the
-      GPT-2-style lowest-rank-first merge loop
-      (``_merge_rank_segment``), one Arrow-batched pass over the
-      vocab-sized frame, per-word cost INDEPENDENT of merge count.
-
-    ``"auto"`` (default) picks chain at or below ``_BPE_REPLACE_CHUNK``
-    merges (gate plans unchanged) and rank above it. The rank engine is
-    gated on ``_merge_rank_premise_ok`` (r15 ADVICE): a hand-edited
-    merges.txt that references a later merge's product falls back to
-    the chain under ``auto`` and fails loud under explicit ``rank``."""
-    if engine not in ("auto", "chain", "rank"):
-        raise ValueError(f"engine must be auto/chain/rank, got {engine!r}")
+    One engine: an Arrow-batched pandas UDF runs
+    ``_merge_rank_segment`` over the vocab-sized frame on the
+    executors, the rank table in its closure. Per-word cost is
+    independent of the merge count, the result equals the in-order
+    replace chain the DuckDB oracles replay for any merge list
+    (``test_merge_rank_equals_replace_chain``), and nothing reaches
+    the driver, so the table has no size ceiling. Lazy: checkpoint
+    the result before sharing it (``vseg=``) between calls."""
     vocab = (
         word_freq
         if word_freq is not None
         else bpe_word_freq(df, text_col=text_col, token_re=token_re)
     )
-    want_rank = engine == "rank" or (
-        engine == "auto" and len(merges) > _BPE_REPLACE_CHUNK
-    )
-    if want_rank and not _merge_rank_premise_ok(merges):
-        # r15 ADVICE: the rank engine is only provably chain-identical
-        # for BPE-reachable lists; an arbitrary merges.txt can violate
-        # the later-rank premise and silently change results at the
-        # auto threshold. auto falls back to the (always-correct,
-        # slower) chunked chain; an EXPLICIT rank request fails loud.
-        if engine == "rank":
-            raise ValueError(
-                "bpe_segment_vocab(engine='rank'): merge list violates "
-                "the rank-equivalence premise (a pair's component is "
-                "neither a base symbol nor an earlier merge's product) "
-                "— results would diverge from the in-order replay; use "
-                "engine='chain' for this list"
-            )
-        want_rank = False
-    if want_rank:
-        ranks: dict = {}
-        for i, (left, right, _cnt) in enumerate(merges):
-            ranks.setdefault((left, right), i)
+    ranks = _merge_ranks(merges)
 
-        def _seg(words):  # pd.Series -> pd.Series (Arrow-batched)
-            return words.map(lambda w: _merge_rank_segment(w, ranks))
+    def _seg(q):
+        if not isinstance(q, str):
+            return None
+        syms = _merge_rank_segment(_BPE_SYM_RE.findall(q), ranks)
+        return "".join(f"<{s}>" for s in syms)
 
-        vocab = vocab.withColumn(
-            "seq", F.pandas_udf(_seg, "string")("word")
-        )
-    else:
-        for start in range(0, len(merges), _BPE_REPLACE_CHUNK):
-            if start:
-                vocab = vocab.localCheckpoint(eager=False)
-            for left, right, _cnt in merges[
-                start : start + _BPE_REPLACE_CHUNK
-            ]:
-                vocab = vocab.withColumn(
-                    "seq",
-                    F.expr(
-                        f"replace(seq, '<{left}><{right}>', "
-                        f"'<{left}{right}>')"
-                    ),
-                )
     return vocab.withColumn(
+        "seq", F.pandas_udf(lambda seqs: seqs.map(_seg), "string")("seq")
+    ).withColumn(
         "n_syms",
         F.size(
             F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)")
@@ -2253,17 +2187,113 @@ def bpe_segment_vocab(
     )
 
 
-#: Above this symbol count (alphabet + merges) the symbol->id mapping
-#: stops being "one SQL-parsed map literal" and becomes a plan
-#: constant with superlinear driver-side build cost (MEASURED r12, map
-#: literal parse+fold: 0.4s at 4096 entries, 2s at 16384, 62s at
-#: 65536 — string-keyed maps fold far worse than the classifier's int
-#: array, hence a lower gate than ``CLF_INLINE_MAX_BUCKETS``), plus a
-#: per-stage re-ship of the folded constant. Past it, symbol ids ship
-#: as a broadcast TABLE and the word->ids map is rebuilt by
-#: explode -> broadcast join -> per-word regroup — 2 extra vocab-sized
-#: shuffles, the right trade at production vocab size (30k merges).
-BPE_INLINE_MAX_SYMS = 4096
+def _bpe_word_ids(
+    df: DataFrame,
+    merges: list[tuple[str, str, int]],
+    *,
+    text_col: str,
+    word_freq: DataFrame | None,
+    token_re: str,
+    symbols: list[str] | None,
+    oov_id: int | None,
+    vseg: DataFrame | None,
+) -> DataFrame:
+    """The ``(word, word_ids, oov)`` table every encode broadcast-joins,
+    built on the executors by a pandas UDF over the segmented
+    vocabulary (``vseg``, or ``bpe_segment_vocab`` of ``word_freq``)
+    that maps each word's symbols through the symbol->id dict in its
+    closure. ``oov`` holds a word's first symbol missing from
+    ``symbols`` when no ``oov_id`` is given (its ``word_ids`` is then
+    NULL); the encode raises on it lazily, only if a document contains
+    that word. Corpus-derived ids need the sorted distinct symbols
+    first — one collect of ≤ alphabet + n_merges rows."""
+    if oov_id is not None and symbols is None:
+        # argument-contract error: raise before any Spark job
+        raise ValueError(
+            "oov_id is only meaningful with a fixed symbols= vocab: "
+            "corpus-derived ids cover every symbol by construction"
+        )
+    if vseg is None:
+        vseg = bpe_segment_vocab(
+            df, merges, text_col=text_col, word_freq=word_freq,
+            token_re=token_re,
+        )
+        if symbols is None:
+            # read twice (symbol set, then ids): segment only once
+            vseg = vseg.localCheckpoint(eager=True)
+    if symbols is None:
+        symbols = sorted(
+            r[0]
+            for r in vseg.select(
+                F.explode(F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)"))
+            )
+            .distinct()
+            .collect()
+        )
+    sym_id = {s: i for i, s in enumerate(symbols, 1)}
+    if len(sym_id) != len(symbols):
+        raise ValueError("bpe_token_ids: symbols= repeats a symbol")
+
+    def _ids(seqs):  # pd.Series -> pd.DataFrame (Arrow-batched)
+        import pandas as _pd
+
+        word_ids, oov = [], []
+        for q in seqs:
+            syms = _BPE_SYM_RE.findall(q) if isinstance(q, str) else None
+            ids = miss = None
+            if syms is not None:
+                ids = [sym_id.get(s, oov_id) for s in syms]
+                if oov_id is None and None in ids:
+                    miss, ids = syms[ids.index(None)], None
+            word_ids.append(ids)
+            oov.append(miss)
+        return _pd.DataFrame({"word_ids": word_ids, "oov": oov})
+
+    r = F.pandas_udf(_ids, "word_ids array<bigint>, oov string")("seq")
+    return vseg.select("word", r.alias("r")).select("word", "r.*")
+
+
+def _bpe_encode(
+    df: DataFrame, wid: DataFrame, *, id_col: str, text_col: str,
+    token_re: str,
+) -> DataFrame:
+    """Per-doc ``(id, token_ids, n_bpe_tokens)`` from a
+    ``_bpe_word_ids`` table: tokenize with positions, broadcast-join
+    the word table, regroup each doc by word position."""
+    toks = _pretokenize_expr(text_col, token_re)
+    dwords = (
+        df.select(F.col(id_col), F.posexplode(toks).alias("wpos", "word"))
+        .join(F.broadcast(wid), "word", "left")
+        .withColumn(
+            "word_ids",
+            F.expr(
+                "CASE WHEN oov IS NOT NULL THEN cast(raise_error(concat("
+                "'bpe_token_ids: out-of-vocabulary symbol <', oov, "
+                "'> (pass oov_id= for an UNK policy)')) as array<bigint>) "
+                "WHEN word_ids IS NULL THEN cast(raise_error(concat("
+                "'bpe_token_ids: word <', word, '> is not covered by "
+                "the vseg=/word_freq= word table passed in — build it "
+                "over a corpus whose vocabulary covers the encode corpus, "
+                "with no frequency floor')) as array<bigint>) "
+                "ELSE word_ids END"
+            ),
+        )
+    )
+    dtok = dwords.groupBy(id_col).agg(
+        F.expr(
+            "flatten(transform("
+            "array_sort(collect_list(struct(wpos, word_ids))),"
+            " x -> x.word_ids))"
+        ).alias("token_ids")
+    )
+    empty = F.expr("cast(array() as array<bigint>)")
+    return df.select(id_col).join(dtok, id_col, "left").select(
+        id_col,
+        F.coalesce("token_ids", empty).alias("token_ids"),
+        F.size(F.coalesce("token_ids", empty)).cast("long").alias(
+            "n_bpe_tokens"
+        ),
+    )
 
 
 def bpe_token_ids(
@@ -2273,7 +2303,6 @@ def bpe_token_ids(
     id_col: str = "doc_id",
     text_col: str = "text",
     word_freq: DataFrame | None = None,
-    max_inline_syms: int | None = None,
     token_re: str = ASCII_TOKEN_RE,
     symbols: list[str] | None = None,
     oov_id: int | None = None,
@@ -2303,209 +2332,27 @@ def bpe_token_ids(
     but corpus-dependent — fine when encode corpus == train corpus,
     which is what every corpus-derived gate row does).
 
-    Scale shape: everything except one corpus pass is vocab-sized or
-    smaller. The symbol-id table is ≤ alphabet + n_merges entries —
-    a bounded driver collect (the IVF-centroid control-point
-    pattern), shipped back as ONE SQL-parsed map literal so each
-    vocab word's id sequence is a scan-local ``transform`` (no
-    explode/regroup of the vocabulary and no global symbol sort in
-    the plan: lexicographic ids are assigned driver-side; Python,
-    Spark, and DuckDB all order these [a-z0-9]+ symbols identically
-    — binary/codepoint). The word -> ids table broadcasts; the
-    corpus is tokenized once with positions (``posexplode``) and
-    re-assembled per doc by sorting (word position) structs — each
-    doc's sequence is built inside its own group, no global order
-    anywhere. Docs with no words keep an empty sequence (LEFT join +
-    coalesce). Total exchanges: the vocab reduce, one per-doc group,
-    and whatever the caller does next — the r11 first cut paid two
-    more (symbol-rank window + vocab regroup), removed by the map
-    literal. ``word_freq`` shares a precomputed vocabulary frame with
-    training (see ``bpe_train``) — without it, a train-then-encode
-    caller pays the corpus word reduce twice.
-
-    SIZE GATE (same class as ``CLF_INLINE_MAX_BUCKETS``): the
-    symbol-id map literal is alphabet+n_merges entries — right at the
-    12-merge gate size, and fine to a few thousand. Past
-    ``max_inline_syms`` (default ``BPE_INLINE_MAX_SYMS``, measured —
-    see its comment) the call auto-routes symbol-id assignment onto
-    the cluster: ids by ``row_number`` over the sorted distinct
-    symbols (tiny table, one global sort; Spark's UTF8-binary string
-    order matches Python ``sorted`` and DuckDB for these [a-z0-9]+
-    symbols), shipped as a broadcast table into an
-    explode -> join -> per-word regroup rebuild of the word->ids map
-    — the r11-removed form, which becomes the correct trade again at
-    production vocab size where a map literal would put a multi-MB
-    constant in every task binary (and cost 60+s of driver-side plan
-    build). Result-identical to the literal path; pinned in tests.
-    The gate is STATIC where the symbol count is statically bounded:
-    ``len(symbols)`` exactly when the vocab is given; alphabet(36) +
-    len(merges) under the ASCII pretokenizer. Under a non-ASCII
-    ``token_re`` with no ``symbols`` the alphabet is unbounded (CJK
-    corpora: tens of thousands of distinct codepoints — the r13
-    ADVICE hole), so the bound is MEASURED instead: one distinct
-    count over the checkpointed vocab-sized ``vseg`` — a tiny extra
-    job, and the literal path can no longer be picked by a wrong
-    static guess and embed a multi-MB plan constant."""
-    if oov_id is not None and symbols is None:
-        # argument-contract error: raise BEFORE the corpus-sized
-        # checkpoint below — at scale that eager job is hours of
-        # cluster work wasted on a mistake detectable up front
-        raise ValueError(
-            "oov_id is only meaningful with a fixed symbols= vocab: "
-            "corpus-derived ids cover every symbol by construction"
-        )
-    limit = BPE_INLINE_MAX_SYMS if max_inline_syms is None else max_inline_syms
-    caller_vseg = vseg is not None
-    syms_arr = F.expr("regexp_extract_all(seq, '<([^>]*)>', 1)")
-    if vseg is not None:
-        # caller shares an already-checkpointed bpe_segment_vocab frame
-        # (r15 self-review: train -> symbols -> encode pipelines were
-        # replaying the merge chain twice) — just project it, no second
-        # materialization
-        vseg = vseg.select("word", syms_arr.alias("s"))
-    else:
-        # checkpoint the (vocab-sized) segmented vocabulary: the symbol
-        # collect (or distinct) below and the main DAG both read it —
-        # without this the corpus-sized word reduction would run twice
-        vseg = (
-            bpe_segment_vocab(
-                df,
-                merges,
-                text_col=text_col,
-                word_freq=word_freq,
-                token_re=token_re,
-            )
-            .select("word", syms_arr.alias("s"))
-            .localCheckpoint(eager=True)
-        )
-    if symbols is not None:
-        n_sym_bound = len(symbols)
-    elif token_re == ASCII_TOKEN_RE:
-        n_sym_bound = 36 + len(merges)
-    else:
-        n_sym_bound = (
-            vseg.select(F.explode("s").alias("sym")).distinct().count()
-        )
-    if n_sym_bound > limit:
-        spark = df.sparkSession
-        if symbols is not None:
-            sym_tbl = spark.createDataFrame(
-                [(i + 1, s) for i, s in enumerate(symbols)],
-                "sym_id long, sym string",
-            )
-            exploded = vseg.select(
-                "word", F.posexplode("s").alias("spos", "sym")
-            ).join(F.broadcast(sym_tbl), "sym", "left")
-            if oov_id is not None:
-                sid = F.coalesce(
-                    F.col("sym_id"), F.lit(oov_id).cast("long")
-                )
-            else:
-                sid = F.when(
-                    F.col("sym_id").isNull(),
-                    F.expr(
-                        "cast(raise_error(concat('bpe_token_ids: "
-                        "out-of-vocabulary symbol <', sym, '> (pass "
-                        "oov_id= for an UNK policy)')) as bigint)"
-                    ),
-                ).otherwise(F.col("sym_id"))
-            exploded = exploded.withColumn("sym_id", sid)
-        else:
-            from pyspark.sql import Window
-
-            sym_tbl = (
-                vseg.select(F.explode("s").alias("sym"))
-                .distinct()
-                .select(
-                    "sym",
-                    F.row_number()
-                    .over(Window.orderBy("sym"))
-                    .cast("long")
-                    .alias("sym_id"),
-                )
-            )
-            exploded = vseg.select(
-                "word", F.posexplode("s").alias("spos", "sym")
-            ).join(F.broadcast(sym_tbl), "sym")
-        wid = exploded.groupBy("word").agg(
-            F.expr(
-                "transform(array_sort(collect_list("
-                "struct(spos, sym_id))), x -> x.sym_id)"
-            ).alias("word_ids")
-        )
-    else:
-        if symbols is not None:
-            syms = symbols
-        else:
-            syms = sorted(
-                r["sym"]
-                for r in vseg.select(F.explode("s").alias("sym"))
-                .distinct()
-                .collect()
-            )
-        sym_map = "map(" + ",".join(
-            f"'{_sql_str(s)}',{i + 1}L" for i, s in enumerate(syms)
-        ) + ")"
-        if symbols is not None:
-            if oov_id is not None:
-                miss = f"{oov_id}L"
-            else:
-                miss = (
-                    "cast(raise_error(concat('bpe_token_ids: "
-                    "out-of-vocabulary symbol <', x, '> (pass oov_id= "
-                    "for an UNK policy)')) as bigint)"
-                )
-            lam = f"x -> coalesce(element_at({sym_map}, x), {miss})"
-        else:
-            lam = f"x -> element_at({sym_map}, x)"
-        wid = vseg.select(
-            "word",
-            F.expr(f"transform(s, {lam})").alias("word_ids"),
-        )
-    toks = _pretokenize_expr(text_col, token_re)
-    dwords = df.select(
-        F.col(id_col), F.posexplode(toks).alias("wpos", "word")
+    Scale shape: one path at every vocabulary size, with no driver
+    ceiling. The word -> ids table is built on the executors by one
+    pandas UDF over the word table — ``vseg`` (a checkpointed
+    ``bpe_segment_vocab`` frame) split, or else ``word_freq`` (by
+    default this corpus's own word reduce) segmented — with the
+    symbol->id dict in its closure; only corpus-derived ids first
+    collect the ≤ alphabet + n_merges distinct symbols. The table is
+    broadcast-joined to the corpus, tokenized once with positions
+    (``posexplode``); each doc's sequence is re-assembled inside its
+    own group by sorting (word position) structs, so there is no
+    global order anywhere. Docs with no words keep an empty sequence
+    (LEFT join + coalesce). A corpus word the table does not cover (a
+    ``vseg`` or ``word_freq`` built over a different corpus, or
+    floored by frequency) fails loud when encoded instead of silently
+    shortening the sequence."""
+    wid = _bpe_word_ids(
+        df, merges, text_col=text_col, word_freq=word_freq,
+        token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
     )
-    if caller_vseg:
-        # r15 ADVICE (medium): a caller-supplied segmentation may not
-        # cover this corpus's words — an inner join would silently DROP
-        # every uncovered word from the token stream (the oov policy
-        # only handles unmapped SYMBOLS, not missing WORDS). Left-join
-        # and fail loud the moment an uncovered word is encoded; a
-        # vseg built internally (or by sft_encode_masks over the union
-        # of its columns) covers by construction, so the guard never
-        # fires there and the inner-join fast path below keeps every
-        # pre-r15 gate plan unchanged.
-        dwords = dwords.join(F.broadcast(wid), "word", "left").withColumn(
-            "word_ids",
-            F.expr(
-                "if(word_ids is null, cast(raise_error(concat("
-                "'bpe_token_ids: word <', word, '> is not covered by "
-                "the supplied vseg= segmentation — build vseg (or "
-                "word_freq) over a corpus whose vocabulary covers the "
-                "encode corpus')) as array<bigint>), word_ids)"
-            ),
-        )
-    else:
-        dwords = dwords.join(F.broadcast(wid), "word")
-    dtok = (
-        dwords
-        .groupBy(id_col)
-        .agg(
-            F.expr(
-                "flatten(transform("
-                "array_sort(collect_list(struct(wpos, word_ids))),"
-                " x -> x.word_ids))"
-            ).alias("token_ids")
-        )
-    )
-    empty = F.expr("cast(array() as array<bigint>)")
-    return df.select(id_col).join(dtok, id_col, "left").select(
-        id_col,
-        F.coalesce("token_ids", empty).alias("token_ids"),
-        F.size(F.coalesce("token_ids", empty)).cast("long").alias(
-            "n_bpe_tokens"
-        ),
+    return _bpe_encode(
+        df, wid, id_col=id_col, text_col=text_col, token_re=token_re
     )
 
 
@@ -2540,44 +2387,40 @@ def sft_encode_masks(
     word vocabulary COVERS both columns (e.g. the full text the pair
     was split from, or the union of both columns) — the word->ids map
     is a lookup, so a superset vocabulary is exactly right and the
-    merge replay is paid once for both encodes. When NEITHER is given
-    (r15 ADVICE, high): one shared segmentation is built here over the
-    UNION of the two columns and passed to both encode calls — before
+    word->ids table is built once for both encodes. When NEITHER is
+    given (r15 ADVICE, high): one shared table is built here over the
+    UNION of the two columns and joined by both encode passes — before
     r16 each call derived its own corpus-dependent symbol-id table
     from its own column's symbol set, so without ``symbols=`` the same
     symbol could get DIFFERENT ids in the two halves of one
-    concatenated sequence (silently incoherent training data). The
-    union build also pays the merge replay once instead of twice.
-    Plan: two posexplode->broadcast-join->regroup encode passes (one
-    per column — each column is its own corpus-sized input) sharing
-    one vocab-sized segmentation, one id-side join, scan-local mask
+    concatenated sequence (silently incoherent training data).
+    Plan: one pandas UDF builds the word->ids table on the executors
+    (see ``bpe_token_ids``); two posexplode->broadcast-join->
+    regroup encode passes (one per column — each column is its own
+    corpus-sized input) share it; one id-side join, scan-local mask
     construction. Reference contract: HF/TRL
     `DataCollatorForCompletionOnlyLM` semantics (prompt tokens
     excluded from the loss)."""
-    if vseg is None:
-        if word_freq is None:
-            union = df.select(
-                F.col(prompt_col).alias("__sft_text")
-            ).unionAll(df.select(F.col(completion_col).alias("__sft_text")))
-            word_freq = bpe_word_freq(
-                union, text_col="__sft_text", token_re=token_re
-            )
-        vseg = bpe_segment_vocab(
-            df, merges, word_freq=word_freq, token_re=token_re
-        ).localCheckpoint(eager=True)
-    p = bpe_token_ids(
-        df, merges, id_col=id_col, text_col=prompt_col,
-        word_freq=word_freq, token_re=token_re, symbols=symbols,
-        oov_id=oov_id, vseg=vseg,
+    if vseg is None and word_freq is None:
+        union = df.select(
+            F.col(prompt_col).alias("__sft_text")
+        ).unionAll(df.select(F.col(completion_col).alias("__sft_text")))
+        word_freq = bpe_word_freq(
+            union, text_col="__sft_text", token_re=token_re
+        )
+    wid = _bpe_word_ids(
+        df, merges, text_col=prompt_col, word_freq=word_freq,
+        token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
+    )
+    p = _bpe_encode(
+        df, wid, id_col=id_col, text_col=prompt_col, token_re=token_re
     ).select(
         id_col,
         F.col("token_ids").alias("__p_ids"),
         F.col("n_bpe_tokens").alias("__np"),
     )
-    c = bpe_token_ids(
-        df, merges, id_col=id_col, text_col=completion_col,
-        word_freq=word_freq, token_re=token_re, symbols=symbols,
-        oov_id=oov_id, vseg=vseg,
+    c = _bpe_encode(
+        df, wid, id_col=id_col, text_col=completion_col, token_re=token_re
     ).select(
         id_col,
         F.col("token_ids").alias("__c_ids"),
@@ -2625,33 +2468,31 @@ def dpo_encode_pairs(
     Vocabulary coherence follows ``sft_encode_masks``' r16 contract:
     pass ``word_freq``/``vseg`` built over a corpus covering ALL THREE
     columns; when neither is given, one shared segmentation is built
-    here over their union and reused by all three encode passes (the
-    merge replay is paid once, and the same symbol can never get
-    different ids across the pair). ``symbols``/``oov_id`` follow
-    ``bpe_token_ids``' id-authority contract. Plan: three
+    here over their union and reused by all three encode passes (one
+    word->ids table, so the same symbol can never get different ids
+    across the pair). ``symbols``/``oov_id``
+    follow ``bpe_token_ids``' id-authority contract. Plan: three
     posexplode->broadcast-join->regroup encode passes (each column is
-    its own corpus-sized input) sharing one vocab-sized segmentation,
+    its own corpus-sized input) sharing one word->ids table,
     two doc-keyed joins, scan-local mask construction — the masked-SFT
     capstone's measured shape (SCALE.md r16) plus one encode pass."""
-    if vseg is None:
-        if word_freq is None:
-            union = (
-                df.select(F.col(prompt_col).alias("__dpo_text"))
-                .unionAll(df.select(F.col(chosen_col).alias("__dpo_text")))
-                .unionAll(df.select(F.col(rejected_col).alias("__dpo_text")))
-            )
-            word_freq = bpe_word_freq(
-                union, text_col="__dpo_text", token_re=token_re
-            )
-        vseg = bpe_segment_vocab(
-            df, merges, word_freq=word_freq, token_re=token_re
-        ).localCheckpoint(eager=True)
+    if vseg is None and word_freq is None:
+        union = (
+            df.select(F.col(prompt_col).alias("__dpo_text"))
+            .unionAll(df.select(F.col(chosen_col).alias("__dpo_text")))
+            .unionAll(df.select(F.col(rejected_col).alias("__dpo_text")))
+        )
+        word_freq = bpe_word_freq(
+            union, text_col="__dpo_text", token_re=token_re
+        )
+    wid = _bpe_word_ids(
+        df, merges, text_col=prompt_col, word_freq=word_freq,
+        token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
+    )
 
     def _enc(col: str, tag: str) -> DataFrame:
-        return bpe_token_ids(
-            df, merges, id_col=id_col, text_col=col,
-            word_freq=word_freq, token_re=token_re, symbols=symbols,
-            oov_id=oov_id, vseg=vseg,
+        return _bpe_encode(
+            df, wid, id_col=id_col, text_col=col, token_re=token_re
         ).select(
             id_col,
             F.col("token_ids").alias(f"__{tag}_ids"),
@@ -2722,9 +2563,9 @@ def chat_encode_multiturn(
     cannot afford even that can checkpoint ``df`` upstream.
     Vocabulary coherence follows the
     r16 contract: pass ``word_freq``/``vseg`` covering the RENDERED
-    text (markers included); when neither is given, one shared
-    segmentation is built here over the segment texts (which include
-    the markers) and reused. Docs whose ``turns`` array is empty or
+    text (markers included); when neither is given, the word->ids
+    table is built over the segment texts (which include the
+    markers). Docs whose ``turns`` array is empty or
     NULL are dropped (a conversation with no turns is not a training
     example); empty-text turns still render their marker token."""
     t = df.select(
@@ -2759,15 +2600,6 @@ def chat_encode_multiturn(
             ),
         )
     )
-    if vseg is None:
-        if word_freq is None:
-            word_freq = bpe_word_freq(
-                segs, text_col="__stxt", token_re=token_re
-            )
-        vseg = bpe_segment_vocab(
-            segs, merges, text_col="__stxt", word_freq=word_freq,
-            token_re=token_re,
-        ).localCheckpoint(eager=True)
     enc = bpe_token_ids(
         segs, merges, id_col="__seg", text_col="__stxt",
         word_freq=word_freq, token_re=token_re, symbols=symbols,

@@ -1997,10 +1997,11 @@ def tokenizer_bpe_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tools/check_oracle_types.py`` now enforces. Plan: ONE corpus
     word reduce shared by training and encode (the checkpointed
     ``word_freq`` — train-then-encode would otherwise pay the
-    corpus-sized pass twice), training's vocab-sized rounds, then one
-    corpus tokenize with positions, two broadcast joins (symbol table
-    ≤ alphabet+merges rows; word->ids table vocab-sized), one per-doc
-    group, one shard window — no global sort, no row-wise Python."""
+    corpus-sized pass twice), the driver-side trainer, one vocab-sized
+    segmentation pass and symbol collect, then one corpus tokenize
+    with positions, one broadcast join of the word->ids table, one
+    per-doc group, one shard window — no global sort, no Python over
+    corpus rows."""
     from mriya_spark.ops.text import (
         bpe_token_ids,
         bpe_train,
@@ -2026,21 +2027,11 @@ def tokenizer_bpe_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("tokenizer_bpe_pack_bcast", _bpe_pack_oracle_sql())
 def tokenizer_bpe_pack_bcast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pack capstone through ``bpe_token_ids``' BROADCAST
-    symbol-id path (r11 judge directive 5): ``max_inline_syms=0``
-    forces the past-``BPE_INLINE_MAX_SYMS`` route — symbol ids
-    assigned on-cluster (row_number over the sorted distinct symbols)
-    and shipped as a broadcast table into an explode -> join ->
-    per-word regroup rebuild of the word->ids map, instead of the
-    SQL-parsed map literal. Checked against the SAME oracle as
-    ``tokenizer_bpe_pack``, so the two paths' result-identity is
-    hash-pinned by the official gate itself (the
-    ``text_classifier_score_bigvocab`` posture). Forcing rather than
-    training past the 4096-symbol gate is deliberate and honest:
-    symbols come from BPE TRAINING, whose vocab-sized rounds (not the
-    plan constant) bound gate-affordable merge counts — a genuinely
-    over-threshold run is a production-scale job, and the whole point
-    of this row is that its PLAN, not its size, differs."""
+    """The pack capstone under a second gate name, checked against the
+    SAME oracle as ``tokenizer_bpe_pack``. Encode has one path at every
+    vocabulary size; this row's plan test pins that the word->ids table
+    arrives as a BroadcastExchange, never as a map literal
+    (``test_bpe_pack_bcast_ships_symbols_broadcast_not_inlined``)."""
     from mriya_spark.ops.text import (
         bpe_token_ids,
         bpe_train,
@@ -2051,7 +2042,7 @@ def tokenizer_bpe_pack_bcast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _cat(spark, sf_dir).table("documents").select("doc_id", "text")
     wf = bpe_word_freq(docs).localCheckpoint(eager=True)
     merges = bpe_train(docs, n_merges=_BPE_MERGES, max_batch=6, word_freq=wf)
-    ids = bpe_token_ids(docs, merges, word_freq=wf, max_inline_syms=0)
+    ids = bpe_token_ids(docs, merges, word_freq=wf)
     packed = pack_windows(
         ids,
         context_tokens=256,

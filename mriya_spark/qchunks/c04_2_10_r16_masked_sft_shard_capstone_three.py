@@ -38,7 +38,7 @@ from mriya_spark.qchunks.c03_r6_additions_training_data_pipeline_ops_ import (  
 
 # ---------------------------------------------------------------------------
 # §2.10 r16: masked SFT shard capstone, three-pass fuzzy blocking,
-# string-id FFD sharding, production-merge-count rank-engine encode
+# string-id FFD sharding, production-merge-count merge-rank encode
 # ---------------------------------------------------------------------------
 
 
@@ -557,12 +557,9 @@ def _rank_gate_merge_list() -> list[tuple[str, str, int]]:
     customer's 9-digit id words give this list real work: which
     2- and 3-digit symbols actually fire varies per word, so the
     truncated-vocab encode produces genuinely diverse sequences and
-    UNK positions. Every component is a base char or an earlier
-    product, so the list satisfies the rank engine's
-    chain-equivalence premise by construction (asserted in tests) —
-    and at 1100 entries both the merge-rank segmenter and the
-    oracle's CHUNKED chain replay run far beyond the 128-merge auto
-    threshold and the pre-r15 codegen cliff."""
+    UNK positions. At 1100 entries the oracle's chain replay must be
+    CHUNKED, and a single-projection Spark replace chain would be far
+    past the pre-r15 codegen cliff."""
     digits = "0123456789"
     out = [(a, b, 1) for a in digits for b in digits]
     out += [
@@ -664,33 +661,28 @@ def _rank_gate_oracle_sql(keep: int = _TOPK_KEEP) -> str:
 def tokenizer_encode_rank_engine_q(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """THE MERGE-RANK ENGINE AT PRODUCTION MERGE COUNT (r15 judge
+    """THE MERGE-RANK SEGMENTER AT PRODUCTION MERGE COUNT (r15 judge
     directive 5): segment and encode the customer-name corpus under a
-    1100-entry merge list with ``bpe_segment_vocab(engine='rank')`` —
-    the GPT-2-style lowest-rank-first segmenter whose per-word cost is
-    merge-count-independent (the 30k-merge production path; 1100 is
-    ~9x past the 128-merge auto threshold AND past the pre-r15
-    Catalyst codegen cliff the chain form crashed on) — while the
-    oracle replays the classic IN-ORDER REPLACE CHAIN, chunked 64
-    per CTE (DuckDB's binder recursion cap is 128 — see
-    ``_rank_gate_oracle_sql``). A hash match is the cross-engine, real-data form of the
-    rank==chain equivalence the Hypothesis property pins
-    algebraically: a wrong lowest-rank choice, a missed leftmost-first
-    occurrence, or a premature stop changes some word's segmentation,
-    shifts the corpus symbol ranking, and flips ids/UNKs corpus-wide.
-    The merge list is rule-generated (all digit pairs, then all
-    product+digit triples — premise-valid by construction) because
-    the fixture corpora are deliberately vocabulary-poor (documents
-    exhausts pairs at ~107 trained merges — measured r16); customer's
-    9-digit ids give every 2-/3-digit merge real occurrences, and the
-    ``keep``-truncated vocab leaves genuine per-doc UNK structure.
-    Approx-TRAINED lists at this scale are pinned rank==chain by a
-    Spark-side test (both engines in-cluster) — their training replay
-    is what DuckDB cannot afford, not the segmentation. Plan: zero
+    1100-entry merge list with ``bpe_segment_vocab`` — the merge-rank
+    segmenter whose per-word cost is merge-count-independent
+    (1100 is past the pre-r15 Catalyst codegen cliff a chain of SQL
+    replaces crashed on) — while the oracle replays the classic
+    IN-ORDER REPLACE CHAIN, chunked 64 per CTE (DuckDB's binder
+    recursion cap is 128 — see ``_rank_gate_oracle_sql``). A hash
+    match is the real-data form of the rank==chain equivalence the
+    Hypothesis property pins algebraically: a wrong rank choice, a
+    missed leftmost-first occurrence, or a premature stop changes some
+    word's segmentation, shifts the corpus symbol ranking, and flips
+    ids/UNKs corpus-wide. The merge list is rule-generated (all digit
+    pairs, then all product+digit triples) because the fixture corpora
+    are deliberately vocabulary-poor (documents exhausts pairs at ~107
+    trained merges — measured r16); customer's 9-digit ids give every
+    2-/3-digit merge real occurrences, and the ``keep``-truncated vocab
+    leaves genuine per-doc UNK structure. Plan: zero
     merge-proportional driver work — one vocab-sized Arrow-batched
-    segmentation pass (ranks dict in the UDF closure), then the
-    standard fixed-symbols literal-map encode (symbol table is
-    ``keep`` entries)."""
+    segmentation pass (ranks dict in the UDF closure), checkpointed and
+    shared by the top-k list and the encode, then the standard
+    fixed-symbols encode (symbol table is ``keep`` entries)."""
     from mriya_spark.ops.text import (
         bpe_segment_vocab,
         bpe_symbols_topk,
@@ -703,7 +695,7 @@ def tokenizer_encode_rank_engine_q(
     )
     wf = bpe_word_freq(docs).localCheckpoint(eager=True)
     vseg = bpe_segment_vocab(
-        docs, _RANK_GATE_MERGES, word_freq=wf, engine="rank"
+        docs, _RANK_GATE_MERGES, word_freq=wf
     ).localCheckpoint(eager=True)
     top = bpe_symbols_topk(
         docs, _RANK_GATE_MERGES, keep=_TOPK_KEEP, vseg=vseg

@@ -59,40 +59,53 @@ from mriya_spark.cachedir import cache_dir as _cache_dir
 
 _STAGE_ROOT = _cache_dir("stream_v2")
 
+#: tmpfs root for the bounded drivers' throwaway checkpoints
+_SHM_ROOT = "/dev/shm"
+
 
 def _ckpt_dir(tag: str) -> str:
     """Fresh throwaway checkpoint location for the module's BOUNDED
     stream drivers (r20, guide §1.2: per-micro-batch offset-log and
     state-store commits fsync the checkpoint — measured ~35% of a
     bounded drain's wall on this host's disk). Every driver here
-    already deletes its checkpoint after the drain (``shutil.rmtree``
-    at each call site), i.e. crash-durability across runs was NEVER
+    deletes its checkpoint after the drain (``_bounded_drain``), i.e.
+    crash-durability across runs was NEVER
     provided by these bounded replays — so the commit fsyncs buy
     nothing and the checkpoint can live on tmpfs when one exists.
     ``tempfile.mkdtemp`` gives a fresh 0700 directory, which keeps the
     r5 pre-planting posture (no predictable shared path; Spark then
     initializes the checkpoint inside a dir only we can write).
     Unbounded production streams pass their own durable checkpoint
-    locations and never go through these drivers."""
+    locations and never go through these drivers.
+
+    The name carries the owning pid (``mriya_ckpt_<pid>_<tag>_...``).
+    A crash-orphaned directory is swept only when its owner is dead —
+    ``/proc/<pid>`` is missing, or the name carries no pid — and it is
+    over an hour old. Age alone would delete the live checkpoint of
+    another process's drain once that drain ran past the hour."""
     import tempfile
     import time as _time
 
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        # sweep crash-orphaned checkpoints (normal exits rmtree their
-        # own): age-gated like the stream_v2 sweep, best-effort
+    if os.path.isdir(_SHM_ROOT) and os.access(_SHM_ROOT, os.W_OK):
         cutoff = _time.time() - 3600
         try:
-            for d in os.listdir("/dev/shm"):
-                if d.startswith("mriya_ckpt_"):
-                    p = os.path.join("/dev/shm", d)
-                    try:
-                        if os.path.getmtime(p) < cutoff:
-                            shutil.rmtree(p, ignore_errors=True)
-                    except OSError:
-                        pass
+            for d in os.listdir(_SHM_ROOT):
+                if not d.startswith("mriya_ckpt_"):
+                    continue
+                owner = d.split("_")[2]
+                if owner.isdigit() and os.path.exists(f"/proc/{owner}"):
+                    continue
+                p = os.path.join(_SHM_ROOT, d)
+                try:
+                    if os.path.getmtime(p) < cutoff:
+                        shutil.rmtree(p, ignore_errors=True)
+                except OSError:
+                    pass
         except OSError:
             pass
-        return tempfile.mkdtemp(prefix=f"mriya_ckpt_{tag}_", dir="/dev/shm")
+        return tempfile.mkdtemp(
+            prefix=f"mriya_ckpt_{os.getpid()}_{tag}_", dir=_SHM_ROOT
+        )
     return f"{_STAGE_ROOT}/ckpt_{tag}_{uuid.uuid4().hex[:12]}"
 
 
@@ -159,24 +172,29 @@ def read_events_stream(
 
 
 @contextmanager
-def _bounded_state_partitions(spark: SparkSession, n: int):
-    """Clamp ``spark.sql.shuffle.partitions`` for a bounded stream run.
+def _bounded_drain(spark: SparkSession, tag: str, n: int = 8):
+    """One bounded stream run: yields a fresh ``_ckpt_dir(tag)``
+    checkpoint and clamps ``spark.sql.shuffle.partitions`` to ``n``;
+    on exit the conf is restored and the checkpoint removed, also when
+    the drain raises (a leaked tmpfs checkpoint is leaked RAM).
 
     Stateful streaming operators instantiate, commit, and snapshot one
     state store per shuffle partition per micro-batch — with the batch
     session default (32 here) that fixed overhead dominates a bounded
     replay many times over, regardless of data volume. The value is
     captured into the query's (fresh) checkpoint at start, so clamping
-    around ``start()`` is exact; the session conf is restored after.
-    Unbounded production streams size this to throughput x key
-    cardinality instead — they don't go through these drivers.
+    around ``start()`` is exact. Unbounded production streams size this
+    to throughput x key cardinality instead — they don't go through
+    these drivers.
     """
+    ckpt = _ckpt_dir(tag)
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
-        yield
+        yield ckpt
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def run_to_memory_sink(
@@ -186,9 +204,8 @@ def run_to_memory_sink(
     """Drive a bounded stream to completion into a memory sink and
     return the final result as a batch DataFrame."""
     name = f"out_{uuid.uuid4().hex[:12]}"
-    ckpt = _ckpt_dir(name)
     spark = stream_df.sparkSession
-    with _bounded_state_partitions(spark, state_partitions):
+    with _bounded_drain(spark, name, state_partitions) as ckpt:
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -198,9 +215,7 @@ def run_to_memory_sink(
             .start()
         )
         q.awaitTermination()
-    out = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.table(name)
 
 
 def run_until_idle(
@@ -212,9 +227,8 @@ def run_until_idle(
     continuous micro-batches and block with ``processAllAvailable()``
     until the source reports no new data, then stop."""
     name = f"out_{uuid.uuid4().hex[:12]}"
-    ckpt = _ckpt_dir(name)
     spark = stream_df.sparkSession
-    with _bounded_state_partitions(spark, state_partitions):
+    with _bounded_drain(spark, name, state_partitions) as ckpt:
         q = (
             stream_df.writeStream.outputMode(output_mode)
             .format("memory")
@@ -227,9 +241,7 @@ def run_until_idle(
         finally:
             q.stop()
         q.awaitTermination()
-    out = spark.table(name)
-    shutil.rmtree(ckpt, ignore_errors=True)
-    return out
+    return spark.table(name)
 
 
 def _event_time(events: DataFrame) -> DataFrame:
@@ -447,8 +459,7 @@ def run_foreach_batch(
     from mriya_spark.cachedir import sweep_stale
 
     sweep_stale("stream_v2", ckpt_prefix)
-    ckpt = _ckpt_dir(ckpt_prefix.rstrip("_"))
-    with _bounded_state_partitions(spark, 8):
+    with _bounded_drain(spark, ckpt_prefix.rstrip("_")) as ckpt:
         writer = stream.writeStream.foreachBatch(batch_fn).option(
             "checkpointLocation", ckpt
         )
@@ -461,7 +472,6 @@ def run_foreach_batch(
             finally:
                 q.stop()
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def stateful_user_counts(events: DataFrame) -> DataFrame:
@@ -718,7 +728,6 @@ def stream_corpus_ingest(
     from mriya_spark.ops.dedup import normalized
 
     spark = docs.sparkSession
-    ckpt = _ckpt_dir("ingest")
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         scored = batch.select(
@@ -741,7 +750,7 @@ def stream_corpus_ingest(
             in_batch = in_batch.join(seen, on="fingerprint", how="left_anti")
         in_batch.write.mode("append").parquet(target_path)
 
-    with _bounded_state_partitions(spark, 8):
+    with _bounded_drain(spark, "ingest") as ckpt:
         q = (
             docs.writeStream.foreachBatch(ingest_batch)
             .option("checkpointLocation", ckpt)
@@ -749,7 +758,6 @@ def stream_corpus_ingest(
             .start()
         )
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return target_path
 
 
@@ -891,7 +899,6 @@ def stream_neardup_ingest(
     nothing rewrites.
     """
     spark = docs.sparkSession
-    ckpt = _ckpt_dir("neardup")
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         neardup_ingest_batch(
@@ -899,7 +906,7 @@ def stream_neardup_ingest(
             num_perm=num_perm, bands=bands, seed=seed,
         )
 
-    with _bounded_state_partitions(spark, 8):
+    with _bounded_drain(spark, "neardup") as ckpt:
         q = (
             docs.writeStream.foreachBatch(ingest_batch)
             .option("checkpointLocation", ckpt)
@@ -907,7 +914,6 @@ def stream_neardup_ingest(
             .start()
         )
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return target_path
 
 
@@ -1237,7 +1243,6 @@ def stream_neardup_ingest_portable(
     fixed staged batches the surviving corpus is a pure function of
     (docs, batch boundaries) that a SQL oracle can unroll."""
     spark = docs.sparkSession
-    ckpt = _ckpt_dir("neardup")
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         neardup_ingest_batch_portable(
@@ -1245,7 +1250,7 @@ def stream_neardup_ingest_portable(
             num_perm=num_perm, bands=bands,
         )
 
-    with _bounded_state_partitions(spark, 8):
+    with _bounded_drain(spark, "neardup") as ckpt:
         q = (
             docs.writeStream.foreachBatch(ingest_batch)
             .option("checkpointLocation", ckpt)
@@ -1253,7 +1258,6 @@ def stream_neardup_ingest_portable(
             .start()
         )
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return target_path
 
 
@@ -1531,7 +1535,6 @@ def stream_encode_fixed_vocab(
     from mriya_spark.ops.text import bpe_token_ids
 
     spark = docs.sparkSession
-    ckpt = _ckpt_dir("fixedenc")
     validated = [False]
 
     def encode_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -1549,7 +1552,7 @@ def stream_encode_fixed_vocab(
             out = out.join(seen, on="doc_id", how="left_anti")
         out.write.mode("append").parquet(target_path)
 
-    with _bounded_state_partitions(spark, 8):
+    with _bounded_drain(spark, "fixedenc") as ckpt:
         q = (
             docs.writeStream.foreachBatch(encode_batch)
             .option("checkpointLocation", ckpt)
@@ -1557,7 +1560,6 @@ def stream_encode_fixed_vocab(
             .start()
         )
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return target_path
 
 
@@ -1628,7 +1630,6 @@ def stream_decode_fixed_vocab(
     from mriya_spark.ops.text import bpe_decode
 
     spark = ids_stream.sparkSession
-    ckpt = _ckpt_dir("fixeddec")
 
     validated = [False]
 
@@ -1641,7 +1642,7 @@ def stream_decode_fixed_vocab(
             out = out.join(seen, on="doc_id", how="left_anti")
         out.write.mode("append").parquet(target_path)
 
-    with _bounded_state_partitions(spark, 8):
+    with _bounded_drain(spark, "fixeddec") as ckpt:
         q = (
             ids_stream.writeStream.foreachBatch(decode_batch)
             .option("checkpointLocation", ckpt)
@@ -1649,5 +1650,4 @@ def stream_decode_fixed_vocab(
             .start()
         )
         q.awaitTermination()
-    shutil.rmtree(ckpt, ignore_errors=True)
     return target_path

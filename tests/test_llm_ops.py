@@ -1498,6 +1498,41 @@ def test_classifier_weighted_validate_unique_ids_guard(spark):
         T.CLF_INLINE_MAX_BUCKETS = orig
 
 
+def _py_chain_segment(word, merges):
+    """Reference segmentation: replay the merges in listed order with
+    global string replaces on the '<sym>'-wrapped word — the form the
+    DuckDB oracles run."""
+    import re as _re
+
+    seq = "<" + "><".join(word) + ">"
+    for left, right, _c in merges:
+        seq = seq.replace(f"<{left}><{right}>", f"<{left}{right}>")
+    return _re.findall(r"<([^>]*)>", seq)
+
+
+def _py_token_ids(texts, merges, *, token_re=r"[^a-z0-9]+", symbols=None,
+                  oov_id=None):
+    """Reference encoder: {doc index: token ids}. Words split like the
+    library's pretokenizer (``regex`` reads ``\\p{L}``/``\\p{N}``),
+    segmented by ``_py_chain_segment``; without ``symbols`` ids are the
+    1-based lexicographic rank over the corpus's segmented symbols,
+    with them the 1-based list position (``oov_id`` for a miss)."""
+    import regex
+
+    docs = {
+        i: [w for w in regex.split(token_re, (t or "").strip().lower()) if w]
+        for i, t in enumerate(texts)
+    }
+    seg = {w: _py_chain_segment(w, merges) for ws in docs.values() for w in ws}
+    if symbols is None:
+        symbols = sorted({s for ss in seg.values() for s in ss})
+    sid = {s: i for i, s in enumerate(symbols, 1)}
+    return {
+        i: [sid.get(s, oov_id) for w in ws for s in seg[w]]
+        for i, ws in docs.items()
+    }
+
+
 def test_bpe_token_ids_match_python_encode(spark):
     """bpe_token_ids == a pure-Python encoder: greedy left-to-right
     merge application per word, lexicographic symbol ids over the
@@ -1582,13 +1617,11 @@ def test_bpe_shared_word_freq_is_identical(spark):
 
 
 def test_bpe_token_ids_broadcast_path_is_result_identical(spark):
-    """r11 judge directive 5: past ``BPE_INLINE_MAX_SYMS`` the
-    symbol-id map ships as a broadcast table (explode -> join ->
-    per-word regroup) instead of a SQL-parsed map literal. The two
-    paths must agree token-for-token — ids come from the same
-    lexicographic rank, assigned driver-side (sorted()) on the
-    literal path and cluster-side (row_number over sym) on the
-    broadcast path."""
+    """r11 judge directive 5: the word->ids table ships as a broadcast
+    relation, never as a SQL-parsed map literal. Its ids must agree
+    token-for-token with the pure-Python reference encoder — the
+    lexicographic rank over the corpus's segmented symbols — and the
+    plan must carry the table through a BroadcastExchange."""
     from mriya_spark.ops.text import bpe_token_ids, bpe_train
 
     texts = ["low lower lowest", "", "new low newer", "aaa aa low 9 z9"]
@@ -1596,61 +1629,35 @@ def test_bpe_token_ids_broadcast_path_is_result_identical(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     merges = bpe_train(df, n_merges=4)
-    lit = {
-        r.doc_id: list(r.token_ids)
-        for r in bpe_token_ids(df, merges).collect()
-    }
-    bc = {
-        r.doc_id: list(r.token_ids)
-        for r in bpe_token_ids(df, merges, max_inline_syms=0).collect()
-    }
-    assert bc == lit
-    # the default gate keeps 12-merge runs on the literal path
-    from mriya_spark.ops.text import BPE_INLINE_MAX_SYMS
-
-    assert 36 + len(merges) <= BPE_INLINE_MAX_SYMS
+    ids = bpe_token_ids(df, merges)
+    got = {r.doc_id: list(r.token_ids) for r in ids.collect()}
+    assert got == _py_token_ids(texts, merges)
+    plan = ids._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastExchange" in plan or "BroadcastHashJoin" in plan
+    assert "element_at(map(" not in plan
 
 
 def test_bpe_token_ids_gate_trips_on_merge_count_alone(spark):
-    """The BPE_INLINE_MAX_SYMS gate is STATIC (alphabet + merge count
-    bounds the symbol set — no probe job), so a default-params caller
-    with a production-sized merges list must cross onto the broadcast
-    path automatically. Padding the real merges with no-op pairs
-    (symbols that never occur — replace() no-ops, exactly what spent
-    slots in a real batched trainer produce) trips the gate without
-    training 4000+ real merges; results must equal the literal path
-    run on the SAME padded list."""
+    """A production-sized merge list takes the same encode path as a
+    small one — there is no size gate left to trip. Padding the real
+    merges with 4,000+ no-op pairs (symbols that never occur, exactly
+    what spent slots in a real batched trainer produce) must not change
+    a single id against the pure-Python reference run on the SAME
+    padded list."""
     from mriya_spark.ops.text import bpe_token_ids, bpe_train
 
     texts = ["low lower lowest", "new low newer"]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
-    from mriya_spark.ops import text as T
-
     real = bpe_train(df, n_merges=4)
-    pad = [(f"zzz{i}", f"qqq{i}", 0) for i in range(30)]
-    padded = real + pad  # 34 merges; gate shrunk below so 36+34 > 64
-    # (a full-size padded list would ALSO chain 4000+ replace()
-    # expressions through bpe_segment_vocab on both paths — the gate
-    # TRIGGER is what this test pins, so shrink the gate instead,
-    # exactly like the classifier's auto-switch test)
-    lit = {
+    padded = real + [(f"zzz{i}", f"qqq{i}", 0) for i in range(4100)]
+    got = {
         r.doc_id: list(r.token_ids)
         for r in bpe_token_ids(df, padded).collect()
     }
-    orig = T.BPE_INLINE_MAX_SYMS
-    T.BPE_INLINE_MAX_SYMS = 64
-    try:
-        assert 36 + len(padded) > T.BPE_INLINE_MAX_SYMS
-        auto = {
-            r.doc_id: list(r.token_ids)
-            for r in bpe_token_ids(df, padded).collect()
-        }
-    finally:
-        T.BPE_INLINE_MAX_SYMS = orig
-    assert auto == lit
-    assert all(ids for ids in auto.values())
+    assert got == _py_token_ids(texts, padded) == _py_token_ids(texts, real)
+    assert all(ids for ids in got.values())
 
 
 def test_bpe_merges_save_load_roundtrip(spark, tmp_path):
@@ -1868,6 +1875,43 @@ def test_bpe_word_ceiling_fails_loud(spark, monkeypatch):
         ("l", "o", 3),
         ("lo", "w", 3),
     ]
+
+
+def test_bpe_encode_has_no_word_ceiling(spark, monkeypatch):
+    """The word ceiling bounds only what reaches the driver (trainers
+    and symbol lists). Encode segments on the executors, so a corpus
+    past the ceiling still encodes — also under a symbol list built
+    from a floored ``word_freq`` — and matches the pure-Python
+    reference. A floored ``word_freq`` handed to the encode itself
+    does not cover the corpus, and the error names it."""
+    import mriya_spark.ops.text as text
+
+    texts = ["low low low lower", "new new newer wide"]
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+    wf = text.bpe_word_freq(df).localCheckpoint(eager=True)  # 5 words
+    monkeypatch.setattr(text, "BPE_MAX_TRAIN_WORDS", 3)
+    floored = wf.where("cnt >= 2")  # low, new
+    merges = text.bpe_train(df, n_merges=2, word_freq=floored)
+    syms = text.bpe_symbols(df, merges, word_freq=floored)
+    for kw in ({}, {"word_freq": wf}):
+        got = {
+            r.doc_id: list(r.token_ids)
+            for r in text.bpe_token_ids(
+                df, merges, symbols=syms, oov_id=0, **kw
+            ).collect()
+        }
+        assert got == _py_token_ids(texts, merges, symbols=syms, oov_id=0)
+    got = {
+        r.doc_id: list(r.token_ids)
+        for r in text.bpe_token_ids(df, merges).collect()
+    }
+    assert got == _py_token_ids(texts, merges)
+    with pytest.raises(Exception, match="not covered by the vseg=/word_freq="):
+        text.bpe_token_ids(
+            df, merges, symbols=syms, oov_id=0, word_freq=floored
+        ).collect()
 
 
 def test_qsketch_grouped_oracle_is_null_safe(spark):
@@ -2144,8 +2188,9 @@ def test_bpe_fixed_vocab_ids_are_corpus_independent(spark):
     1-based position in THAT list on every corpus — encoding two
     different corpora under one artifact assigns identical ids to the
     shared words, where the corpus-derived assignment shifts them
-    whenever the symbol sets differ. Covers literal AND broadcast
-    paths, plus the UNK policy and the fail-loud default."""
+    whenever the symbol sets differ. Checked against the pure-Python
+    reference encoder, plus the UNK policy and the fail-loud
+    default."""
     from mriya_spark.ops.text import (
         bpe_symbols,
         bpe_token_ids,
@@ -2165,22 +2210,21 @@ def test_bpe_fixed_vocab_ids_are_corpus_independent(spark):
     cb = spark.createDataFrame(
         [(0, "low new 42")], "doc_id long, text string"
     )
-    for lim in (None, 0):  # literal / broadcast
-        ia = bpe_token_ids(
-            ca, merges, symbols=syms, oov_id=0, max_inline_syms=lim
-        ).collect()[0]
-        ib = bpe_token_ids(
-            cb, merges, symbols=syms, oov_id=0, max_inline_syms=lim
-        ).collect()[0]
-        # shared prefix ("low new") identical across corpora
-        assert ib.token_ids[: len(ia.token_ids)] == ia.token_ids, lim
-        # the digit word is all-UNK
-        assert ib.token_ids[len(ia.token_ids):] == [0, 0], lim
-        # fail-loud default: no oov_id -> raise_error at execution
-        with pytest.raises(Exception, match="out-of-vocabulary"):
-            bpe_token_ids(
-                cb, merges, symbols=syms, max_inline_syms=lim
-            ).collect()
+    ia = bpe_token_ids(ca, merges, symbols=syms, oov_id=0).collect()[0]
+    ib = bpe_token_ids(cb, merges, symbols=syms, oov_id=0).collect()[0]
+    assert list(ia.token_ids) == _py_token_ids(
+        ["low new"], merges, symbols=syms, oov_id=0
+    )[0]
+    assert list(ib.token_ids) == _py_token_ids(
+        ["low new 42"], merges, symbols=syms, oov_id=0
+    )[0]
+    # shared prefix ("low new") identical across corpora
+    assert ib.token_ids[: len(ia.token_ids)] == ia.token_ids
+    # the digit word is all-UNK
+    assert ib.token_ids[len(ia.token_ids):] == [0, 0]
+    # fail-loud default: no oov_id -> raise_error at execution
+    with pytest.raises(Exception, match="out-of-vocabulary"):
+        bpe_token_ids(cb, merges, symbols=syms).collect()
     # corpus-derived ids on cb WOULD differ (digits shift letter ranks)
     derived = bpe_token_ids(cb, merges).collect()[0]
     fixed = bpe_token_ids(cb, merges, symbols=syms, oov_id=0).collect()[0]
@@ -2188,6 +2232,9 @@ def test_bpe_fixed_vocab_ids_are_corpus_independent(spark):
     # oov_id without symbols is a contract error
     with pytest.raises(ValueError, match="oov_id"):
         bpe_token_ids(cb, merges, oov_id=0)
+    # a repeated symbol would give one symbol two ids
+    with pytest.raises(ValueError, match="repeats a symbol"):
+        bpe_token_ids(cb, merges, symbols=syms + syms[:1], oov_id=0)
 
 
 def test_bpe_decode_fails_loud_on_unknown_ids(spark):
@@ -2226,35 +2273,28 @@ def test_bpe_load_vocab_rejects_corrupt_symbols(spark, tmp_path):
 
 def test_bpe_unicode_dynamic_size_gate(spark):
     """r13 ADVICE (medium): under a non-ASCII token_re with no fixed
-    vocab the 36-char static bound is wrong — the gate must measure
-    the actual distinct-symbol count. A tiny max_inline_syms forces
-    the measured count over the limit, so the call must take the
-    broadcast path (and still agree with the literal path's result)."""
+    vocab the alphabet is unbounded (CJK: tens of thousands of
+    codepoints). The encode has no size gate to guess wrong any more;
+    its ids must equal the pure-Python reference encoder's, which
+    splits with the same ``\\p{L}``/``\\p{N}`` classes."""
     from mriya_spark.ops.text import (
         UNICODE_TOKEN_RE,
         bpe_token_ids,
         bpe_train,
     )
 
+    texts = ["αβγ αβ 中文 ёжик", "αβγ 中文 中"]
     df = spark.createDataFrame(
-        [(0, "αβγ αβ 中文 ёжик"), (1, "αβγ 中文 中")],
-        "doc_id long, text string",
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     merges = bpe_train(df, n_merges=2, token_re=UNICODE_TOKEN_RE)
-    lit_ids = {
-        r.doc_id: r.token_ids
+    got = {
+        r.doc_id: list(r.token_ids)
         for r in bpe_token_ids(
             df, merges, token_re=UNICODE_TOKEN_RE
         ).collect()
     }
-    # 10 distinct base codepoints here: a limit of 4 must reroute
-    bc_ids = {
-        r.doc_id: r.token_ids
-        for r in bpe_token_ids(
-            df, merges, token_re=UNICODE_TOKEN_RE, max_inline_syms=4
-        ).collect()
-    }
-    assert lit_ids == bc_ids
+    assert got == _py_token_ids(texts, merges, token_re=UNICODE_TOKEN_RE)
 
 
 def test_pack_bestfit_non_straddling_invariants(spark):
@@ -2822,13 +2862,10 @@ def test_bpe_segment_vocab_survives_production_merge_count(spark):
     """r15 probe finding: a single projection nesting one
     StringReplace per merge overflows Catalyst codegen's recursion
     below ~1000 levels — encode under a production-size merge list
-    crashed outright. Both big-list engines must (a) complete at
-    1000+ merges and (b) segment identically to the small-list chain:
-    engine="chain" exercises the chunked-checkpoint fix, the default
-    engine="auto" routes >128 merges onto the merge-rank segmenter
-    (whose algebraic equality with the chain is Hypothesis-pinned in
-    test_merge_rank_equals_replace_chain — this is the Spark-wiring
-    half of that property)."""
+    crashed outright. The merge-rank segmenter must (a) complete at
+    1000+ merges and (b) segment exactly like the pure-Python in-order
+    replace chain (the Spark-wiring half of
+    test_merge_rank_equals_replace_chain)."""
     from mriya_spark.ops.text import bpe_segment_vocab, bpe_train
 
     df = spark.createDataFrame(
@@ -2838,53 +2875,49 @@ def test_bpe_segment_vocab_survives_production_merge_count(spark):
     real = bpe_train(df, n_merges=4)
     # 1000+ merges: pad the real list with no-op merges over symbols
     # absent from the corpus (q/z) — depth is what's under test, and
-    # inert tail merges keep the expected segmentation checkable. The
-    # pads are PREMISE-VALID (each component is a base char or an
-    # earlier pad's product: q+z, qz+z, qzz+z, ...) so the auto route
-    # still reaches the rank engine after the r16 premise gate.
+    # inert tail merges keep the expected segmentation checkable
     padded = real + [("q" + "z" * i, "z", 1) for i in range(1200)]
-    want = {
+    got = {
         r["word"]: r["seq"]
-        for r in bpe_segment_vocab(df, real).collect()
+        for r in bpe_segment_vocab(df, padded).collect()
     }
-    for engine in ("chain", "auto"):
-        got = {
-            r["word"]: r["seq"]
-            for r in bpe_segment_vocab(df, padded, engine=engine).collect()
-        }
-        assert got == want and len(got) > 0, engine
+    want = {
+        w: "".join(f"<{s}>" for s in _py_chain_segment(w, real))
+        for w in got
+    }
+    assert got == want and len(got) > 0
 
 
 def test_merge_rank_premise_gate(spark):
-    """r15 ADVICE (low): the rank engine is only chain-equivalent for
-    lists whose pair components are base symbols or earlier products.
-    A violating list — here (ab, c) BEFORE (a, b), where the chain
-    replays <ab><c> as a no-op but lowest-rank-first would merge a+b
-    then ab+c — must fail loud under explicit engine='rank' and fall
-    back to the chain under 'auto' (forced over the threshold by
-    premise-VALID inert pads so the violating head is what trips it).
-    """
-    from mriya_spark.ops.text import (
-        _merge_rank_premise_ok,
-        bpe_segment_vocab,
-    )
+    """r15 ADVICE (low): the old rank engine was only chain-equivalent
+    for lists whose pair components are base symbols or earlier
+    products, and needed a premise gate. The single segmenter is exact
+    for every list: a violating list — here (ab, c) BEFORE (a, b),
+    where the chain replays <ab><c> as a no-op — must segment exactly
+    like the pure-Python chain, also with inert pads appended, with a
+    pair listed twice and with a left == right pair."""
+    from mriya_spark.ops.text import bpe_segment_vocab
 
-    df = spark.createDataFrame([(0, "abc abc ab")], "doc_id long, text string")
+    df = spark.createDataFrame(
+        [(0, "abc abc ab aaaa")], "doc_id long, text string"
+    )
     bad = [("ab", "c", 1), ("a", "b", 1)]
-    assert not _merge_rank_premise_ok(bad)
-    assert _merge_rank_premise_ok([("a", "b", 1), ("ab", "c", 1)])
-    with pytest.raises(ValueError, match="rank-equivalence premise"):
-        bpe_segment_vocab(df, bad, engine="rank")
-    padded_bad = bad + [("q" + "z" * i, "z", 1) for i in range(140)]
-    want = {
-        r["word"]: r["seq"]
-        for r in bpe_segment_vocab(df, padded_bad, engine="chain").collect()
-    }
-    got = {
-        r["word"]: r["seq"]
-        for r in bpe_segment_vocab(df, padded_bad, engine="auto").collect()
-    }
-    assert got == want  # auto fell back to the chain, not rank
+    cases = [
+        bad,
+        bad + [("q" + "z" * i, "z", 1) for i in range(140)],
+        bad + [("ab", "c", 1), ("a", "a", 1), ("aa", "aa", 1)],
+    ]
+    for merges in cases:
+        got = {
+            r["word"]: r["seq"]
+            for r in bpe_segment_vocab(df, merges).collect()
+        }
+        want = {
+            w: "".join(f"<{s}>" for s in _py_chain_segment(w, merges))
+            for w in ("abc", "ab", "aaaa")
+        }
+        assert got == want, merges[:5]
+    want = {r["word"]: r["seq"] for r in bpe_segment_vocab(df, bad).collect()}
     assert want["abc"] == "<ab><c>"  # the no-op replay order, pinned
 
 
@@ -3015,13 +3048,13 @@ def test_pack_bestfit_string_id_sql_replay_prevalidation(spark):
 
 
 def test_rank_engine_encode_sql_replay_prevalidation(spark):
-    """Pre-validates an r16 gate row that pins the merge-rank engine
+    """Pre-validates an r16 gate row that pins the merge-rank segmenter
     AGAINST THE ENGINE-INDEPENDENT ORACLE: the Spark side segments the
-    vocabulary with engine='rank' (the production 30k-merge path) and
+    vocabulary with ``bpe_segment_vocab`` (the merge-rank UDF) and
     encodes under a truncated vocab, while DuckDB replays the classic
     in-order replace CHAIN (`_bpe_topk_oracle_sql` — the registered
-    builder, unchanged). A hash match means the rank engine's
-    segmentation is chain-identical on the cluster, not just in the
+    builder, unchanged). A hash match means the merge-rank
+    segmentation is chain-identical through Spark, not just in the
     Hypothesis model."""
     import duckdb
     import pandas as pd
@@ -3043,7 +3076,7 @@ def test_rank_engine_encode_sql_replay_prevalidation(spark):
     wf = bpe_word_freq(df).localCheckpoint(eager=True)
     merges = bpe_train(df, n_merges=n_merges, word_freq=wf)
     vseg = bpe_segment_vocab(
-        df, merges, word_freq=wf, engine="rank"
+        df, merges, word_freq=wf
     ).localCheckpoint(eager=True)
     top = bpe_symbols_topk(df, merges, keep=keep, vseg=vseg)
     ids = bpe_token_ids(df, merges, symbols=top, oov_id=0, vseg=vseg)
@@ -3232,24 +3265,21 @@ def test_sft_masked_pack_alignment_survives_windows(spark):
 
 
 def test_rank_gate_merges_premise_and_scale(spark):
-    """The r16 rank-engine gate list must satisfy the rank==chain
-    premise by construction and sit far past the 128-merge auto
-    threshold; and an APPROX-TRAINED list at a few hundred merges —
-    the production artifact class whose training replay DuckDB cannot
-    afford — must segment identically under both engines on the same
-    digit-rich corpus the gate row uses (the in-cluster half of the
-    equivalence the gate row pins cross-engine for the literal list).
-    """
+    """The r16 rank-gate list sits far past the merge counts a Spark
+    replace chain survived; and an APPROX-TRAINED list at a few hundred
+    merges — the production artifact class whose training replay
+    DuckDB cannot afford — must segment exactly like the pure-Python
+    in-order replace chain on the same digit-rich corpus the gate row
+    uses (the in-cluster half of the equivalence the gate row pins
+    cross-engine for the literal list)."""
     from mriya_spark.ops.text import (
-        _merge_rank_premise_ok,
         bpe_segment_vocab,
         bpe_train_approx,
         bpe_word_freq,
     )
     from mriya_spark.queries import _RANK_GATE_MERGES
 
-    assert len(_RANK_GATE_MERGES) == 1100 > 128
-    assert _merge_rank_premise_ok(_RANK_GATE_MERGES)
+    assert len(_RANK_GATE_MERGES) == 1100
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/customer.parquet")
@@ -3258,20 +3288,15 @@ def test_rank_gate_merges_premise_and_scale(spark):
     wf = bpe_word_freq(docs).localCheckpoint(eager=True)
     trained = bpe_train_approx(docs, n_merges=600, batch=64, word_freq=wf)
     assert len(trained) >= 300  # corpus-rich enough to mean something
-    assert _merge_rank_premise_ok(trained)  # trained => premise, always
-    chain = {
+    got = {
         r["word"]: r["seq"]
-        for r in bpe_segment_vocab(
-            docs, trained, word_freq=wf, engine="chain"
-        ).collect()
+        for r in bpe_segment_vocab(docs, trained, word_freq=wf).collect()
     }
-    rank = {
-        r["word"]: r["seq"]
-        for r in bpe_segment_vocab(
-            docs, trained, word_freq=wf, engine="rank"
-        ).collect()
+    want = {
+        w: "".join(f"<{s}>" for s in _py_chain_segment(w, trained))
+        for w in got
     }
-    assert chain == rank and len(chain) > 100
+    assert got == want and len(got) > 100
 
 
 def test_pack_windows_attention_invariants(spark):

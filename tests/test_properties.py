@@ -824,29 +824,33 @@ def test_fixed_vocab_encode_is_corpus_independent_property(
 BPE_WORD = st.text(alphabet="abcdéλ9", min_size=1, max_size=8)
 
 
-@given(st.lists(BPE_WORD, min_size=1, max_size=10), st.integers(0, 12))
+@given(
+    st.lists(BPE_WORD, min_size=1, max_size=10),
+    st.integers(0, 12),
+    st.data(),
+)
 @settings(max_examples=60, deadline=None)
-def test_merge_rank_equals_replace_chain(words, n_merges):
-    """The merge-rank segmenter (`_merge_rank_segment`, the
-    production engine for big merge lists) must produce EXACTLY the
-    segmentation of replaying the merges in listed order with global
-    string replaces (the chain engine / the DuckDB-oracle form), on
-    any valid BPE merge list — including repeated-character words
-    ('aaa') where leftmost-first non-overlapping merging is the
-    tie-sensitive part, and non-ASCII symbols. Merges are learned by
-    an in-test pure-Python trainer that mirrors bpe_train's greedy
-    rule (count DESC, pair ASC), so the lists are exactly the
-    reachable ones. No Spark: the chain per word IS pure string
-    replacement, which is what makes this property cheap enough to
-    run at 60 examples."""
+def test_merge_rank_equals_replace_chain(words, n_merges, data):
+    """The merge-rank segmenter (`_merge_rank_segment`, the one BPE
+    encode path) must produce EXACTLY the segmentation of replaying the
+    merges in listed order with global string replaces (the DuckDB-
+    oracle form), on ANY merge list: lists learned by an in-test
+    pure-Python mirror of bpe_train's greedy rule (count DESC, pair
+    ASC), and arbitrary lists of word-substring pairs in any order —
+    a pair whose component is a LATER merge's product, a pair listed
+    twice, a left == right pair. Repeated-character words ('aaa') make
+    leftmost-first non-overlapping merging the tie-sensitive part;
+    non-ASCII symbols ride along. No Spark: the chain per word IS pure
+    string replacement, which is what makes this property cheap
+    enough to run at 60 examples."""
     from collections import Counter
 
-    from mriya_spark.ops.text import _merge_rank_segment
+    from mriya_spark.ops.text import _merge_rank_segment, _merge_ranks
 
     # --- pure-Python mirror of the greedy trainer ---
     seqs = {w: "<" + "><".join(w) + ">" for w in set(words)}
     cnt = Counter(words)
-    merges = []
+    trained = []
     for _ in range(n_merges):
         pairs = Counter()
         for w, seq in seqs.items():
@@ -858,20 +862,34 @@ def test_merge_rank_equals_replace_chain(words, n_merges):
         (left, right), _c = max(
             pairs.items(), key=lambda kv: (kv[1], [-ord(c) for c in f"{kv[0][0]} {kv[0][1]}"])
         )
-        merges.append((left, right, pairs[(left, right)]))
+        trained.append((left, right, pairs[(left, right)]))
         for w in seqs:
             seqs[w] = seqs[w].replace(
                 f"<{left}><{right}>", f"<{left}{right}>"
             )
-    # --- chain model: replay in order with global replaces ---
-    ranks = {}
-    for i, (left, right, _c) in enumerate(merges):
-        ranks.setdefault((left, right), i)
-    for w in set(words):
-        chain = "<" + "><".join(w) + ">"
-        for left, right, _c in merges:
-            chain = chain.replace(f"<{left}><{right}>", f"<{left}{right}>")
-        assert _merge_rank_segment(w, ranks) == chain, (w, merges)
+    # --- arbitrary lists over substrings of the words (so they fire) ---
+    pieces = sorted(
+        {w[i:j] for w in words for i in range(len(w))
+         for j in range(i + 1, min(len(w), i + 3) + 1)}
+    )
+    piece = st.sampled_from(pieces)
+    arbitrary = [
+        (left, right, 1)
+        for left, right in data.draw(
+            st.lists(st.tuples(piece, piece), max_size=16)
+        )
+    ]
+    for merges in (trained, arbitrary, arbitrary + trained):
+        ranks = _merge_ranks(merges)
+        for w in set(words):
+            # --- chain model: replay in order with global replaces ---
+            chain = "<" + "><".join(w) + ">"
+            for left, right, _c in merges:
+                chain = chain.replace(
+                    f"<{left}><{right}>", f"<{left}{right}>"
+                )
+            got = "".join(f"<{s}>" for s in _merge_rank_segment(w, ranks))
+            assert got == chain, (w, merges)
 
 
 @given(

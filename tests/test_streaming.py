@@ -1139,3 +1139,61 @@ def test_stream_shard_delivery_bloom_screen_same_result(spark, tmp_path):
         sinks.append_training_shards(
             docs, plain, num_shards=4, seed=5, bloom_bits=4096
         )
+
+
+def test_ckpt_sweep_spares_live_owners(tmp_path, monkeypatch):
+    """The tmpfs orphan sweep ages nothing by mtime alone: an hour-old
+    checkpoint whose owning pid is alive is another process's long
+    drain and stays; one whose owner is dead, or whose name carries no
+    pid, is swept. A fresh one is never touched."""
+    import os
+    import subprocess
+    import time
+
+    monkeypatch.setattr(S, "_SHM_ROOT", str(tmp_path))
+    dead = subprocess.Popen(["true"])
+    dead.wait()  # reaped: /proc/<pid> is gone
+    live = tmp_path / f"mriya_ckpt_{os.getpid()}_out_live"
+    orphan = tmp_path / f"mriya_ckpt_{dead.pid}_out_orphan"
+    unowned = tmp_path / "mriya_ckpt_out_unowned"
+    fresh = tmp_path / f"mriya_ckpt_{dead.pid}_out_fresh"
+    for d in (live, orphan, unowned, fresh):
+        d.mkdir()
+    old = time.time() - 7200
+    for d in (live, orphan, unowned):
+        os.utime(d, (old, old))
+    made = S._ckpt_dir("t")
+    assert live.exists() and fresh.exists()
+    assert not orphan.exists() and not unowned.exists()
+    assert os.path.basename(made).startswith(f"mriya_ckpt_{os.getpid()}_t_")
+
+
+def test_bounded_drivers_remove_checkpoint_on_failure(
+    spark, tmp_path, monkeypatch
+):
+    """``run_to_memory_sink``, ``run_until_idle`` and the foreachBatch
+    runner delete their checkpoint (RAM when it lives on tmpfs) when
+    the drain raises, not only when it succeeds."""
+    import pytest
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    failing = (
+        spark.readStream.schema("id long").parquet(src)
+        .select(F.expr("raise_error(concat('boom ', id))").alias("x"))
+    )
+    drains = {
+        "memory_sink": lambda: S.run_to_memory_sink(
+            failing, output_mode="append"
+        ),
+        "until_idle": lambda: S.run_until_idle(failing),
+        "foreach_batch": lambda: S.run_foreach_batch(
+            failing, lambda batch, _epoch: batch.collect()
+        ),
+    }
+    for name, drain in drains.items():
+        ckpt = tmp_path / f"ckpt_{name}"
+        monkeypatch.setattr(S, "_ckpt_dir", lambda tag, p=str(ckpt): p)
+        with pytest.raises(Exception, match="boom"):
+            drain()
+        assert not ckpt.exists(), name
