@@ -25,5 +25,6 @@ plane. Designed for a 1000-executor cluster, tested on local[*].
 
 __version__ = "0.1.0"
 
+import mriya_spark._zipcache  # noqa: F401  (first: Python workers import this package)
 from mriya_spark.session import get_spark  # noqa: F401
 from mriya_spark.catalog import Catalog  # noqa: F401

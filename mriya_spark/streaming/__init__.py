@@ -178,6 +178,10 @@ def _bounded_drain(spark: SparkSession, tag: str, n: int = 8):
     on exit the conf is restored and the checkpoint removed, also when
     the drain raises (a leaked tmpfs checkpoint is leaked RAM).
 
+    The checkpoint is a local directory, so the yielded location is a
+    ``file://`` URI: a bare path would resolve against ``fs.defaultFS``
+    (HDFS, S3A, ...) and the local ``rmtree`` below would leak it.
+
     Stateful streaming operators instantiate, commit, and snapshot one
     state store per shuffle partition per micro-batch — with the batch
     session default (32 here) that fixed overhead dominates a bounded
@@ -191,7 +195,7 @@ def _bounded_drain(spark: SparkSession, tag: str, n: int = 8):
     saved = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
-        yield ckpt
+        yield "file://" + os.path.abspath(ckpt)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", saved)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -1197,3 +1197,29 @@ def test_bounded_drivers_remove_checkpoint_on_failure(
         with pytest.raises(Exception, match="boom"):
             drain()
         assert not ckpt.exists(), name
+
+
+def test_bounded_drain_yields_file_uri_and_removes_checkpoint(spark):
+    """A bounded drain's checkpoint is local, so it is handed to Spark
+    as a ``file://`` URI (a bare path would resolve against a non-local
+    ``fs.defaultFS`` and the local rmtree would leak it). The local
+    directory is gone after a normal exit and after a raising one."""
+    import os
+
+    import pytest
+
+    saved = spark.conf.get("spark.sql.shuffle.partitions")
+    with S._bounded_drain(spark, "uri") as loc:
+        assert loc.startswith("file:///")
+        local = loc[len("file://"):]
+        os.makedirs(os.path.join(local, "offsets"), exist_ok=True)
+        assert os.path.isdir(local)
+    assert not os.path.exists(local)
+
+    with pytest.raises(RuntimeError, match="boom"):
+        with S._bounded_drain(spark, "uri") as loc:
+            local = loc[len("file://"):]
+            os.makedirs(os.path.join(local, "offsets"), exist_ok=True)
+            raise RuntimeError("boom")
+    assert not os.path.exists(local)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == saved
