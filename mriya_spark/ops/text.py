@@ -1953,9 +1953,8 @@ def bpe_load_vocab(spark, path: str) -> list[str]:
     decode consumes (id = 1-based line number). Symbols are validated
     against the pretokenizer invariant (no whitespace, no '<'/'>'
     delimiter chars) so a hand-edited or corrupted vocab.txt fails
-    HERE with a clear message instead of surfacing later as a
-    confusing SQL parse error or a semantically shifted map literal
-    (r13 ADVICE)."""
+    HERE with a clear message instead of surfacing later as
+    semantically shifted ids (r13 ADVICE)."""
     from mriya_spark.fsutil import fs_read_text
 
     bad = _re.compile(r"[\s<>]")
@@ -1974,10 +1973,9 @@ def bpe_load_vocab(spark, path: str) -> list[str]:
                 "artifact is corrupt or hand-edited"
             )
         if line in seen:
-            # a duplicated line would fail inconsistently downstream:
-            # encode rejects a repeated symbol, the map-literal decode
-            # path errors on duplicate map keys and the broadcast-join
-            # decode path silently duplicates tokens
+            # a duplicated line would split the artifact's two halves:
+            # encode rejects a repeated symbol while decode would
+            # silently accept it
             raise ValueError(
                 f"bpe_load_vocab: line {lineno} of {path!r} duplicates "
                 f"symbol {line!r} (first seen on line {seen[line]}) — "
@@ -1989,26 +1987,6 @@ def bpe_load_vocab(spark, path: str) -> list[str]:
     return symbols
 
 
-#: Above this symbol count ``bpe_decode`` stops inlining the id->symbol
-#: mapping as one SQL-parsed map literal, whose driver-side build cost
-#: is superlinear (MEASURED r12, map literal parse+fold: 0.4s at 4096
-#: entries, 2s at 16384, 62s at 65536 — string-valued maps fold far
-#: worse than the classifier's int array, hence a lower gate than
-#: ``CLF_INLINE_MAX_BUCKETS``) and re-shipped per stage; past it the
-#: mapping ships as a broadcast TABLE instead. Decode only: encode
-#: maps symbols to ids inside one UDF at every size.
-BPE_INLINE_MAX_SYMS = 4096
-
-
-def _sql_str(s: str) -> str:
-    """Escape a symbol for embedding in a single-quoted Spark SQL
-    string literal (map-literal construction). Both shipped
-    pretokenizers exclude quotes and backslashes from tokens, but a
-    library caller's custom vocab must not be able to change the
-    expression's shape (r13 ADVICE)."""
-    return s.replace("\\", "\\\\").replace("'", "\\'")
-
-
 def bpe_decode(
     ids_df: DataFrame,
     symbols: list[str],
@@ -2016,7 +1994,6 @@ def bpe_decode(
     id_col: str = "doc_id",
     ids_col: str = "token_ids",
     out_col: str = "decoded",
-    max_inline_syms: int | None = None,
 ) -> DataFrame:
     """Inverse of ``bpe_token_ids`` under the same vocabulary: map
     each token id back to its symbol (1-based index into ``symbols``)
@@ -2026,64 +2003,43 @@ def bpe_decode(
     with '' — exactly the invariant a lossless-roundtrip gate checks
     against raw text without replaying training.
 
-    Size gate: at/below ``max_inline_syms`` (default
-    ``BPE_INLINE_MAX_SYMS``) the id->symbol map rides the
-    plan as ONE SQL-parsed map literal and decode is scan-local; past
-    it the mapping ships as a broadcast table into a
-    posexplode -> join -> per-row regroup (ids are vocab-bounded —
-    the table is tiny — while the map LITERAL would be a multi-MB
-    folded plan constant, the measured r12 knee).
+    One engine: an Arrow-batched pandas UDF maps each row's ids
+    through the id->symbol dict in its closure, so decode is
+    scan-local (no exchange) at any vocab size. An id outside
+    1..len(symbols), a NULL element included, FAILS LOUD: the UDF
+    returns NULL for that row and a lazy ``raise_error`` names the
+    first such id (a vocab/merges artifact mismatch must not decode
+    to silently truncated text). A NULL ``ids_col`` decodes to ''."""
+    sym = dict(enumerate(symbols, 1))
 
-    An id outside 1..len(symbols) FAILS LOUD on both paths
-    (``raise_error``, r13 ADVICE — previously the literal path's
-    ``element_at`` miss silently skipped the token and the broadcast
-    path's inner join dropped it: a vocab/merges artifact mismatch
-    decoded to silently truncated text). NULL ``ids_col`` input
-    decodes to '' on both paths (previously literal returned NULL)."""
-    limit = BPE_INLINE_MAX_SYMS if max_inline_syms is None else max_inline_syms
-    bad = (
-        "cast(raise_error(concat('bpe_decode: unknown token id ', "
-        "cast({i} as string), ' (vocab/merges mismatch?)')) as string)"
+    def _dec(col):  # pd.Series of id arrays -> pd.Series of str
+        import pandas as _pd
+
+        out = []
+        for ids in col:
+            if ids is None:
+                out.append("")
+                continue
+            try:
+                out.append("".join([sym[i] for i in ids.tolist()]))
+            except KeyError:  # out of range, or NaN for a NULL element
+                out.append(None)
+        return _pd.Series(out, dtype=object)
+
+    first_bad = (
+        f"element_at(filter({ids_col}, i -> i IS NULL OR i < 1 "
+        f"OR i > {len(symbols)}), 1)"
     )
-    if len(symbols) <= limit:
-        id_map = "map(" + ",".join(
-            f"{i + 1}L,'{_sql_str(s)}'" for i, s in enumerate(symbols)
-        ) + ")"
-        ids = f"coalesce({ids_col}, cast(array() as array<bigint>))"
-        return ids_df.select(
-            F.col(id_col),
-            F.expr(
-                f"array_join(transform({ids}, "
-                f"i -> coalesce(element_at({id_map}, i), "
-                + bad.format(i="i")
-                + ")), '')"
-            ).alias(out_col),
-        )
-    spark = ids_df.sparkSession
-    sym_tbl = spark.createDataFrame(
-        [(i + 1, s) for i, s in enumerate(symbols)],
-        "sym_id long, sym string",
-    )
-    tok = (
-        ids_df.select(
-            F.col(id_col), F.posexplode(ids_col).alias("tpos", "sym_id")
-        )
-        .join(F.broadcast(sym_tbl), "sym_id", "left")
-        .withColumn(
-            "sym",
-            F.when(
-                F.col("sym").isNull(), F.expr(bad.format(i="sym_id"))
-            ).otherwise(F.col("sym")),
-        )
-    )
-    dec = tok.groupBy(id_col).agg(
-        F.expr(
-            "array_join(transform(array_sort(collect_list("
-            "struct(tpos, sym))), x -> x.sym), '')"
-        ).alias(out_col)
-    )
-    return ids_df.select(id_col).join(dec, id_col, "left").select(
-        F.col(id_col), F.coalesce(out_col, F.lit("")).alias(out_col)
+    bad = F.expr(
+        "raise_error(concat('bpe_decode: unknown token id ', "
+        f"coalesce(cast({first_bad} as string), 'NULL'), "
+        "' (vocab/merges mismatch?)'))"
+    ).cast("string")
+    return ids_df.select(
+        F.col(id_col),
+        F.coalesce(F.pandas_udf(_dec, "string")(ids_col), bad).alias(
+            out_col
+        ),
     )
 
 

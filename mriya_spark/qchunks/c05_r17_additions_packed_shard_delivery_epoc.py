@@ -217,8 +217,8 @@ def stream_decode_fixed_vocab_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (decode(encode(doc)) == pretokenized words joined with '');
     an unknown id still FAILS LOUD mid-stream (``bpe_decode``'s
     raise_error guard rides into every micro-batch plan). Plan: per
-    batch one scan-local map-literal decode (vocab under the inline
-    knee) + the replay-idempotence anti-join + an append-only write."""
+    batch one scan-local decode UDF (vocab in its closure) + the
+    replay-idempotence anti-join + an append-only write."""
     import uuid as _uuid
 
     from mriya_spark import streaming as S

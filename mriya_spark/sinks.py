@@ -21,9 +21,6 @@ side effect. That keeps the data plane lazy and oracle-checkable.
 
 from __future__ import annotations
 
-import threading
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -582,41 +579,6 @@ def _shard_stats(df: DataFrame, key_col: str) -> dict:
     return {int(r["shard"]): (int(r["n"]), int(r["x"])) for r in rows}
 
 
-_AQE_OFF_LOCK = threading.RLock()
-
-
-@contextmanager
-def _aqe_off(spark, shuffle_partitions: int = 8):
-    """Run the enclosed actions with AQE off and the shuffle-partition
-    count clamped to ``shuffle_partitions``, restoring both after.
-    Its one caller is ``_shard_row_stats``, whose reduce side is
-    ``num_shards`` rows however big the export: AQE's runtime
-    re-planning buys nothing there but splits the single collect into
-    one job per query stage, and a scale-sized partition count fans the
-    tiny reduce into waves of ~2 ms tasks where launch overhead
-    dominates. Results are partition- and AQE-invariant.
-
-    The conf is SESSION-GLOBAL. The reentrant lock serializes
-    overlapping scopes from concurrent driver threads, so a nested or
-    overlapping pair cannot restore the wrong saved value; an
-    unrelated query planned on the same session while a scope is open
-    still sees the clamp (results unchanged, a corpus-scale query may
-    run slower). Callers that submit from a thread pool either use
-    their own ``spark.newSession()`` or accept that window."""
-    with _AQE_OFF_LOCK:
-        saved_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        saved_sp = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions)
-        )
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", saved_aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", saved_sp)
-
-
 def _shard_row_stats(
     df: DataFrame, cols: list, *, null_flags: bool = True
 ) -> dict:
@@ -640,22 +602,19 @@ def _shard_row_stats(
         rh = F.xxhash64(*parts)
     else:
         rh = F.xxhash64(*[F.col(c) for c in cols])
-    # the aggregates partial-combine map-side, whose partitioning comes
-    # from the input scan; only the num_shards-row reduce is clamped
-    with _aqe_off(df.sparkSession):
-        rows = (
-            df.withColumn("__rh", rh)
-            .groupBy("shard")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.expr("bit_xor(__rh)").alias("x"),
-                # decimal(28,0) operand -> Spark sums in decimal(38,0):
-                # headroom for ~1e18 same-sign 64-bit hashes per shard
-                # (decimal(20,0) would cap at ~1e11 adversarial rows)
-                F.sum(F.col("__rh").cast("decimal(28,0)")).alias("s"),
-            )
-            .collect()
+    rows = (
+        df.withColumn("__rh", rh)
+        .groupBy("shard")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("bit_xor(__rh)").alias("x"),
+            # decimal(28,0) operand -> Spark sums in decimal(38,0):
+            # headroom for ~1e18 same-sign 64-bit hashes per shard
+            # (decimal(20,0) would cap at ~1e11 adversarial rows)
+            F.sum(F.col("__rh").cast("decimal(28,0)")).alias("s"),
         )
+        .collect()
+    )
     return {
         int(r["shard"]): (int(r["n"]), int(r["x"]), int(r["s"]))
         for r in rows

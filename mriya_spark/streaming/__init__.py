@@ -1610,8 +1610,6 @@ def stream_decode_fixed_vocab(
     ids_stream: DataFrame,
     target_path: str,
     vocab: list,
-    *,
-    max_inline_syms: int | None = None,
 ) -> str:
     """GENERATION-side twin of ``stream_encode_fixed_vocab`` (r16
     judge directive 8): micro-batches of encoded id sequences are
@@ -1627,10 +1625,10 @@ def stream_decode_fixed_vocab(
     REPLAY-IDEMPOTENT like the encode side: each batch anti-joins the
     target's doc_ids before appending (foreachBatch is at-least-once),
     and the replay guard re-raises any AnalysisException other than
-    PATH_NOT_FOUND. Per-batch cost: the vocab map rides the plan
-    (scan-local below the inline knee, broadcast join above it) plus
-    one column-pruned read of the target's doc_id column; the write
-    is append-only parquet."""
+    PATH_NOT_FOUND. Per-batch cost: one scan-local decode (the vocab
+    rides the decode UDF's closure, at any vocab size) plus one
+    column-pruned read of the target's doc_id column; the write is
+    append-only parquet."""
     from mriya_spark.ops.text import bpe_decode
 
     spark = ids_stream.sparkSession
@@ -1638,7 +1636,7 @@ def stream_decode_fixed_vocab(
     validated = [False]
 
     def decode_batch(batch: DataFrame, epoch_id: int) -> None:
-        out = bpe_decode(batch, vocab, max_inline_syms=max_inline_syms)
+        out = bpe_decode(batch, vocab)
         # shared guard: explicit-schema read + one-time target schema
         # validation (see _read_seen_doc_ids)
         seen = _read_seen_doc_ids(batch, target_path, validated)

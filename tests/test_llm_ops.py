@@ -2023,8 +2023,10 @@ def test_bpe_vocab_save_load_and_decode_roundtrip(spark, tmp_path):
     assignment bpe_token_ids uses), it survives save/load, and
     bpe_decode inverts bpe_token_ids — each doc decodes to its
     pretokenized words joined with '' (BPE only ever concatenates
-    characters within a word), on BOTH the map-literal and the
-    forced broadcast decode paths."""
+    characters within a word) and to the pure-Python id -> symbol
+    reference. Past 4096 symbols (a range the retired map-literal
+    path never decoded) the one UDF path is equally exact and stays
+    scan-local."""
     from mriya_spark.ops.text import (
         bpe_decode,
         bpe_load_vocab,
@@ -2052,14 +2054,31 @@ def test_bpe_vocab_save_load_and_decode_roundtrip(spark, tmp_path):
         )
         for i, t in enumerate(texts)
     }
-    for forced_limit in (None, 0):  # literal path, broadcast path
-        dec = {
-            r.doc_id: r.decoded
-            for r in bpe_decode(
-                ids, syms, max_inline_syms=forced_limit
-            ).collect()
-        }
-        assert dec == want, forced_limit
+    dec = {r.doc_id: r.decoded for r in bpe_decode(ids, syms).collect()}
+    assert dec == want
+    ref = {
+        r.doc_id: "".join(syms[i - 1] for i in r.token_ids)
+        for r in ids.collect()
+    }
+    assert dec == ref
+
+    import random
+
+    rng = random.Random(0)
+    big = [f"s{i}" for i in range(1, 5001)]
+    rows = [
+        (d, [rng.randint(1, len(big)) for _ in range(40)]) for d in range(6)
+    ]
+    rows += [(6, [len(big), 4097, 1]), (7, []), (8, None)]
+    bdf = spark.createDataFrame(
+        rows, "doc_id long, token_ids array<bigint>"
+    )
+    bdec = bpe_decode(bdf, big)
+    assert {r.doc_id: r.decoded for r in bdec.collect()} == {
+        d: "".join(big[i - 1] for i in (t or [])) for d, t in rows
+    }
+    plan = bdec._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "element_at(map(" not in plan, plan
 
 
 def test_bpe_unicode_pretokenizer(spark):
@@ -2239,23 +2258,28 @@ def test_bpe_fixed_vocab_ids_are_corpus_independent(spark):
 
 def test_bpe_decode_fails_loud_on_unknown_ids(spark):
     """r13 ADVICE: a vocab/merges mismatch must not decode to silently
-    truncated text — an id outside 1..len(symbols) raises on both the
-    map-literal and the broadcast decode paths; NULL ids input decodes
-    to '' on both."""
+    truncated text — an id outside 1..len(symbols), a NULL element
+    included, raises and names the first such id; NULL ids input
+    decodes to ''."""
     from mriya_spark.ops.text import bpe_decode
 
     syms = ["a", "b"]
-    bad = spark.createDataFrame(
-        [(0, [1, 99])], "doc_id long, token_ids array<bigint>"
-    )
-    null_ids = spark.createDataFrame(
-        [(0, None)], "doc_id long, token_ids array<bigint>"
-    )
-    for lim in (None, 0):
-        with pytest.raises(Exception, match="unknown token id"):
-            bpe_decode(bad, syms, max_inline_syms=lim).collect()
-        got = bpe_decode(null_ids, syms, max_inline_syms=lim).collect()
-        assert got[0].decoded == "", lim
+    schema = "doc_id long, token_ids array<bigint>"
+    for bad_ids, named in (
+        ([1, 99], "99"),
+        ([1, None], "NULL"),
+        ([0], "0"),
+        ([-1], "-1"),
+        ([len(syms) + 1], str(len(syms) + 1)),
+    ):
+        bad = spark.createDataFrame([(0, bad_ids)], schema)
+        with pytest.raises(
+            Exception,
+            match=rf"unknown token id {named} \(vocab/merges mismatch\?\)",
+        ):
+            bpe_decode(bad, syms).collect()
+    null_ids = spark.createDataFrame([(0, None)], schema)
+    assert bpe_decode(null_ids, syms).collect()[0].decoded == ""
 
 
 def test_bpe_load_vocab_rejects_corrupt_symbols(spark, tmp_path):

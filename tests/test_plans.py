@@ -756,12 +756,13 @@ def test_bpe_pack_bcast_ships_symbols_broadcast_not_inlined(spark, queries):
     """r12 gate query (r11 judge directive 5): the word->ids table
     must arrive as a BroadcastExchange, NOT a folded map literal — a
     30k-merge production vocab as a map literal costs 60+s of driver
-    plan build and a multi-MB constant per task (measured r12, see the
-    ops/text.py BPE_INLINE_MAX_SYMS comment). Budget: 3 exchanges on
-    the audited frame, the same as ``tokenizer_bpe_pack`` (encode has
-    one path at every vocabulary size; the old past-the-gate path paid
-    5). A 4th exchange or a vanished BroadcastExchange means the word
-    table stopped being a broadcast."""
+    plan build and a multi-MB constant per task (measured r12: a
+    string-valued map literal took 0.4s at 4096 entries, 2s at 16384,
+    62s at 65536). Budget: 3 exchanges on the audited frame, the same
+    as ``tokenizer_bpe_pack`` (encode has one path at every vocabulary
+    size; the old past-the-gate path paid 5). A 4th exchange or a
+    vanished BroadcastExchange means the word table stopped being a
+    broadcast."""
     audit = _audit(queries["tokenizer_bpe_pack_bcast"](spark, SF))
     assert audit["shuffles"] == 3
     assert audit["broadcasts"] >= 1
@@ -867,10 +868,10 @@ def test_registry_outputs_are_primitive_only(spark, queries):
     # concurrent builders of one content-keyed index could race), and
     # the e2e pipelines that compose them. The BPE trainers change no
     # session conf (they learn merges on the driver), the shard sinks'
-    # _aqe_off is lock-serialized, and the catalog's nanosAsLong set is
-    # idempotent, so the threaded gates are safe. Session conf is
-    # snapshotted and checked after, so a leaked clamp would fail HERE,
-    # not flake downstream.
+    # checksum aggregate runs under the caller's conf and writes none,
+    # and the catalog's nanosAsLong set is idempotent, so the threaded
+    # gates are safe. Session conf is snapshotted and checked after, so
+    # a leaked clamp would fail HERE, not flake downstream.
     from concurrent.futures import ThreadPoolExecutor
 
     conf_before = {
