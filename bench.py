@@ -216,13 +216,16 @@ def main() -> None:
 
     # Each query runs once cold then WARM_RUNS times warm. The cold
     # run carries one-time plan analysis + whole-stage codegen
-    # compilation (~2s/query shape, paid once per JVM no matter the
-    # data size); the warm runs are the steady-state cost that scales
-    # with data. Headline = MEDIAN of the warm runs: single-shot warm
-    # timings at this scale carry ±2s session noise (r5 verdict:
-    # pipeline_corpus_curation_lsh swung 3.4->6.2->2.6s across rounds
-    # with no code change), so round-over-round comparisons need a
-    # robust statistic. All raw runs are reported so nothing is hidden.
+    # compilation; the warm runs are the steady-state cost that scales
+    # with data. Compilation is paid once per JVM only while the
+    # query's generated classes stay in Spark's codegen cache
+    # (`spark.sql.codegen.cache.maxEntries`, sized in get_spark);
+    # compiles[name] counts the compiles of each run, so a warm run
+    # that recompiles shows as a non-zero entry. Headline = MEDIAN of
+    # the warm runs: single-shot warm timings at this scale carry ±2s
+    # session noise (r5 verdict: pipeline_corpus_curation_lsh swung
+    # 3.4->6.2->2.6s across rounds with no code change), so
+    # round-over-round comparisons need a robust statistic. All raw runs are reported so nothing is hidden.
     # 5 warm runs (was 3, r7): the r7 host showed single-run spikes of
     # 3-8x (2.4s -> 18s on pipeline_corpus_curation_lsh with no code
     # change, confirmed identical on the r6 tree) — a median of 3 still
@@ -232,8 +235,11 @@ def main() -> None:
     steady: dict[str, float] = {}
     cold: dict[str, float] = {}
     runs: dict[str, list[float]] = {}
+    compiles: dict[str, list[int]] = {}
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     for name in names:
         timings: list[float] = []
+        counts: list[int] = []
         for _run in range(1 + warm_runs):
             # drop data cached by operators' internal persist() calls —
             # identical logical plans would otherwise hit the cache and
@@ -242,9 +248,11 @@ def main() -> None:
             # so no operator's cache scope leaks into the next query.
             release_caches()
             spark.catalog.clearCache()
+            c0 = codegen.METRIC_COMPILATION_TIME().getCount()
             t0 = time.time()
             qs[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
             timings.append(round(time.time() - t0, 3))
+            counts.append(codegen.METRIC_COMPILATION_TIME().getCount() - c0)
         cold[name] = timings[0]
         warm = sorted(timings[1:])
         if not warm:  # WARM_RUNS=0: cold-only diagnostic mode
@@ -256,6 +264,7 @@ def main() -> None:
                 (warm[len(warm) // 2 - 1] + warm[len(warm) // 2]) / 2, 3
             )
         runs[name] = timings
+        compiles[name] = counts
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     payload = {
@@ -269,6 +278,9 @@ def main() -> None:
                 # runs[name] = [cold, warm1, warm2, ...]; queries[name]
                 # is the median of the warm entries
                 "runs": runs,
+                # compiles[name] = generated classes compiled in each of
+                # those runs, in the same order
+                "compiles": compiles,
                 "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
                 # r4 plan-level fix: similarity_ann_ivf probes the
                 # MATERIALIZED index (train-once via _ivf_index_for,

@@ -39,6 +39,15 @@ def get_spark(
       with the DuckDB oracle (naive UTC timestamps).
     - parquet timestamps are read as-is (fixtures are timestamp[ms]/[ns];
       Spark truncates ns->us losslessly for these fixtures).
+    - codegen class cache of 2000 entries: a pipeline that re-runs its
+      plan shapes (an export iteration, every stream micro-batch)
+      needs ~134 generated classes, and Spark's default of 100 makes
+      the LRU evict each class just before its next use, so every run
+      recompiles all of them. Check with
+      ``CodegenMetrics.METRIC_COMPILATION_TIME().getCount()``, which
+      stays flat across warm runs. The conf is static: a session this
+      function did not build (``getOrCreate`` on a running context)
+      keeps 100 entries, stays correct and pays the recompiles.
     """
     _cache_dir()  # establish the 0700 cache root before Spark writes under it
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -70,7 +79,7 @@ def get_spark(
             "spark.driver.extraJavaOptions",
             f"-Dderby.system.home={os.path.join(_cache_root(), 'derby')}",
         )
-        .config("spark.sql.shuffle.spill.compress", "true")
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

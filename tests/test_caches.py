@@ -147,3 +147,34 @@ def test_ivf_query_still_correct_after_cache_move(spark, ivf_sandbox):
     rows = df.collect()
     assert len(rows) > 0
     assert {r.query_id for r in rows} == {0, 1, 2, 3, 4}
+
+
+def test_warm_pipeline_compiles_no_generated_code(spark):
+    """Spark's codegen class cache must hold a pipeline's working set.
+    These three queries, chained, need more generated classes than
+    Spark's default 100-entry LRU holds, so under that default every
+    round recompiles its classes (116 compiles per round on sf0.001).
+    The session from ``get_spark`` sizes the cache so a warm round
+    compiles nothing."""
+    from mriya_spark.caching import release_caches
+
+    names = (
+        "pipeline_training_export",
+        "stream_shard_delivery",
+        "tokenizer_bpe_pack",
+    )
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def one_round():
+        for name in names:
+            # as bench.py does between queries: no cached read hides a
+            # query's own plan
+            release_caches()
+            spark.catalog.clearCache()
+            df = Q.REGISTRY[name].fn(spark, SF_SMOKE)
+            df.write.format("noop").mode("overwrite").save()
+
+    one_round()
+    before = codegen.METRIC_COMPILATION_TIME().getCount()
+    one_round()
+    assert codegen.METRIC_COMPILATION_TIME().getCount() - before == 0
