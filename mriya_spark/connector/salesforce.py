@@ -50,8 +50,7 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
-#: SOAP DML chunk envelope (reference `data_connector.py:23` QUERY_LIMIT).
-DML_CHUNK_SIZE = 200
+from mriya_spark.connector.transport import DML_CHUNK_SIZE
 
 #: rows per read page (reference: ≤200/queryMore page,
 #: `data_connector.py:62-66`; a page here maps to one Spark partition,

@@ -38,7 +38,8 @@ import urllib.request
 from dataclasses import dataclass
 from typing import Iterator, Sequence
 
-#: SOAP DML chunk envelope (reference `data_connector.py:23`).
+#: SOAP DML chunk envelope (reference `data_connector.py:23` QUERY_LIMIT),
+#: enforced by both the mock org (`salesforce.py`) and the HTTP transport.
 DML_CHUNK_SIZE = 200
 
 #: Token cache location. The reference keeps its session file in the

@@ -13,6 +13,10 @@ training-data pipeline needs. Design per op:
                    The scale path: cost is O(candidates), not O(n²);
                    everything is built-in array expressions (xxhash64,
                    transform, array_min) — no Python in the row path.
+                   Written once (``_lsh_self_pairs``,
+                   ``_lsh_cross_pairs``); a hash family is only a band
+                   function, xxhash64 in production and md5 for the
+                   oracle-checkable ``*_portable`` twins.
 - ``simhash``    — 64-bit SimHash + multi-block (Manku-style) hamming
                    blocking: 16-bit block keys by default, combination
                    keys for larger budgets.
@@ -216,11 +220,22 @@ def _jaccard_pairs_from_cached(
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .dropDuplicates(["doc_a", "doc_b"])
     )
+    return _jaccard_verify(cand, sh, sh, threshold=threshold)
+
+
+def _jaccard_verify(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame, *, threshold: float
+) -> DataFrame:
+    """Exact-Jaccard verify of candidate ``(doc_a, doc_b)`` pairs:
+    each side fetches its ``shingles`` array from ``sh_a`` / ``sh_b``
+    (``(doc_id, shingles)`` frames; callers hand in persisted ones) and
+    a pair is kept at jaccard >= ``threshold``. Returns
+    ``(doc_a, doc_b, jaccard)``."""
     verified = (
-        cand.join(sh.select(F.col("doc_id").alias("doc_a"),
-                            F.col("shingles").alias("sh_a")), on="doc_a")
-        .join(sh.select(F.col("doc_id").alias("doc_b"),
-                        F.col("shingles").alias("sh_b")), on="doc_b")
+        cand.join(sh_a.select(F.col("doc_id").alias("doc_a"),
+                              F.col("shingles").alias("sh_a")), on="doc_a")
+        .join(sh_b.select(F.col("doc_id").alias("doc_b"),
+                          F.col("shingles").alias("sh_b")), on="doc_b")
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
     union = F.size("sh_a") + F.size("sh_b") - inter
@@ -304,10 +319,17 @@ def minhash_lsh_pairs_from_shingles(
     ``sh`` is referenced three times (signature build + both sides of
     the verify join) — callers should hand in a persisted frame.
     """
-    sig = sh.select(
-        "doc_id",
-        minhash_signature("shingles", num_perm=num_perm, seed=seed).alias("sig"),
+    return _lsh_self_pairs(
+        sh, _xxhash_bands(num_perm=num_perm, bands=bands, seed=seed),
+        threshold=threshold,
     )
+
+
+def _lsh_self_pairs(sh: DataFrame, band_fn, *, threshold: float) -> DataFrame:
+    """The MinHash-LSH self-pair pipeline for any hash family:
+    ``band_fn`` maps ``(doc_id, shingles)`` to ``(doc_id, band,
+    bucket)`` rows; pairs sharing a cell are verified on exact
+    Jaccard."""
     # band rows are (doc_id, band, bucket) ONLY — the shingle arrays do
     # not ride the 16x explode or the bucket shuffle; they re-join just
     # for the (few) surviving candidate pairs. Persisted: the bucket
@@ -317,39 +339,54 @@ def minhash_lsh_pairs_from_shingles(
     # difference between 1x and 4x signature compute. Scoped: joins the
     # caller's cache_scope when nested, else released at the next
     # scoped build (mriya_spark.caching).
-    banded = scoped_persist(_banded(sig, num_perm=num_perm, bands=bands))
+    banded = scoped_persist(band_fn(sh))
+    cand = _band_candidates(banded, banded, F.col("a.doc_id") < F.col("b.doc_id"))
+    return _jaccard_verify(cand, sh, sh, threshold=threshold)
 
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
+
+def _lsh_cross_pairs(
+    sh_c: DataFrame, sh_r: DataFrame, band_fn, *, threshold: float,
+    reference: DataFrame,
+) -> DataFrame:
+    """Bipartite MinHash-LSH pairs ``(doc_a from sh_c, doc_b from
+    sh_r)``: both sides band with ``band_fn``, candidates come from the
+    (band, bucket) equi-join, exact Jaccard verifies.
+
+    The reference side (an eval set: orders of magnitude smaller than
+    the training corpus) is broadcast when ``reference``'s leaf scan
+    fits the session broadcast threshold, so the corpus-side band rows
+    and shingle arrays never shuffle for candidate gen or verify. Past
+    the threshold the hint is withheld (an explicit hint is honored
+    unconditionally — hinting an unbounded side is a driver OOM) and
+    AQE's runtime conversion takes over. The gate reads the leaf scan
+    (the only sound stat): band rows are 3 narrow columns x bands per
+    doc and the shingle arrays are ~8B/token — both within a small
+    constant of the reference's on-disk bytes."""
+    from mriya_spark.ops.relational import (
+        broadcast_threshold_bytes,
+        estimated_size_bytes,
     )
-    verified = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")),
-            on="doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
-            on="doc_b",
-        )
+
+    ref_small = estimated_size_bytes(reference) <= broadcast_threshold_bytes(reference)
+    br = band_fn(sh_r)
+    cand = _band_candidates(band_fn(sh_c), F.broadcast(br) if ref_small else br)
+    return _jaccard_verify(
+        cand, sh_c, F.broadcast(sh_r) if ref_small else sh_r, threshold=threshold
     )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
+
+
+def _band_candidates(a: DataFrame, b: DataFrame, cond: Column | None = None) -> DataFrame:
+    """Distinct ``(doc_a, doc_b)`` pairs of band rows that share a
+    (band, bucket) cell — the LSH candidate equi-join, cost
+    O(collisions). ``cond`` adds a predicate over the ``a``/``b``
+    aliases (the self-pair ``a.doc_id < b.doc_id``)."""
+    on = (F.col("a.band") == F.col("b.band")) & (F.col("a.bucket") == F.col("b.bucket"))
+    if cond is not None:
+        on = on & cond
     return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+        a.alias("a").join(b.alias("b"), on)
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .dropDuplicates(["doc_a", "doc_b"])
     )
 
 
@@ -386,22 +423,37 @@ def ngram_jaccard_pairs_bipartite(
     )
 
 
-def _banded(sig_df: DataFrame, *, num_perm: int, bands: int) -> DataFrame:
-    """(doc_id, band, bucket) rows from a ``(doc_id, sig)`` frame."""
+def _banded(
+    sig_df: DataFrame, *, num_perm: int, bands: int, bucket: str = "xxhash64({})"
+) -> DataFrame:
+    """(doc_id, band, bucket) rows from a ``(doc_id, sig)`` frame.
+    ``bucket`` wraps each band's ``'_'``-joined signature slice: an
+    xxhash64 of it by default, the slice itself (``"{}"``, injective)
+    for the md5 family."""
     rows_per_band = num_perm // bands
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bucket', xxhash64(concat_ws('_', {parts})))".format(
-            b=bidx,
-            parts=", ".join(
-                f"cast(element_at(sig, {bidx * rows_per_band + r + 1}) as string)"
-                for r in range(rows_per_band)
-            ),
+    structs = []
+    for bidx in range(bands):
+        band_slice = "concat_ws('_', {})".format(", ".join(
+            f"cast(element_at(sig, {bidx * rows_per_band + r + 1}) as string)"
+            for r in range(rows_per_band)
+        ))
+        structs.append(
+            f"named_struct('band', {bidx}, 'bucket', {bucket.format(band_slice)})"
         )
-        for bidx in range(bands)
-    )
+    band_structs = ", ".join(structs)
     return sig_df.select(
         "doc_id", F.explode(F.expr(f"array({band_structs})")).alias("bb")
     ).select("doc_id", "bb.band", "bb.bucket")
+
+
+def _xxhash_bands(*, num_perm: int, bands: int, seed: int):
+    """Band function of the production hash family: xxhash64 MinHash
+    signature (``minhash_signature``) over xxhash64 shingle hashes,
+    xxhash64 band buckets."""
+    def band_fn(sh: DataFrame) -> DataFrame:
+        sig = minhash_signature("shingles", num_perm=num_perm, seed=seed)
+        return _banded(sh.select("doc_id", sig.alias("sig")), num_perm=num_perm, bands=bands)
+    return band_fn
 
 
 def decontaminate(
@@ -425,75 +477,20 @@ def decontaminate(
     ``method='minhash_lsh'`` (the scale path): both sides band their
     MinHash signatures; candidates come from an equi-join on
     (band, bucket) — cost O(collisions) — then exact Jaccard verifies
-    on shingle arrays. The reference side (an eval set: orders of
-    magnitude smaller than the training corpus) is broadcast when its
-    leaf scan fits the session broadcast threshold, so the corpus-side
-    banded rows and shingle arrays never shuffle for candidate gen or
-    verify; past the threshold the hint is withheld (an explicit hint
-    is honored unconditionally — hinting an unbounded side is a driver
-    OOM) and AQE's runtime conversion takes over. ``'exact'`` uses the
-    full bipartite inverted-index join (oracle twin). Returns the clean
-    corpus rows unchanged.
+    on shingle arrays, with the reference side broadcast when its leaf
+    scan fits the session threshold (``_lsh_cross_pairs``). ``'exact'``
+    uses the full bipartite inverted-index join (oracle twin). Returns
+    the clean corpus rows unchanged.
     """
-    from mriya_spark.ops.relational import (
-        broadcast_threshold_bytes,
-        estimated_size_bytes,
-    )
-
     with cache_scope():
         sh_c = scoped_persist(_with_shingle_hashes(corpus, text_col, n))
         sh_r = scoped_persist(_with_shingle_hashes(reference, text_col, n))
         if method == "exact":
             pairs = ngram_jaccard_pairs_bipartite(sh_c, sh_r, threshold=threshold)
         elif method == "minhash_lsh":
-            # gate on the reference LEAF scan (the only sound stat):
-            # banded rows are 3 narrow columns x bands per doc and the
-            # shingle arrays are ~8B/token — both within a small
-            # constant of the reference's on-disk bytes.
-            ref_small = estimated_size_bytes(reference) <= broadcast_threshold_bytes(
-                reference
-            )
-            sig_c = sh_c.select(
-                "doc_id", minhash_signature("shingles", num_perm=num_perm, seed=seed).alias("sig")
-            )
-            sig_r = sh_r.select(
-                "doc_id", minhash_signature("shingles", num_perm=num_perm, seed=seed).alias("sig")
-            )
-            bc = _banded(sig_c, num_perm=num_perm, bands=bands)
-            br = _banded(sig_r, num_perm=num_perm, bands=bands)
-            if ref_small:
-                br = F.broadcast(br)
-            cand = (
-                bc.alias("a")
-                .join(
-                    br.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket")),
-                )
-                .select(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-                .dropDuplicates(["doc_a", "doc_b"])
-            )
-            ref_shingles = sh_r.select(
-                F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")
-            )
-            if ref_small:
-                ref_shingles = F.broadcast(ref_shingles)
-            verified = (
-                cand.join(
-                    sh_c.select(F.col("doc_id").alias("doc_a"),
-                                F.col("shingles").alias("sh_a")),
-                    on="doc_a",
-                )
-                .join(ref_shingles, on="doc_b")
-            )
-            inter = F.size(F.array_intersect("sh_a", "sh_b"))
-            union = F.size("sh_a") + F.size("sh_b") - inter
-            pairs = (
-                verified.withColumn("jaccard", F.round(inter / union, 6))
-                .filter(F.col("jaccard") >= threshold)
+            pairs = _lsh_cross_pairs(
+                sh_c, sh_r, _xxhash_bands(num_perm=num_perm, bands=bands, seed=seed),
+                threshold=threshold, reference=reference,
             )
         else:
             raise ValueError(f"unknown method {method!r}: exact|minhash_lsh")
@@ -1054,40 +1051,36 @@ def decontaminate_ngram_bloom(
         return corpus.join(dirty, on="doc_id", how="left_anti")
 
 
-def _portable_minhash_exprs(num_perm: int, bands: int) -> tuple[str, str]:
-    """The md5-family signature and band-struct SQL expression strings
-    shared by the portable MinHash twins — one definition, so the pair
-    form, bipartite form, and the oracle constants in ``queries.py``
-    cannot drift (r7 review finding). Expects an ``__sh`` array<string>
-    shingle column and emits a ``__sig`` array for the band structs.
-    """
-    rows_per_band = num_perm // bands
-    sig_exprs = ", ".join(
-        "array_min(transform(__sh, s -> "
+def _md5_bands(*, num_perm: int, bands: int):
+    """Band function of the engine-portable md5 hash family, for
+    array<string> ``shingles``: the i-th signature row is the minimum
+    over shingles of ``md5('<i>:' || shingle)`` truncated to 60 bits,
+    and a band's bucket is its ``'_'``-joined signature slice itself
+    (injective, no second hash). Any engine with md5 computes the same
+    band rows, so the candidate set and the verified pairs of the
+    shared LSH pipeline can be hash-checked against a SQL oracle. The
+    DuckDB oracles write the family out on their own
+    (``_MINHASH_PORTABLE_PERMS`` and ``_MINHASH_BAND_MATCH`` in
+    ``qchunks/c00_2_1_scans.py``): nothing ties them to this function,
+    so a change here must be mirrored there."""
+    sig = ", ".join(
+        "array_min(transform(shingles, s -> "
         f"cast(conv(substr(md5(concat('{i}:', s)), 1, 15), 16, 10) as bigint)))"
         for i in range(num_perm)
     )
-    band_structs = ", ".join(
-        "named_struct('band', {b}, 'bucket', concat_ws('_', {parts}))".format(
-            b=b,
-            parts=", ".join(
-                f"cast(element_at(__sig, {b * rows_per_band + r + 1}) as string)"
-                for r in range(rows_per_band)
-            ),
+
+    def band_fn(sh: DataFrame) -> DataFrame:
+        return _banded(
+            sh.select("doc_id", F.expr(f"array({sig})").alias("sig")),
+            num_perm=num_perm, bands=bands, bucket="{}",
         )
-        for b in range(bands)
-    )
-    return sig_exprs, band_structs
+    return band_fn
 
 
-def _banded_portable_rows(df: DataFrame, sig_exprs: str, band_structs: str) -> DataFrame:
-    """(doc_id, band, bucket) rows from a ``(doc_id, __sh)`` frame via
-    the portable expression strings."""
-    return (
-        df.withColumn("__sig", F.expr(f"array({sig_exprs})"))
-        .select("doc_id", F.explode(F.expr(f"array({band_structs})")).alias("bb"))
-        .select("doc_id", "bb.band", "bb.bucket")
-    )
+def _md5_shingled(df: DataFrame, text_col: str, n: int) -> DataFrame:
+    """Persisted ``(doc_id, shingles)`` with array<string> word
+    shingles, the md5 family's input."""
+    return scoped_persist(df.select("doc_id", word_shingles(text_col, n).alias("shingles")))
 
 
 def minhash_lsh_pairs_portable(
@@ -1099,14 +1092,11 @@ def minhash_lsh_pairs_portable(
     bands: int = 16,
     threshold: float = 0.6,
 ) -> DataFrame:
-    """MinHash-LSH near-dup pairs in the ENGINE-PORTABLE form: the
-    per-shingle permuted hash is ``md5('<i>:' || shingle_string)``
-    truncated to 60 bits, so any engine with md5 computes the
-    identical signatures, band buckets, candidate set, and final
-    verified pairs — the oracle-checkable twin of
-    ``minhash_lsh_pairs`` (which keeps the faster xxhash64 family for
-    production; same pipeline shape, same banding, same exact-Jaccard
-    verify, different hash family only).
+    """MinHash-LSH near-dup pairs in the ENGINE-PORTABLE md5 hash
+    family (``_md5_bands``) — the oracle-checkable twin of
+    ``minhash_lsh_pairs``. Only the band function differs: the band
+    join and the exact-Jaccard verify are the production code path
+    (``_lsh_self_pairs``).
 
     The DuckDB oracle brute-forces all pairs and keeps those agreeing
     on >= 1 band; since banding is a deterministic function of the
@@ -1117,62 +1107,10 @@ def minhash_lsh_pairs_portable(
     pairs its math says it computes).
     """
     with cache_scope():
-        sh = scoped_persist(
-            df.select("doc_id", word_shingles(text_col, n).alias("__sh"))
+        return _lsh_self_pairs(
+            _md5_shingled(df, text_col, n),
+            _md5_bands(num_perm=num_perm, bands=bands), threshold=threshold,
         )
-        return minhash_lsh_pairs_portable_from_shingles(
-            sh, num_perm=num_perm, bands=bands, threshold=threshold
-        )
-
-
-def minhash_lsh_pairs_portable_from_shingles(
-    sh: DataFrame,
-    *,
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Portable LSH pairs from a pre-shingled ``(doc_id, __sh)``
-    frame (array<string> shingles) — the md5-family analogue of
-    ``minhash_lsh_pairs_from_shingles``, shared by the batch twin
-    above and the streaming portable ingest. ``sh`` is referenced
-    three times; callers hand in a persisted frame."""
-    sig_exprs, band_structs = _portable_minhash_exprs(num_perm, bands)
-    banded = scoped_persist(
-        _banded_portable_rows(sh, sig_exprs, band_structs)
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
-    verified = (
-        cand.join(
-            sh.select(F.col("doc_id").alias("doc_a"), F.col("__sh").alias("sh_a")),
-            on="doc_a",
-        )
-        .join(
-            sh.select(F.col("doc_id").alias("doc_b"), F.col("__sh").alias("sh_b")),
-            on="doc_b",
-        )
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        verified.withColumn("jaccard", F.round(inter / union, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
-    )
 
 
 def decontaminate_minhash_portable(
@@ -1187,68 +1125,17 @@ def decontaminate_minhash_portable(
 ) -> DataFrame:
     """Bipartite (corpus-vs-reference) MinHash-LSH decontamination in
     the engine-portable md5 hash family — the oracle-checkable twin of
-    ``decontaminate(method='minhash_lsh')``, same determinism argument
+    ``decontaminate(method='minhash_lsh')``: same band join, broadcast
+    gate and verify (``_lsh_cross_pairs``), same determinism argument
     as ``minhash_lsh_pairs_portable``. Returns the clean corpus rows.
-    The reference side broadcasts only when its leaf scan fits the
-    session threshold (same gate as ``decontaminate``).
     """
-    from mriya_spark.ops.relational import (
-        broadcast_threshold_bytes,
-        estimated_size_bytes,
-    )
-
-    ref_small = estimated_size_bytes(reference) <= broadcast_threshold_bytes(
-        reference
-    )
-
-    def _maybe_bc(d: DataFrame) -> DataFrame:
-        return F.broadcast(d) if ref_small else d
-
-    sig_exprs, band_structs = _portable_minhash_exprs(num_perm, bands)
-
-    def _banded_portable(df: DataFrame) -> DataFrame:
-        return _banded_portable_rows(df, sig_exprs, band_structs)
-
     with cache_scope():
-        sh_c = scoped_persist(
-            corpus.select("doc_id", word_shingles(text_col, n).alias("__sh"))
+        pairs = _lsh_cross_pairs(
+            _md5_shingled(corpus, text_col, n), _md5_shingled(reference, text_col, n),
+            _md5_bands(num_perm=num_perm, bands=bands),
+            threshold=threshold, reference=reference,
         )
-        sh_r = scoped_persist(
-            reference.select("doc_id", word_shingles(text_col, n).alias("__sh"))
-        )
-        cand = (
-            _banded_portable(sh_c).alias("a")
-            .join(
-                _maybe_bc(_banded_portable(sh_r)).alias("b"),
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bucket") == F.col("b.bucket")),
-            )
-            .select(
-                F.col("a.doc_id").alias("doc_a"),
-                F.col("b.doc_id").alias("doc_b"),
-            )
-            .dropDuplicates(["doc_a", "doc_b"])
-        )
-        verified = (
-            cand.join(
-                sh_c.select(F.col("doc_id").alias("doc_a"), F.col("__sh").alias("sh_a")),
-                on="doc_a",
-            )
-            .join(
-                _maybe_bc(
-                    sh_r.select(F.col("doc_id").alias("doc_b"), F.col("__sh").alias("sh_b"))
-                ),
-                on="doc_b",
-            )
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b"))
-        union = F.size("sh_a") + F.size("sh_b") - inter
-        dirty = (
-            verified.withColumn("jaccard", F.round(inter / union, 6))
-            .filter(F.col("jaccard") >= threshold)
-            .select(F.col("doc_a").alias("doc_id"))
-            .distinct()
-        )
+        dirty = pairs.select(F.col("doc_a").alias("doc_id")).distinct()
         return corpus.join(dirty, on="doc_id", how="left_anti")
 
 

@@ -706,7 +706,7 @@ def _stream_neardup_portable_oracle_sql(
     screen; portable buckets are injective concat strings, so bucket
     equality == signature-slice equality and candidate generation has
     no collisions to model). Survivors accumulate batch by batch —
-    exactly ``_neardup_batch_body``'s order of operations."""
+    exactly ``streaming._neardup_ingest``'s order of operations."""
 
     def band(x: str, y: str) -> str:
         return " OR ".join(

@@ -82,31 +82,32 @@ def _ckpt_dir(tag: str) -> str:
     A crash-orphaned directory is swept only when its owner is dead —
     ``/proc/<pid>`` is missing, or the name carries no pid — and it is
     over an hour old. Age alone would delete the live checkpoint of
-    another process's drain once that drain ran past the hour."""
+    another process's drain once that drain ran past the hour. When
+    tmpfs is not writable the same naming and sweep apply under the
+    user cache dir ``_STAGE_ROOT``."""
     import tempfile
     import time as _time
 
-    if os.path.isdir(_SHM_ROOT) and os.access(_SHM_ROOT, os.W_OK):
-        cutoff = _time.time() - 3600
-        try:
-            for d in os.listdir(_SHM_ROOT):
-                if not d.startswith("mriya_ckpt_"):
-                    continue
-                owner = d.split("_")[2]
-                if owner.isdigit() and os.path.exists(f"/proc/{owner}"):
-                    continue
-                p = os.path.join(_SHM_ROOT, d)
-                try:
-                    if os.path.getmtime(p) < cutoff:
-                        shutil.rmtree(p, ignore_errors=True)
-                except OSError:
-                    pass
-        except OSError:
-            pass
-        return tempfile.mkdtemp(
-            prefix=f"mriya_ckpt_{os.getpid()}_{tag}_", dir=_SHM_ROOT
-        )
-    return f"{_STAGE_ROOT}/ckpt_{tag}_{uuid.uuid4().hex[:12]}"
+    root = _SHM_ROOT
+    if not (os.path.isdir(root) and os.access(root, os.W_OK)):
+        root = _STAGE_ROOT
+    cutoff = _time.time() - 3600
+    try:
+        for d in os.listdir(root):
+            if not d.startswith("mriya_ckpt_"):
+                continue
+            owner = d.split("_")[2]
+            if owner.isdigit() and os.path.exists(f"/proc/{owner}"):
+                continue
+            p = os.path.join(root, d)
+            try:
+                if os.path.getmtime(p) < cutoff:
+                    shutil.rmtree(p, ignore_errors=True)
+            except OSError:
+                pass
+    except OSError:
+        pass
+    return tempfile.mkdtemp(prefix=f"mriya_ckpt_{os.getpid()}_{tag}_", dir=root)
 
 
 def stage_events_files(
@@ -452,17 +453,15 @@ def run_foreach_batch(
     """Drain ``stream`` through ``batch_fn`` to completion —
     checkpoint + the shuffle-partition clamp — the shared runner
     behind every foreachBatch sink here (upsert, corpus/near-dup
-    ingest, the streaming migration twin). The clamp also covers
-    ``batch_fn``'s inner batch jobs, which run while the stream is
-    active; the checkpoint is per-call and swept age-gated (r6
-    ADVICE). ``available_now=False`` switches to the
+    ingest, shard delivery, fixed-vocab encode/decode, the streaming
+    migration twin). The clamp also covers ``batch_fn``'s inner batch
+    jobs, which run while the stream is active; the checkpoint is
+    per-call (``_ckpt_dir``; ``ckpt_prefix`` minus its trailing ``_``
+    is the directory tag). ``available_now=False`` switches to the
     processAllAvailable/stop protocol for sources that don't support
     ``Trigger.AvailableNow`` (Python DSv2 stream readers — the
     ``run_until_idle`` caveat)."""
     spark = stream.sparkSession
-    from mriya_spark.cachedir import sweep_stale
-
-    sweep_stale("stream_v2", ckpt_prefix)
     with _bounded_drain(spark, ckpt_prefix.rstrip("_")) as ckpt:
         writer = stream.writeStream.foreachBatch(batch_fn).option(
             "checkpointLocation", ckpt
@@ -754,14 +753,7 @@ def stream_corpus_ingest(
             in_batch = in_batch.join(seen, on="fingerprint", how="left_anti")
         in_batch.write.mode("append").parquet(target_path)
 
-    with _bounded_drain(spark, "ingest") as ckpt:
-        q = (
-            docs.writeStream.foreachBatch(ingest_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_foreach_batch(docs, ingest_batch, ckpt_prefix="ckpt_ingest_")
     return target_path
 
 
@@ -884,7 +876,7 @@ def stream_neardup_ingest(
     cells it collides with:
 
     1. within-batch: banded MinHash pairs + exact-Jaccard verify, drop
-       the larger doc_id (``minhash_lsh_pairs_from_shingles``);
+       the larger doc_id (``ops.dedup._lsh_self_pairs``);
     2. vs target: the batch's band rows equi-join the PERSISTED band
        index — partition-pruned on ``band`` (16 dirs) and
        row-group-pruned on ``bucket`` — then exact Jaccard against the
@@ -902,7 +894,6 @@ def stream_neardup_ingest(
     fetch reads only collided docs' rows. The doc store appends;
     nothing rewrites.
     """
-    spark = docs.sparkSession
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         neardup_ingest_batch(
@@ -910,14 +901,7 @@ def stream_neardup_ingest(
             num_perm=num_perm, bands=bands, seed=seed,
         )
 
-    with _bounded_drain(spark, "neardup") as ckpt:
-        q = (
-            docs.writeStream.foreachBatch(ingest_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_foreach_batch(docs, ingest_batch, ckpt_prefix="ckpt_neardup_")
     return target_path
 
 
@@ -943,91 +927,13 @@ def neardup_ingest_batch(
     (benign: candidate pairs are de-duplicated), never duplicate
     documents, and a doc present without its bands cannot occur.
     Single writer per target, as ``merge_upsert_batch``."""
-    from mriya_spark.caching import cache_scope
-    from mriya_spark.ops.dedup import (
-        _banded,
-        add_shingle_hashes,
-        minhash_lsh_pairs_from_shingles,
-        minhash_signature,
+    from mriya_spark.ops.dedup import _xxhash_bands, add_shingle_hashes
+
+    _neardup_ingest(
+        add_shingle_hashes(batch, n=n), target_path,
+        _xxhash_bands(num_perm=num_perm, bands=bands, seed=seed),
+        threshold=threshold,
     )
-
-    spark = batch.sparkSession
-    index_path = f"{target_path}_bands"
-    pinned: list[DataFrame] = []
-
-    def _pin(df: DataFrame) -> DataFrame:
-        df.persist()
-        pinned.append(df)
-        return df
-
-    sh = _pin(add_shingle_hashes(batch, n=n))
-    try:
-        _neardup_batch_body(
-            spark, sh, _pin, target_path, index_path,
-            threshold=threshold,
-            **_xxhash_lsh_family(num_perm=num_perm, bands=bands,
-                                 threshold=threshold, seed=seed),
-        )
-    finally:
-        for df_ in pinned:
-            df_.unpersist()
-
-
-def _xxhash_lsh_family(*, num_perm, bands, threshold, seed):
-    """Production LSH family for the ingest body: xxhash64 shingle
-    hashes + xxhash64 band buckets (fast, engine-bound)."""
-    from mriya_spark.ops.dedup import (
-        _banded,
-        minhash_lsh_pairs_from_shingles,
-        minhash_signature,
-    )
-
-    def pairs_fn(shingles):
-        return minhash_lsh_pairs_from_shingles(
-            shingles, num_perm=num_perm, bands=bands,
-            threshold=threshold, seed=seed,
-        )
-
-    def band_fn(df):
-        return _banded(
-            df.select(
-                "doc_id",
-                minhash_signature(
-                    "shingles", num_perm=num_perm, seed=seed
-                ).alias("sig"),
-            ),
-            num_perm=num_perm, bands=bands,
-        )
-
-    return {"pairs_fn": pairs_fn, "band_fn": band_fn}
-
-
-def _portable_lsh_family(*, num_perm, bands, threshold):
-    """Engine-portable LSH family (md5 signature draws, injective
-    string buckets) — every downstream decision reproduces in any
-    engine with md5, so the ingest recurrence becomes oracle-checkable
-    (``queries.stream_neardup_ingest_portable``)."""
-    from mriya_spark.ops.dedup import (
-        _banded_portable_rows,
-        _portable_minhash_exprs,
-        minhash_lsh_pairs_portable_from_shingles,
-    )
-
-    sig_exprs, band_structs = _portable_minhash_exprs(num_perm, bands)
-
-    def pairs_fn(shingles):
-        return minhash_lsh_pairs_portable_from_shingles(
-            shingles.select("doc_id", F.col("shingles").alias("__sh")),
-            num_perm=num_perm, bands=bands, threshold=threshold,
-        )
-
-    def band_fn(df):
-        return _banded_portable_rows(
-            df.select("doc_id", F.col("shingles").alias("__sh")),
-            sig_exprs, band_structs,
-        )
-
-    return {"pairs_fn": pairs_fn, "band_fn": band_fn}
 
 
 def neardup_ingest_batch_portable(
@@ -1041,12 +947,32 @@ def neardup_ingest_batch_portable(
 ) -> None:
     """``neardup_ingest_batch`` in the engine-portable md5 LSH family:
     array<string> word shingles, md5 signature draws, injective band
-    buckets. Identical control flow (same ``_neardup_batch_body``) —
-    only the hash family differs, which is exactly what makes the
+    buckets. Identical control flow (same ``_neardup_ingest``) — only
+    the hash family differs, which is exactly what makes the
     multi-batch recurrence expressible in the DuckDB oracle."""
-    from mriya_spark.ops.dedup import word_shingles
+    from mriya_spark.ops.dedup import _md5_bands, word_shingles
 
-    spark = batch.sparkSession
+    _neardup_ingest(
+        batch.withColumn("shingles", word_shingles("text", n)), target_path,
+        _md5_bands(num_perm=num_perm, bands=bands), threshold=threshold,
+    )
+
+
+def _neardup_ingest(
+    shingled: DataFrame, target_path: str, band_fn, *, threshold: float
+) -> None:
+    """The near-dup ingest body for any LSH hash family: ``shingled``
+    is the batch plus its ``shingles`` column, ``band_fn`` the family's
+    ``(doc_id, shingles) -> (doc_id, band, bucket)`` function
+    (``ops.dedup``)."""
+    from mriya_spark.caching import cache_scope
+    from mriya_spark.ops.dedup import (
+        _band_candidates,
+        _jaccard_verify,
+        _lsh_self_pairs,
+    )
+
+    spark = shingled.sparkSession
     index_path = f"{target_path}_bands"
     pinned: list[DataFrame] = []
 
@@ -1055,119 +981,77 @@ def neardup_ingest_batch_portable(
         pinned.append(df)
         return df
 
-    sh = _pin(
-        batch.withColumn("shingles", word_shingles("text", n))
-    )
+    sh = _pin(shingled)
     try:
-        _neardup_batch_body(
-            spark, sh, _pin, target_path, index_path,
-            threshold=threshold,
-            **_portable_lsh_family(num_perm=num_perm, bands=bands,
-                                   threshold=threshold),
-        )
+        # cache_scope: the within-batch pairs scope-persist their
+        # banded frame; without a scope per batch, each micro-batch
+        # would pin one more cached frame on the streaming thread
+        # forever (r7 review finding)
+        with cache_scope():
+            in_pairs = _lsh_self_pairs(
+                sh.select("doc_id", "shingles"), band_fn, threshold=threshold
+            )
+            dropped = in_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
+            keep = _pin(sh.join(dropped, on="doc_id", how="left_anti"))
+            banded_new = _pin(band_fn(keep))
+            # scheme-aware target/index stats (r17, the r16 encode-fix
+            # generalized): os.path.exists on an hdfs://s3a:// root is
+            # always False — every batch would "discover" empty state
+            # and re-append duplicates
+            if fs_exists(spark, index_path) and fs_exists(spark, target_path):
+                # both guards matter: a crash between the band write
+                # and the doc write on the FIRST batch leaves the index
+                # without a doc store — the orphan band rows reference
+                # docs that never landed, so there is nothing to screen
+                # against and the replay must fall through to
+                # re-append (their band rows duplicate, which candidate
+                # dedup absorbs).
+                # Prune the index read to the batch's touched buckets
+                # via a broadcast semi-join (batch-sized build side, no
+                # driver round-trip, no IN-list bloat at large trigger
+                # sizes)
+                idx = spark.read.parquet(index_path).join(
+                    F.broadcast(banded_new.select("bucket").distinct()),
+                    on="bucket",
+                    how="left_semi",
+                )
+                cand = _band_candidates(banded_new, idx)
+                # verify against the stored shingle arrays of just the
+                # collided docs
+                old_sh = spark.read.parquet(target_path).join(
+                    cand.select(F.col("doc_b").alias("doc_id")).distinct(),
+                    on="doc_id",
+                )
+                dup_vs_target = (
+                    _jaccard_verify(cand, keep, old_sh, threshold=threshold)
+                    .select(F.col("doc_a").alias("doc_id"))
+                    .distinct()
+                )
+                keep2 = keep.join(dup_vs_target, on="doc_id", how="left_anti")
+            else:
+                keep2 = keep
+            if fs_exists(spark, target_path):
+                # exact-id survivors of a half-committed earlier
+                # attempt (docs landed, crash before their bands):
+                # never re-append
+                existing = spark.read.parquet(target_path).select("doc_id")
+                keep2 = keep2.join(existing, on="doc_id", how="left_anti")
+            keep2 = _pin(keep2)
+            # bands BEFORE docs: the inter-write crash window then
+            # leaves only re-appended band rows (deduped at candidate
+            # generation), never a doc without its index entries
+            (
+                banded_new.join(
+                    keep2.select("doc_id"), on="doc_id", how="left_semi"
+                )
+                .write.mode("append")
+                .partitionBy("band")
+                .parquet(index_path)
+            )
+            keep2.write.mode("append").parquet(target_path)
     finally:
         for df_ in pinned:
             df_.unpersist()
-
-
-def _neardup_batch_body(
-    spark, sh, _pin, target_path, index_path, *, threshold, pairs_fn,
-    band_fn,
-):
-    from mriya_spark.caching import cache_scope
-
-    # cache_scope: pairs_fn scope-persists its banded frame
-    # internally; without a scope per batch, each micro-batch would
-    # pin one more cached frame on the streaming thread forever
-    # (r7 review finding)
-    with cache_scope():
-        shingles = sh.select("doc_id", "shingles")
-        in_pairs = pairs_fn(shingles)
-        dropped = in_pairs.select(F.col("doc_b").alias("doc_id")).distinct()
-        keep = _pin(sh.join(dropped, on="doc_id", how="left_anti"))
-        banded_new = _pin(band_fn(keep))
-        # scheme-aware target/index stats (r17, the r16 encode-fix
-        # generalized): os.path.exists on an hdfs://s3a:// root is
-        # always False — every batch would "discover" empty state and
-        # re-append duplicates
-        if fs_exists(spark, index_path) and fs_exists(spark, target_path):
-            # both guards matter: a crash between the band write and
-            # the doc write on the FIRST batch leaves the index without
-            # a doc store — the orphan band rows reference docs that
-            # never landed, so there is nothing to screen against and
-            # the replay must fall through to re-append (their band
-            # rows duplicate, which candidate dedup absorbs).
-            # Prune the index read to the batch's touched buckets via a
-            # broadcast semi-join (batch-sized build side, no driver
-            # round-trip, no IN-list bloat at large trigger sizes)
-            idx = spark.read.parquet(index_path).join(
-                F.broadcast(banded_new.select("bucket").distinct()),
-                on="bucket",
-                how="left_semi",
-            )
-            cand = (
-                banded_new.alias("a")
-                .join(
-                    idx.alias("b"),
-                    (F.col("a.band") == F.col("b.band"))
-                    & (F.col("a.bucket") == F.col("b.bucket")),
-                )
-                .select(
-                    F.col("a.doc_id").alias("doc_new"),
-                    F.col("b.doc_id").alias("doc_old"),
-                )
-                .dropDuplicates(["doc_new", "doc_old"])
-            )
-            old_sh = (
-                spark.read.parquet(target_path)
-                .select(
-                    F.col("doc_id").alias("doc_old"),
-                    F.col("shingles").alias("sh_old"),
-                )
-                .join(
-                    cand.select("doc_old").distinct(), on="doc_old"
-                )
-            )
-            verified = (
-                cand.join(
-                    keep.select(
-                        F.col("doc_id").alias("doc_new"),
-                        F.col("shingles").alias("sh_new"),
-                    ),
-                    on="doc_new",
-                )
-                .join(old_sh, on="doc_old")
-            )
-            inter = F.size(F.array_intersect("sh_new", "sh_old"))
-            union = F.size("sh_new") + F.size("sh_old") - inter
-            dup_vs_target = (
-                verified.filter(
-                    F.round(inter / union, 6) >= threshold
-                )
-                .select(F.col("doc_new").alias("doc_id"))
-                .distinct()
-            )
-            keep2 = keep.join(dup_vs_target, on="doc_id", how="left_anti")
-        else:
-            keep2 = keep
-        if fs_exists(spark, target_path):
-            # exact-id survivors of a half-committed earlier attempt
-            # (docs landed, crash before their bands): never re-append
-            existing = spark.read.parquet(target_path).select("doc_id")
-            keep2 = keep2.join(existing, on="doc_id", how="left_anti")
-        keep2 = _pin(keep2)
-        # bands BEFORE docs: the inter-write crash window then leaves
-        # only re-appended band rows (deduped at candidate
-        # generation), never a doc without its index entries
-        (
-            banded_new.join(
-                keep2.select("doc_id"), on="doc_id", how="left_semi"
-            )
-            .write.mode("append")
-            .partitionBy("band")
-            .parquet(index_path)
-        )
-        keep2.write.mode("append").parquet(target_path)
 
 
 #: explicit batch boundaries for the PORTABLE streaming near-dup twin.
@@ -1246,7 +1130,6 @@ def stream_neardup_ingest_portable(
     machinery, same per-batch screen-then-append recurrence — and with
     fixed staged batches the surviving corpus is a pure function of
     (docs, batch boundaries) that a SQL oracle can unroll."""
-    spark = docs.sparkSession
 
     def ingest_batch(batch: DataFrame, epoch_id: int) -> None:
         neardup_ingest_batch_portable(
@@ -1254,14 +1137,7 @@ def stream_neardup_ingest_portable(
             num_perm=num_perm, bands=bands,
         )
 
-    with _bounded_drain(spark, "neardup") as ckpt:
-        q = (
-            docs.writeStream.foreachBatch(ingest_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_foreach_batch(docs, ingest_batch, ckpt_prefix="ckpt_neardup_")
     return target_path
 
 
@@ -1538,7 +1414,6 @@ def stream_encode_fixed_vocab(
     keys), never O(target bytes)."""
     from mriya_spark.ops.text import bpe_token_ids
 
-    spark = docs.sparkSession
     validated = [False]
 
     def encode_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -1556,14 +1431,7 @@ def stream_encode_fixed_vocab(
             out = out.join(seen, on="doc_id", how="left_anti")
         out.write.mode("append").parquet(target_path)
 
-    with _bounded_drain(spark, "fixedenc") as ckpt:
-        q = (
-            docs.writeStream.foreachBatch(encode_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_foreach_batch(docs, encode_batch, ckpt_prefix="ckpt_fixedenc_")
     return target_path
 
 
@@ -1631,8 +1499,6 @@ def stream_decode_fixed_vocab(
     append-only parquet."""
     from mriya_spark.ops.text import bpe_decode
 
-    spark = ids_stream.sparkSession
-
     validated = [False]
 
     def decode_batch(batch: DataFrame, epoch_id: int) -> None:
@@ -1644,12 +1510,5 @@ def stream_decode_fixed_vocab(
             out = out.join(seen, on="doc_id", how="left_anti")
         out.write.mode("append").parquet(target_path)
 
-    with _bounded_drain(spark, "fixeddec") as ckpt:
-        q = (
-            ids_stream.writeStream.foreachBatch(decode_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run_foreach_batch(ids_stream, decode_batch, ckpt_prefix="ckpt_fixeddec_")
     return target_path

@@ -224,7 +224,8 @@ def test_connected_components_matches_union_find(spark):
 
 
 def test_decontaminate_recall_vs_exact(catalog, spark):
-    """Bipartite LSH decontamination: never drops a doc the exact form
+    """Bipartite LSH decontamination, in both hash families (xxhash64
+    production, md5 portable twin): never drops a doc the exact form
     keeps (verify step), and finds >=90% of true contamination."""
     docs = catalog.table("documents").select("doc_id", "text")
     corpus = docs.filter("doc_id < 200")
@@ -237,16 +238,19 @@ def test_decontaminate_recall_vs_exact(catalog, spark):
         for r in dedup.decontaminate(corpus, ref, threshold=0.5, method="exact")
         .select("doc_id").collect()
     }
-    lsh_kept = {
-        r.doc_id
-        for r in dedup.decontaminate(corpus, ref, threshold=0.5, method="minhash_lsh")
-        .select("doc_id").collect()
-    }
-    assert exact_kept <= lsh_kept  # no false drops
     exact_dropped = all_ids - exact_kept
     assert len(exact_dropped) > 0  # the planted leaks are detectable
-    recall = len(all_ids - lsh_kept) / len(exact_dropped)
-    assert recall >= 0.9, f"decontamination recall {recall}"
+    lsh_forms = {
+        "xxhash64": dedup.decontaminate(
+            corpus, ref, threshold=0.5, method="minhash_lsh"
+        ),
+        "md5": dedup.decontaminate_minhash_portable(corpus, ref, threshold=0.5),
+    }
+    for family, clean in lsh_forms.items():
+        lsh_kept = {r.doc_id for r in clean.select("doc_id").collect()}
+        assert exact_kept <= lsh_kept, family  # no false drops
+        recall = len(all_ids - lsh_kept) / len(exact_dropped)
+        assert recall >= 0.9, f"{family} decontamination recall {recall}"
 
 
 def test_simhash_near_identical(spark):

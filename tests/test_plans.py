@@ -698,6 +698,9 @@ def test_pinned_shuffle_counts_on_expensive_pipelines(spark, queries):
         "dedup_minhash_lsh": 1,
         "pipeline_decontaminate_lsh": 3,
         "pipeline_corpus_curation_lsh": 4,
+        # the md5 oracle twins run the same band join and verify
+        "dedup_minhash_lsh_portable": 1,
+        "pipeline_decontaminate_lsh_portable": 3,
         "search_bm25": 6,
         # 9 -> 7 (r9): the sparse side reads the materialized BM25
         # index instead of re-exploding the corpus per query

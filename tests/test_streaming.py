@@ -1,5 +1,6 @@
 import uuid
 
+import pytest
 from pyspark.sql import functions as F
 
 from mriya_spark import streaming as S
@@ -332,11 +333,14 @@ def test_foreachbatch_merge_replay_is_idempotent(spark, tmp_path):
     assert got2 == want
 
 
-def test_neardup_ingest_drops_cross_batch_copies(spark, tmp_path):
+@pytest.mark.parametrize(
+    "ingest", ["neardup_ingest_batch", "neardup_ingest_batch_portable"]
+)
+def test_neardup_ingest_drops_cross_batch_copies(spark, tmp_path, ingest):
     """Near-dup copies arriving in a LATER batch must be dropped by
     the band-index screen against already-ingested docs; within-batch
-    near-dups resolve to the smaller id."""
-    import mriya_spark.streaming as S
+    near-dups resolve to the smaller id. Both hash families."""
+    ingest_batch = getattr(S, ingest)
 
     base = spark.read.parquet(f"{SF}/documents.parquet").filter(
         "doc_id < 80"
@@ -350,8 +354,8 @@ def test_neardup_ingest_drops_cross_batch_copies(spark, tmp_path):
         )
     )
     target = str(tmp_path / "neardup_target")
-    S.neardup_ingest_batch(base, target, threshold=0.5)
-    S.neardup_ingest_batch(perturbed, target, threshold=0.5)
+    ingest_batch(base, target, threshold=0.5)
+    ingest_batch(perturbed, target, threshold=0.5)
     kept = sorted(r.doc_id for r in spark.read.parquet(target).collect())
     copies_kept = [d for d in kept if d >= 1_000_000]
     # >= 90% of planted copies are screened out (LSH recall at j>=0.5)
@@ -359,11 +363,15 @@ def test_neardup_ingest_drops_cross_batch_copies(spark, tmp_path):
     assert len([d for d in kept if d < 1_000_000]) >= 70
 
 
-def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize(
+    "ingest", ["neardup_ingest_batch", "neardup_ingest_batch_portable"]
+)
+def test_neardup_ingest_replay_is_idempotent(spark, tmp_path, ingest):
     """Replaying a committed batch must be a no-op: every replayed doc
     collides with its own stored copy at jaccard 1.0 and is dropped,
-    so neither the doc store nor the band index grows."""
-    import mriya_spark.streaming as S
+    so neither the doc store nor the band index grows. Both hash
+    families."""
+    ingest_batch = getattr(S, ingest)
 
     b1 = spark.read.parquet(f"{SF}/documents.parquet").filter(
         "doc_id < 40"
@@ -372,11 +380,11 @@ def test_neardup_ingest_replay_is_idempotent(spark, tmp_path):
         "doc_id >= 40 AND doc_id < 80"
     ).select("doc_id", "text")
     target = str(tmp_path / "replay_target")
-    S.neardup_ingest_batch(b1, target, threshold=0.5)
-    S.neardup_ingest_batch(b2, target, threshold=0.5)
+    ingest_batch(b1, target, threshold=0.5)
+    ingest_batch(b2, target, threshold=0.5)
     want_docs = sorted(r.doc_id for r in spark.read.parquet(target).collect())
     want_bands = spark.read.parquet(target + "_bands").count()
-    S.neardup_ingest_batch(b1, target, threshold=0.5)  # crash-retry replay
+    ingest_batch(b1, target, threshold=0.5)  # crash-retry replay
     got_docs = sorted(r.doc_id for r in spark.read.parquet(target).collect())
     got_bands = spark.read.parquet(target + "_bands").count()
     assert got_docs == want_docs
@@ -1142,30 +1150,40 @@ def test_stream_shard_delivery_bloom_screen_same_result(spark, tmp_path):
 
 
 def test_ckpt_sweep_spares_live_owners(tmp_path, monkeypatch):
-    """The tmpfs orphan sweep ages nothing by mtime alone: an hour-old
-    checkpoint whose owning pid is alive is another process's long
-    drain and stays; one whose owner is dead, or whose name carries no
-    pid, is swept. A fresh one is never touched."""
+    """The checkpoint orphan sweep ages nothing by mtime alone: an
+    hour-old checkpoint whose owning pid is alive is another process's
+    long drain and stays; one whose owner is dead, or whose name
+    carries no pid, is swept. A fresh one is never touched. The same
+    holds in the user cache dir the drivers fall back to when the
+    tmpfs root is missing."""
     import os
     import subprocess
     import time
 
-    monkeypatch.setattr(S, "_SHM_ROOT", str(tmp_path))
     dead = subprocess.Popen(["true"])
     dead.wait()  # reaped: /proc/<pid> is gone
-    live = tmp_path / f"mriya_ckpt_{os.getpid()}_out_live"
-    orphan = tmp_path / f"mriya_ckpt_{dead.pid}_out_orphan"
-    unowned = tmp_path / "mriya_ckpt_out_unowned"
-    fresh = tmp_path / f"mriya_ckpt_{dead.pid}_out_fresh"
-    for d in (live, orphan, unowned, fresh):
-        d.mkdir()
-    old = time.time() - 7200
-    for d in (live, orphan, unowned):
-        os.utime(d, (old, old))
-    made = S._ckpt_dir("t")
-    assert live.exists() and fresh.exists()
-    assert not orphan.exists() and not unowned.exists()
-    assert os.path.basename(made).startswith(f"mriya_ckpt_{os.getpid()}_t_")
+    for fallback in (False, True):
+        root = tmp_path / ("stage" if fallback else "shm")
+        root.mkdir()
+        if fallback:
+            monkeypatch.setattr(S, "_SHM_ROOT", str(tmp_path / "missing"))
+            monkeypatch.setattr(S, "_STAGE_ROOT", str(root))
+        else:
+            monkeypatch.setattr(S, "_SHM_ROOT", str(root))
+        live = root / f"mriya_ckpt_{os.getpid()}_out_live"
+        orphan = root / f"mriya_ckpt_{dead.pid}_out_orphan"
+        unowned = root / "mriya_ckpt_out_unowned"
+        fresh = root / f"mriya_ckpt_{dead.pid}_out_fresh"
+        for d in (live, orphan, unowned, fresh):
+            d.mkdir()
+        old = time.time() - 7200
+        for d in (live, orphan, unowned):
+            os.utime(d, (old, old))
+        made = S._ckpt_dir("t")
+        assert live.exists() and fresh.exists(), root
+        assert not orphan.exists() and not unowned.exists(), root
+        assert os.path.dirname(made) == str(root)
+        assert os.path.basename(made).startswith(f"mriya_ckpt_{os.getpid()}_t_")
 
 
 def test_bounded_drivers_remove_checkpoint_on_failure(
