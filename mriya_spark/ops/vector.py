@@ -3,26 +3,40 @@
 Beyond-reference surface (SURVEY.md north star): approximate-nearest-
 neighbor search and embedding-based near-dup detection.
 
-Design:
+Design — one top-k pipeline. Each form generates its own candidates;
+``_rank_topk`` (self-filter, rounded cosine, rank <= k) is shared:
 - ``cosine``            — pure JVM expression (zip_with + aggregate in
                           DOUBLE); bit-compatible with DuckDB's
                           ``list_cosine_similarity`` on DOUBLE[] since
                           both reduce in index order.
-- ``brute_force_topk``  — broadcast the (small) query set against the
-                          corpus; per-query top-k via ranked window.
-                          Exact baseline; O(|Q| * N) but embarrassingly
-                          parallel and shuffle-light (one shuffle on
-                          query_id for the window).
-- ``lsh_topk``          — random-hyperplane LSH: sign-bit bucket as the
-                          blocking key, search within bucket (+ optional
-                          multi-probe). The 100 TB path: candidate count
-                          per query drops from N to N / 2^bits.
+- ``brute_force_topk``  — broadcast the (small) query set, cross join
+                          the corpus. Exact baseline; O(|Q| * N) but
+                          embarrassingly parallel and shuffle-light
+                          (one shuffle on query_id for the rank).
+- ``lsh_topk``          — random-hyperplane LSH: sign-bit bucket
+                          equi-join (+ optional multi-probe). The
+                          100 TB path: candidate count per query drops
+                          from N to N / 2^bits.
+- IVF                   — ``ivf_topk`` (``ivf_train`` + probe),
+                          ``ivf_topk_indexed`` (probe of a
+                          cell-partitioned index) and the hash-checked
+                          twin ``ivf_portable_topk`` share one probe,
+                          ``_ivf_probe``: query cells -> broadcast cell
+                          equi-join -> ``_rank_topk``. A cell
+                          assignment family is only a cell function:
+                          ``_matmul_cells`` (numpy matmul per Arrow
+                          batch, production) or ``_fold_cells``
+                          (sequential-fold dots, which DuckDB replays;
+                          the twin). The twin differs from production
+                          only in that fold. Cells are numbered from 1.
 - ``cosine_near_dup_pairs`` — all pairs above a cosine threshold;
                           exact O(n²) form, kept ONLY as the oracle /
                           recall yardstick.
 - ``cosine_near_dup_pairs_blocked`` — the scale path: multi-table
                           sign-bit LSH blocking + exact verify within
                           buckets.
+- ``semantic_dedup``    — SemDeDup: cell assignment, then a drop rule
+                          within cells.
 """
 
 from __future__ import annotations
@@ -77,14 +91,20 @@ def brute_force_topk(
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("c_vec")
     )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
+    return _rank_topk(c.crossJoin(F.broadcast(q)), k)
+
+
+def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The score-and-rank stage every top-k form shares. ``cand`` is
+    the caller's candidate join (a cross join, a bucket or a cell
+    equi-join) carrying ``query_id, q_vec, neighbor_id, c_vec``; a
+    query never matches itself, the score is the cosine rounded to 6
+    places, and each query keeps its ``k`` best, ties to the smaller
+    neighbor id. Ranking is one shuffle on query_id."""
+    scored = cand.filter(F.col("neighbor_id") != F.col("query_id")).select(
+        "query_id",
+        "neighbor_id",
+        F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
@@ -186,23 +206,7 @@ def lsh_topk(
             F.array(*[F.col("__b").bitwiseXOR(F.lit(m)) for m in probe_masks])
         ).alias("bucket"),
     )
-    scored = (
-        c.join(F.broadcast(q), on="bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
-    )
+    return _rank_topk(c.join(F.broadcast(q), on="bucket"), k)
 
 
 def group_centroids(
@@ -268,10 +272,10 @@ def ivf_train(
     is a plain aggregation, so retraining reproduces bit-identical
     centroids.
 
-    Per iteration: one broadcast of k*dim centroid literals out, one
-    ``groupBy(cid)`` shuffle of k groups back — the per-dimension means
-    are computed as ``avg(element_at(vec, d))`` so only k rows ever
-    reach the driver. At 100 TB you train on a hash-sample
+    Per iteration: one broadcast of the k x dim centroid matrix out,
+    one ``groupBy(cid)`` shuffle of k groups back — the per-dimension
+    means are computed as ``avg(element_at(vec, d))`` so only k rows
+    ever reach the driver. At 100 TB you train on a hash-sample
     (``sample_fraction``) — the index quality depends on centroid
     coverage, not on seeing every vector.
     """
@@ -295,7 +299,7 @@ def ivf_train(
         dim = len(centroids[0])  # init rows carry vectors; no extra job
         for _ in range(iters):
             assigned = vecs.select(
-                _nearest_centroid(F.col("__v"), centroids).alias("cid"), "__v"
+                _matmul_cells(F.col("__v"), centroids, 1)[0].alias("cid"), "__v"
             )
             rows = (
                 assigned.groupBy("cid")
@@ -309,7 +313,7 @@ def ivf_train(
             )
             new = {r["cid"]: [r[f"m{d}"] for d in range(dim)] for r in rows}
             centroids = [
-                _unit_py(new.get(i, centroids[i])) for i in range(len(centroids))
+                _unit_py(new.get(i + 1, c)) for i, c in enumerate(centroids)
             ]
     finally:
         vecs.unpersist()
@@ -321,29 +325,85 @@ def _unit_py(v: list[float]) -> list[float]:
     return [x / n for x in v] if n > 0 else list(v)
 
 
-def _nearest_centroid(vec: Column, centroids: list[list[float]]) -> Column:
-    """Argmax-dot centroid id (vec must be unit), Arrow-vectorized.
-
-    One k x dim numpy matmul per Arrow batch — a k*dim literal
-    expression tree would bloat codegen ~k*dim-fold, so this is the
-    textbook "built-ins can't express it efficiently" pandas_udf case.
-    Ties break to the smallest cid (numpy argmax is first-wins over the
-    reversed scan below), deterministically.
-    """
-    return _centroid_udf(centroids, nprobe=1)(vec)["c0"]
+# An IVF cell-assignment family is one function
+# ``(vec, centroids, nprobe) -> array<bigint>``: the 1-based ids of the
+# ``nprobe`` cells with the largest ``dot(vec, centroid)``, best first,
+# the smallest id winning ties (the oracles' ``list_indexof`` /
+# ``ORDER BY d DESC, cid`` convention). Argmax dot is scale-invariant,
+# so vectors are never normalized first; with unit centroids it is
+# argmax cosine. Everything downstream of the family is shared.
 
 
-def _nprobe_centroids(
-    vec: Column, centroids: list[list[float]], nprobe: int
-) -> Column:
-    """The ``nprobe`` nearest centroid ids, as an array (query side)."""
-    s = _centroid_udf(centroids, nprobe=nprobe)(vec)
+def _fold_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
+    """Sequential-fold family: one ``_dot`` per centroid against an
+    inlined literal, evaluated in index order like DuckDB's
+    ``list_dot_product``, so the oracles replay it exactly. The best
+    cell is ``array_position(dots, array_max(dots))``; an ``nprobe``
+    set sorts ``(-dot, id)`` pairs in the row, so both are scan-local.
+    The literal tree grows with k x dim — fine for a fixed quantizer,
+    not for a corpus-scaled one (``semantic_dedup``'s size rule)."""
+    dots = F.array(*[_dot(vec, _array_lit(c)) for c in centroids])
+    if nprobe == 1:
+        return F.array(F.array_position(dots, F.array_max(dots)))
+    pairs = F.transform(
+        dots,
+        lambda d, i: F.struct((-d).alias("d"), (i + 1).cast("long").alias("cid")),
+    )
+    return F.transform(
+        F.slice(F.array_sort(pairs), 1, nprobe), lambda p: p["cid"]
+    )
+
+
+def _matmul_cells(vec: Column, centroids: list[list[float]], nprobe: int) -> Column:
+    """Numpy-matmul family: one Arrow pandas UDF, one chunked k x dim
+    matmul per batch against the broadcast centroid matrix — a k*dim
+    literal tree would bloat codegen k*dim-fold. Ties go to the
+    smallest id (first-wins argmax; stable argsort on -score). A
+    batched matmul may sum in another float order than the fold, so
+    the two families can disagree only where two dots tie within
+    rounding error.
+
+    The UDF returns a fixed-width ``struct<c0..c{nprobe-1}>`` (no Arrow
+    scalar-UDF array return is cheaper), rebuilt into the array here.
+    The centroid matrix goes out as an explicit SparkContext broadcast,
+    not a closure capture: a captured numpy array serializes into every
+    task of every stage that runs the UDF, and a production coarse
+    quantizer (4096 x 768 float64 ≈ 25 MB) would ship per task.
+    Broadcasts are content-cached and evicted via ``_centroid_bcast``."""
+    from pyspark.sql.functions import pandas_udf
+
+    bmat = _centroid_bcast(np.asarray(centroids, dtype=np.float64).T)  # dim x k
+
+    @pandas_udf(", ".join(f"c{i} long" for i in range(nprobe)))
+    def nearest(vecs: pd.Series) -> pd.DataFrame:
+        m = np.stack(vecs.to_numpy()).astype(np.float64)  # batch x dim
+        n, k = m.shape[0], bmat.value.shape[1]
+        # chunk the matmul so the scores buffer stays ~32 MB however
+        # large the quantizer: a corpus-scaled k (SemDeDup: thousands
+        # of cells) times the 10k-row Arrow batch is a multi-100-MB
+        # allocation PER TASK otherwise — measured 3x wall inflation
+        # from allocation/GC churn at k=4000 before this (r19 probe)
+        chunk = max(1, 4_000_000 // max(k, 1))
+        outs = [np.empty(n, dtype=np.int64) for _ in range(nprobe)]
+        for lo in range(0, n, chunk):
+            scores = m[lo : lo + chunk] @ bmat.value  # chunk x k
+            if nprobe == 1:
+                # first-wins argmax == the stable argsort's column 0,
+                # O(k) instead of O(k log k) per row
+                outs[0][lo : lo + chunk] = scores.argmax(axis=1) + 1
+            else:
+                order = np.argsort(-scores, axis=1, kind="stable")
+                for i in range(nprobe):
+                    outs[i][lo : lo + chunk] = order[:, i] + 1
+        return pd.DataFrame({f"c{i}": outs[i] for i in range(nprobe)})
+
+    s = nearest(vec)
     return F.array(*[s[f"c{i}"] for i in range(nprobe)])
 
 
 #: content-keyed LRU of centroid-matrix broadcasts. Before r19 every
-#: ``_centroid_udf`` call created a fresh ``sc.broadcast`` and never
-#: unpersisted it, so a long-lived session calling IVF ops repeatedly
+#: UDF build created a fresh ``sc.broadcast`` and never unpersisted
+#: it, so a long-lived session calling IVF ops repeatedly
 #: accumulated executor-cached matrices (r18 judge nit). The cache
 #: returns the SAME broadcast for the same matrix bytes, and evicts
 #: (with ``unpersist``) beyond ``_CENTROID_BCAST_MAX`` distinct
@@ -384,52 +444,46 @@ def _centroid_bcast(cmat):
     return b
 
 
-def _centroid_udf(centroids: list[list[float]], *, nprobe: int):
-    """pandas_udf returning the ``nprobe`` nearest centroid ids as a
-    struct<c0..c{nprobe-1}: int> (Arrow has no scalar-UDF array return
-    cheaper than a struct of fixed width).
+def _ivf_cells(
+    corpus: DataFrame, cells, centroids, id_col: str, vec_col: str
+) -> DataFrame:
+    """The corpus as ``(neighbor_id, c_vec, cell)``: one scan-local
+    projection through the cell family ``cells``."""
+    return corpus.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.col(vec_col).alias("c_vec"),
+        cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
+    )
 
-    The centroid matrix goes out as an EXPLICIT SparkContext
-    broadcast, not a closure capture (r11): a captured numpy array
-    serializes into every task of every stage that runs the UDF —
-    negligible at 16x8 test scale, but a production coarse quantizer
-    (4096 x 768 float64 ≈ 25 MB) would ship per-task; the broadcast
-    ships once per executor and is cached across stages. The UDF
-    dereferences ``.value`` lazily inside the worker. Broadcasts are
-    content-cached and evicted via ``_centroid_bcast`` (r18 judge
-    nit: per-call broadcasts accumulated for the session's life)."""
-    from pyspark.sql.functions import pandas_udf
 
-    cmat = np.asarray(centroids, dtype=np.float64).T  # dim x k
-    bmat = _centroid_bcast(cmat)
-
-    schema = ", ".join(f"c{i} int" for i in range(nprobe))
-
-    @pandas_udf(schema)
-    def nearest(vecs: pd.Series) -> pd.DataFrame:
-        m = np.stack(vecs.to_numpy()).astype(np.float64)  # batch x dim
-        n, k = m.shape[0], bmat.value.shape[1]
-        # chunk the matmul so the scores buffer stays ~32 MB however
-        # large the quantizer: a corpus-scaled k (SemDeDup: thousands
-        # of cells) times the 10k-row Arrow batch is a multi-100-MB
-        # allocation PER TASK otherwise — measured 3x wall inflation
-        # from allocation/GC churn at k=4000 before this (r19 probe)
-        chunk = max(1, 4_000_000 // max(k, 1))
-        outs = [np.empty(n, dtype=np.int32) for _ in range(nprobe)]
-        for lo in range(0, n, chunk):
-            scores = m[lo : lo + chunk] @ bmat.value  # chunk x k
-            if nprobe == 1:
-                # first-wins argmax == the stable argsort's column 0,
-                # O(k) instead of O(k log k) per row
-                outs[0][lo : lo + chunk] = scores.argmax(axis=1)
-            else:
-                # stable argsort on (-score, cid): smallest cid wins
-                order = np.argsort(-scores, axis=1, kind="stable")
-                for i in range(nprobe):
-                    outs[i][lo : lo + chunk] = order[:, i]
-        return pd.DataFrame({f"c{i}": outs[i] for i in range(nprobe)})
-
-    return nearest
+def _ivf_probe(
+    cell_rows: DataFrame,
+    queries: DataFrame,
+    cells,
+    centroids: list[list[float]],
+    *,
+    k: int,
+    nprobe: int,
+    id_col: str,
+    vec_col: str,
+    prune: bool = False,
+) -> DataFrame:
+    """The one IVF probe: each query explodes into its ``nprobe`` best
+    cells (family ``cells``), the small query side is broadcast into a
+    pure equi-join on cell against ``cell_rows`` (``_ivf_cells`` rows
+    or a cell-partitioned index scan), then ``_rank_topk``. With
+    ``prune`` the probed cells (at most |Q| x nprobe ints) are
+    collected first, so an index scan reads only those ``cell=``
+    directories."""
+    q = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).alias("q_vec"),
+        F.explode(cells(F.col(vec_col), centroids, nprobe)).alias("cell"),
+    )
+    if prune:
+        probed = [r["cell"] for r in q.select("cell").distinct().collect()]
+        cell_rows = cell_rows.filter(F.col("cell").isin(probed))
+    return _rank_topk(cell_rows.join(F.broadcast(q), on="cell"), k)
 
 
 def ivf_topk(
@@ -454,12 +508,12 @@ def ivf_topk(
     embeddings far better than angular LSH at the same candidate
     budget).
 
-    Execution shape: centroid assignment is a narrow projection (k
-    dot products per row, JVM expressions); the probe join is a pure
+    ``ivf_train`` followed by ``_ivf_probe``: cell assignment is a
+    narrow projection (the matmul family); the probe join is a pure
     equi-join on cell id with the (small) query side broadcast; ranking
     is one shuffle on query_id. At 100 TB the cell id becomes the
-    physical partition/bucket column, so a probe prunes file scans —
-    same plan, storage-level pruning.
+    physical partition/bucket column (``ivf_write_index``), so a probe
+    prunes file scans — same plan, storage-level pruning.
     """
     centroids = ivf_train(
         corpus,
@@ -470,34 +524,10 @@ def ivf_topk(
         id_col=id_col,
         vec_col=vec_col,
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _nearest_centroid(_unit(F.col(vec_col)), centroids).alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            _nprobe_centroids(_unit(F.col(vec_col)), centroids, nprobe)
-        ).alias("cell"),
-    )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return _ivf_probe(
+        _ivf_cells(corpus, _matmul_cells, centroids, id_col, vec_col),
+        queries, _matmul_cells, centroids,
+        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -513,7 +543,7 @@ def ivf_write_index(
     vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Materialize an IVF index: the corpus written Hive-partitioned
-    by its cell assignment (``cell=K/`` directories), centroids
+    by its 1-based cell assignment (``cell=K/`` directories), centroids
     returned (caller persists them — k x dim floats, a JSON file at
     any scale). This is the storage form the ``ivf_topk`` docstring
     promises: a probe becomes a partition-pruned scan of ``nprobe``
@@ -523,11 +553,7 @@ def ivf_write_index(
         corpus, n_centroids=n_centroids, iters=iters, seed=seed,
         sample_fraction=sample_fraction, id_col=id_col, vec_col=vec_col,
     )
-    assigned = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        _nearest_centroid(_unit(F.col(vec_col)), centroids).alias("cell"),
-    )
+    assigned = _ivf_cells(corpus, _matmul_cells, centroids, id_col, vec_col)
     # repartition on cell so each directory is written by one task
     assigned.repartition("cell").write.mode("overwrite").partitionBy(
         "cell"
@@ -546,38 +572,12 @@ def ivf_topk_indexed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Top-k against a materialized IVF index: collect the query
-    batch's probe cells (a driver-side set of at most
-    n_queries x nprobe ints), scan ONLY those ``cell=`` directories
-    (partition pruning — verified in plan tests), then the same
-    broadcast-queries cosine + rank as ``ivf_topk``."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.explode(
-            _nprobe_centroids(_unit(F.col(vec_col)), centroids, nprobe)
-        ).alias("cell"),
-    )
-    probe_cells = [r["cell"] for r in q.select("cell").distinct().collect()]
-    corpus = spark.read.parquet(index_path).filter(
-        F.col("cell").isin(probe_cells)  # directory-pruned scan
-    )
-    scored = (
-        corpus.join(F.broadcast(q), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    """Top-k against a materialized IVF index (``ivf_write_index``):
+    ``_ivf_probe`` with the index scan as its cell rows, pruned to the
+    probed ``cell=`` directories (verified in plan tests)."""
+    return _ivf_probe(
+        spark.read.parquet(index_path), queries, _matmul_cells, centroids,
+        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col, prune=True,
     )
 
 
@@ -591,71 +591,21 @@ def ivf_portable_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF probe mechanics with FIXED (caller-supplied) unit centroids,
-    every float op JVM-side in index order — the cross-engine-exact
-    twin of ``ivf_topk``'s probe path, value-checkable in any engine
-    that evaluates dot products as a sequential fold (the construction
-    the hash-green LSH oracle family already relies on).
-
-    Differences from the production path, and why:
-
-    - centroids are literals, not a trained quantizer: Lloyd
-      iterations are float-order-dependent and engine-bound, so the
-      trained path stays rows-only; with the quantizer pinned, cell
-      assignment -> nprobe pruning -> candidate join -> rank is exact.
-    - cell assignment is ``array_position(dots, array_max(dots))``
-      over 16 sequential-fold dots (first index wins ties), NOT the
-      numpy-matmul pandas UDF (``_centroid_udf``): a batched matmul
-      may reduce in a different float order than a sequential scan.
-    - vectors are NOT unit-normalized before assignment: with unit
-      centroids, argmax dot == argmax cosine, and skipping the
-      normalizing divide removes a whole class of cross-engine
-      last-ulp hazards.
-
-    Plan shape is the one that matters at scale: assignment is
-    scan-local (no shuffle), the probe join is an equi-join on cell
-    with the tiny exploded query side broadcast, ranking is one
-    shuffle on query_id.
+    """The fixed-centroid IVF twin, value-checkable in any engine that
+    evaluates dot products as a sequential fold: the production probe
+    (``_ivf_probe``: query cells -> broadcast cell join ->
+    ``_rank_topk``) with the fold family (``_fold_cells``) as its
+    only difference. Centroids are caller-supplied literals, not a
+    trained quantizer: Lloyd iterations are float-order-dependent and
+    engine-bound, so the trained path stays rows-only; with the
+    quantizer pinned, cell assignment -> nprobe pruning -> candidate
+    join -> rank is exact. Assignment is scan-local on both sides, so
+    the rank is the plan's one shuffle.
     """
-    dots = F.array(
-        *[_dot(F.col(vec_col), _array_lit(c)) for c in centroids]
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.array_position(dots, F.array_max(dots)).alias("cell"),
-    )
-    q_dots = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.posexplode(dots).alias("cid0", "d"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("d").desc(), F.col("cid0")
-    )
-    q = (
-        q_dots.withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= nprobe)
-        .select(
-            "query_id", "q_vec", (F.col("cid0") + 1).cast("long").alias("cell")
-        )
-    )
-    scored = (
-        c.join(F.broadcast(q), on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(cosine(F.col("q_vec"), F.col("c_vec")), 6).alias("cosine_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine_sim", "rank")
+    return _ivf_probe(
+        _ivf_cells(corpus, _fold_cells, centroids, id_col, vec_col),
+        queries, _fold_cells, centroids,
+        k=k, nprobe=nprobe, id_col=id_col, vec_col=vec_col,
     )
 
 
@@ -771,7 +721,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     keep_pairs: bool = False,
-    arrow_assign: bool | None = None,
 ) -> DataFrame:
     """SemDeDup-shaped semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster the corpus by embedding geometry, then
@@ -787,23 +736,11 @@ def semantic_dedup(
     matrix (the engine-portable form: with literals inlined, cell
     assignment -> within-cell pairs -> drop rule is exact SQL,
     hash-checkable cross-engine like ``ivf_portable_topk``). Cell
-    assignment has TWO strategies, both scan-local (zero exchanges;
-    argmax dot is scale-invariant, and unit centroids make it argmax
-    cosine with no normalizing divide):
-
-    - portable (default for small quantizers): first-index-argmax over
-      sequential-fold dot products — a k x dim literal expression
-      tree, exactly replayable in SQL (the hash gates pin this path);
-    - ``arrow_assign`` (default once ``k * dim >= 4096``): ONE numpy
-      matmul per Arrow batch against the content-cached broadcast
-      centroid matrix (``_centroid_udf``) — the production path for a
-      corpus-scaled quantizer, where the literal tree would bloat
-      codegen k*dim-fold and evaluate interpretively. Same first-wins
-      tie-break and the SAME 1-based cell numbering; the two paths can
-      differ only where two dots tie within float-summation-order
-      error (test-asserted equal on tie-free corpora), which moves a
-      doc between candidate pools but never invents a false pair —
-      the cosine predicate is exact either way.
+    assignment is scan-local either way, and the family follows from
+    the quantizer's size alone: the sequential fold (``_fold_cells``,
+    which the hash gates replay) below ``k * dim = 4096``, the numpy
+    matmul (``_matmul_cells``) from there on, where a literal tree of
+    corpus-scale size would not build. Both number cells from 1.
 
     Drop rule, stated precisely: a document is DROPPED iff some
     SMALLER-id document in the SAME cell has rounded cosine >=
@@ -823,32 +760,21 @@ def semantic_dedup(
     Returns kept documents ``(id, cell)`` — or, with
     ``keep_pairs=True``, the dropped-against-kept evidence pairs
     ``(id_kept, id_dropped, cell, cosine_sim)`` for audit."""
-    if arrow_assign is None:
-        arrow_assign = len(centroids) * len(centroids[0]) >= 4096
-    if arrow_assign:
-        # +1 matches the portable path's 1-based array_position labels
-        cell = (
-            _nearest_centroid(F.col(vec_col), centroids).cast("long") + 1
-        )
-    else:
-        dots = F.array(
-            *[_dot(F.col(vec_col), _array_lit(c)) for c in centroids]
-        )
-        cell = F.array_position(dots, F.array_max(dots)).cast("long")
+    big = len(centroids) * len(centroids[0]) >= 4096
+    cells = _matmul_cells if big else _fold_cells
     from mriya_spark.caching import scoped_persist
 
     # persisted (r19, guide §5): the assignment is consumed three
     # times (the a-side projection, the b-side of the cell-keyed
     # semi-join, and the final keep anti-join), and each evaluation
-    # replays the k x dim argmax expression tree (or the Arrow
-    # matmul) over the whole corpus — measured as the dominant
-    # serial cost of the gate. Released by the next scoped build /
-    # release_caches.
+    # replays the cell assignment over the whole corpus — measured as
+    # the dominant serial cost of the gate. Released by the next
+    # scoped build / release_caches.
     assigned = scoped_persist(
         corpus.select(
             F.col(id_col).alias("id"),
             F.col(vec_col).alias("v"),
-            cell.alias("cell"),
+            cells(F.col(vec_col), centroids, 1)[0].alias("cell"),
         )
     )
     a = assigned.select(

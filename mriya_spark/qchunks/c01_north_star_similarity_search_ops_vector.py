@@ -182,6 +182,9 @@ def _ivf_index_for(
         "n_centroids": n_centroids,
         "iters": iters,
         "seed": seed,
+        # cells are numbered from 1; an index written before that
+        # (cell=0..k-1) lacks this key and is rebuilt, not misread
+        "first_cell": 1,
     }
     centroids = _validated_ivf_meta(path, meta, params_echo)
     if centroids is not None:
@@ -357,10 +360,11 @@ def similarity_ann_ivf_portable_q(spark: SparkSession, sf_dir: str) -> DataFrame
     """IVF probe mechanics hash-checked end to end: seeded unit
     centroids inlined on both sides, cell assignment -> nprobe pruning
     -> candidate equi-join -> rounded-cosine rank all exact SQL (see
-    ``ops.vector.ivf_portable_topk``). The float-k-means production
-    path (``similarity_ann_ivf``) stays rows-only by design — Lloyd
-    training is engine-bound; everything downstream of the quantizer
-    is value-checked here."""
+    ``ops.vector.ivf_portable_topk``). It runs the production probe
+    and rank (``_ivf_probe``) and differs from ``similarity_ann_ivf``
+    only in its cell assignment, the sequential fold instead of the
+    numpy matmul. The float-k-means production path stays rows-only
+    by design — Lloyd training is engine-bound."""
     from mriya_spark.ops.vector import _unit_py, hyperplanes, ivf_portable_topk
 
     cents = [_unit_py(p) for p in hyperplanes(64, 16, 7)]
@@ -611,7 +615,7 @@ def stream_upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 micro-batches (4 files/trigger): enough to exercise the
     # cross-batch merge; each batch costs 2 parquet write+read cycles
     ev = S.read_events_stream(spark, sf_dir, max_files_per_trigger=4)
-    _sweep_stale("stream_v2", "upsert_target_", "ckpt_upsert_")
+    _sweep_stale("stream_v2", "upsert_target_")
     target = _os.path.join(_cache_subdir("stream_v2"), f"upsert_target_{_uuid.uuid4().hex[:8]}")
     S.foreach_batch_upsert(ev, target, key="user_id")
     out = spark.read.parquet(target)

@@ -139,6 +139,35 @@ def test_ivf_tampered_or_torn_index_retrains(spark, ivf_sandbox, tamper):
     assert ivf_sandbox["n"] == 2
 
 
+def test_ivf_index_with_old_cell_numbering_is_rebuilt(spark, ivf_sandbox):
+    """An index written before cells were numbered from 1 holds
+    ``cell=0..k-1`` directories and a params echo without
+    ``first_cell``. Probing it with 1-based ids would silently miss
+    cell 0, so the loader must refuse it and rebuild."""
+    path, cents = Q._ivf_index_for(spark, SF_SMOKE)
+    meta_path = os.path.join(path, "_centroids.json")
+    meta = json.load(open(meta_path))
+    assert meta["params"]["first_cell"] == 1
+    del meta["params"]["first_cell"]  # the old echo
+    json.dump(meta, open(meta_path, "w"))
+    old_cells = sorted(
+        int(d[5:]) for d in os.listdir(path) if d.startswith("cell=")
+    )
+    for c in old_cells:  # ascending, so each target name is free
+        os.rename(
+            os.path.join(path, f"cell={c}"), os.path.join(path, f"cell={c - 1}")
+        )
+
+    IVF_MOD._IVF_INDEX_CACHE.clear()
+    path2, cents2 = Q._ivf_index_for(spark, SF_SMOKE)
+    assert ivf_sandbox["n"] == 2, "old-numbering index was trusted"
+    assert path2 == path and cents2 == cents
+    cells = sorted(
+        int(d[5:]) for d in os.listdir(path) if d.startswith("cell=")
+    )
+    assert cells and cells[0] >= 1 and cells[-1] <= len(cents)
+
+
 def test_ivf_query_still_correct_after_cache_move(spark, ivf_sandbox):
     """End-to-end: the registered ANN query runs against the relocated
     index and matches brute-force top-1 for every probe (recall@10

@@ -4038,8 +4038,8 @@ def test_centroid_broadcast_cached_and_evicted(spark):
     assert b1 is b2 and len(vector._CENTROID_BCAST) == 1
 
     # the UDF path goes through the cache too: two udf builds, one entry
-    vector._centroid_udf(cents, nprobe=1)
-    vector._centroid_udf(cents, nprobe=2)
+    vector._matmul_cells(F.col("v"), cents, 1)
+    vector._matmul_cells(F.col("v"), cents, 2)
     assert len(vector._CENTROID_BCAST) == 1
 
     # distinct matrices past the cap evict oldest-first, bounded
@@ -4050,14 +4050,14 @@ def test_centroid_broadcast_cached_and_evicted(spark):
 
     # an evicted broadcast was unpersisted but a LIVE one still serves
     # an actual query (eviction never breaks in-flight reuse of the
-    # most recent matrices)
+    # most recent matrices); cells are numbered from 1
     df = spark.createDataFrame([([1.0, 0.0],)], "v array<double>")
     got = df.select(
-        vector._nearest_centroid(
-            df.v, [[float(vector._CENTROID_BCAST_MAX + 4), 0.0], [0.0, 1.0]]
-        ).alias("c")
+        vector._matmul_cells(
+            df.v, [[float(vector._CENTROID_BCAST_MAX + 4), 0.0], [0.0, 1.0]], 1
+        )[0].alias("c")
     ).collect()
-    assert got[0]["c"] == 0
+    assert got[0]["c"] == 1
     vector._CENTROID_BCAST.clear()
 
 
@@ -4096,56 +4096,64 @@ def test_semantic_dedup_drop_rule_and_cell_bounding(spark):
 def test_semantic_dedup_matches_brute_force_within_cells(spark):
     """On a random corpus the one-pass drop rule equals the brute-force
     definition recomputed independently: drop iff EXISTS smaller-id
-    same-cell partner with rounded cosine >= threshold."""
+    same-cell partner with rounded cosine >= threshold. The 8 x 4
+    quantizer assigns by the sequential fold, the 64 x 64 one
+    (k * dim = 4096) by the numpy matmul."""
     import math
     import random
 
     from mriya_spark.ops.vector import _unit_py, hyperplanes, semantic_dedup
 
-    rng = random.Random(13)
-    cents = [_unit_py(p) for p in hyperplanes(8, 4, 7)]
-    base = [[rng.gauss(0, 1) for _ in range(8)] for _ in range(30)]
-    rows = []
-    for i, v in enumerate(base):
-        rows.append((i, v))
-        if i % 3 == 0:  # plant a near-duplicate: tiny perturbation
-            rows.append(
-                (100 + i, [x * 1.001 + 1e-4 for x in v])
+    for dim, n_cells in ((8, 4), (64, 64)):
+        rng = random.Random(13)
+        cents = [_unit_py(p) for p in hyperplanes(dim, n_cells, 7)]
+        base = [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(30)]
+        rows = []
+        for i, v in enumerate(base):
+            rows.append((i, v))
+            if i % 3 == 0:  # plant a near-duplicate: tiny perturbation
+                rows.append(
+                    (100 + i, [x * 1.001 + 1e-4 for x in v])
+                )
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        got = {r["vec_id"] for r in semantic_dedup(df, cents, threshold=0.995).collect()}
+
+        def cell(v):
+            dots = [sum(a * b for a, b in zip(v, c)) for c in cents]
+            return dots.index(max(dots))
+
+        def cos(u, v):
+            d = sum(a * b for a, b in zip(u, v))
+            nu = math.sqrt(sum(a * a for a in u))
+            nv = math.sqrt(sum(a * a for a in v))
+            return round(d / (nu * nv), 6)
+
+        want = set()
+        for i, v in rows:
+            dup = any(
+                j < i and cell(u) == cell(v) and cos(u, v) >= 0.995
+                for j, u in rows
             )
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["vec_id"] for r in semantic_dedup(df, cents, threshold=0.995).collect()}
-
-    def cell(v):
-        dots = [sum(a * b for a, b in zip(v, c)) for c in cents]
-        return dots.index(max(dots))
-
-    def cos(u, v):
-        d = sum(a * b for a, b in zip(u, v))
-        nu = math.sqrt(sum(a * a for a in u))
-        nv = math.sqrt(sum(a * a for a in v))
-        return round(d / (nu * nv), 6)
-
-    want = set()
-    for i, v in rows:
-        dup = any(
-            j < i and cell(u) == cell(v) and cos(u, v) >= 0.995
-            for j, u in rows
-        )
-        if not dup:
-            want.add(i)
-    assert got == want
-    # the planted duplicates actually exercised the rule
-    assert len(want) < len(rows)
+            if not dup:
+                want.add(i)
+        assert got == want, (dim, n_cells)
+        # the planted duplicates actually exercised the rule
+        assert len(want) < len(rows)
 
 
-def test_semantic_dedup_arrow_assign_matches_portable(spark):
-    """The Arrow matmul assignment (production path for corpus-scaled
-    quantizers) and the portable literal-fold assignment agree exactly
-    on a tie-free corpus — same 1-based cell labels, same kept set,
-    same evidence pairs."""
+def test_cell_families_agree_on_tie_free_corpus(spark):
+    """The numpy-matmul cell family (production) and the sequential-fold
+    family (the oracle twins') give the same 1-based best cell and the
+    same nprobe = 4 probe set, best first, on a tie-free corpus — and
+    both match a pure-Python argsort with smallest-id ties."""
     import random
 
-    from mriya_spark.ops.vector import _unit_py, hyperplanes, semantic_dedup
+    from mriya_spark.ops.vector import (
+        _fold_cells,
+        _matmul_cells,
+        _unit_py,
+        hyperplanes,
+    )
 
     rng = random.Random(3)
     cents = [_unit_py(p) for p in hyperplanes(8, 6, 11)]
@@ -4156,22 +4164,18 @@ def test_semantic_dedup_arrow_assign_matches_portable(spark):
         if i % 4 == 0:
             rows.append((100 + i, [x * 1.0005 for x in v]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    portable = semantic_dedup(
-        df, cents, threshold=0.995, arrow_assign=False
+    v = F.col("embedding")
+    got = df.select(
+        "vec_id",
+        _fold_cells(v, cents, 1)[0].alias("fold1"),
+        _matmul_cells(v, cents, 1)[0].alias("mat1"),
+        _fold_cells(v, cents, 4).alias("fold4"),
+        _matmul_cells(v, cents, 4).alias("mat4"),
     ).collect()
-    arrow = semantic_dedup(
-        df, cents, threshold=0.995, arrow_assign=True
-    ).collect()
-    assert sorted((r["vec_id"], r["cell"]) for r in portable) == sorted(
-        (r["vec_id"], r["cell"]) for r in arrow
-    )
-    p_pairs = semantic_dedup(
-        df, cents, threshold=0.995, keep_pairs=True, arrow_assign=False
-    ).collect()
-    a_pairs = semantic_dedup(
-        df, cents, threshold=0.995, keep_pairs=True, arrow_assign=True
-    ).collect()
-    key = lambda r: (r["id_kept"], r["id_dropped"], r["cell"])
-    assert sorted(map(key, p_pairs)) == sorted(map(key, a_pairs))
-    assert len(p_pairs) > 0
+    assert len(got) == len(rows)
+    vecs = dict(rows)
+    for r in got:
+        dots = [sum(a * b for a, b in zip(vecs[r["vec_id"]], c)) for c in cents]
+        want = [i + 1 for i in sorted(range(6), key=lambda i: (-dots[i], i))[:4]]
+        assert r["fold1"] == r["mat1"] == want[0]
+        assert list(r["fold4"]) == list(r["mat4"]) == want
