@@ -65,10 +65,6 @@ HEADLINE = [
     # its plan-build cost from single-run audits)
     "tokenizer_bpe_pack",
     "text_classifier_score_bigvocab",
-    # r12 addition: the pack capstone through the past-the-size-gate
-    # broadcast symbol-id path — its delta vs tokenizer_bpe_pack IS
-    # the measured cost of the production-vocab plan shape
-    "tokenizer_bpe_pack_bcast",
     # r13 addition: the approx-trainer production pipeline (batched
     # driver cadence + artifact save/load + decode) — the trainer's
     # round cadence and the decode path get a wall-clock trend line
@@ -324,10 +320,7 @@ def main() -> None:
                     "within-pair order, min-of-warm overlaps (r9 0.958 vs "
                     "r10 0.950), and the two tips' executed plans are "
                     "byte-identical (SCALE.md 'Measurement discipline'). "
-                    "r12 adds tokenizer_bpe_pack_bcast (the pack capstone "
-                    "through the broadcast symbol-id path) — r12 totals are "
-                    "NOT comparable to r11; compare per-query or on the "
-                    "32-query common set. r13 adds tokenizer_approx_roundtrip "
+                    "r13 adds tokenizer_approx_roundtrip "
                     "(approx-train cadence + artifact round-trip + decode) — "
                     "r13 totals are NOT comparable to r12; compare per-query "
                     "or on the 33-query common set. r14 adds "
@@ -374,6 +367,10 @@ def main() -> None:
                     "r18; compare per-query, on the 56-query common set, or "
                     "via the interleaved same-host A/B (benchlogs/"
                     "bench_d6_r19_samehost.json). "
+                    "tokenizer_bpe_pack_bcast (byte-identical body and "
+                    "oracle to tokenizer_bpe_pack) has left the registry "
+                    "and the headline — totals with and without it are NOT "
+                    "comparable; compare per-query. "
                     "Full payload (all raw runs) is "
                     "also written to BENCH_LOCAL_r{N}.json in the repo root "
                     "— the driver's BENCH_r{N}.json keeps only a truncated "

@@ -288,9 +288,9 @@ def fuzzy_join_blocked(
 
     Output: (id_a, id_b, dist), ``a``-side id first.
     """
-    return _fuzzy_pass_on_key(
+    return fuzzy_join_multiblock(
         a, b, col=col, id_col=id_col, max_dist=max_dist,
-        key=F.substring(F.col(col), 1, block_len), max_block=max_block,
+        block_len=block_len, max_block=max_block, passes=("prefix",),
     )
 
 
@@ -305,12 +305,12 @@ def fuzzy_join_multiblock(
     max_block: int | None = None,
     passes: tuple[str, ...] = ("prefix", "suffix"),
 ) -> DataFrame:
-    """Two-pass blocked fuzzy join: the classic multi-pass blocking
-    recovery ``fuzzy_join_blocked``'s docstring points at — run the
-    blocked join once on the PREFIX key and once on the SUFFIX key
-    (last ``block_len`` characters) and union the passes, keeping each
-    pair's single best distance. A true fuzzy pair escapes a pass only
-    when an edit lands inside that pass's block window; with
+    """Multi-pass blocked fuzzy join: the classic multi-pass blocking
+    recovery ``fuzzy_join_blocked``'s docstring points at — by default
+    run the blocked join once on the PREFIX key and once on the SUFFIX
+    key (last ``block_len`` characters) and union the passes, keeping
+    each pair's single best distance. A true fuzzy pair escapes a pass
+    only when an edit lands inside that pass's block window; with
     ``max_dist`` < ``block_len`` an edit cannot sit in both the first
     AND last ``block_len`` characters of a string longer than
     2·``block_len``, so for such strings the union's recall is exact
@@ -326,18 +326,21 @@ def fuzzy_join_multiblock(
     once per pass: one explode into (pass, key) pairs serves ALL
     passes, so the probe join costs one scan + one shuffle join per
     side regardless of pass count — the candidate multiset is
-    identical to running the blocked join once per pass and unioning
-    (the r14 N-join form, which paid N scans and N shuffle joins per
-    side). With ``max_block`` set, the hot-key screen is a SECOND
-    consumer of each side — a column-pruned count scan (it reads only
-    ``col``) feeding a broadcast anti-join — so the precise total is
-    two pruned scans per side, pass-count-independent, not one (r15
-    ADVICE; persisting the exploded frames instead would write
-    ~N_passes×|side| rows of cache for a scan the format prunes to
-    one column, the wrong trade at 100 TB). Candidate volume stays the sum of
-    per-(pass, key) block products — linear, never corpus² (the r15
-    recall probe measured passes adding ~0.5-2 s each at sf0.01 and
-    sf0.1 alike, and the single-join rewrite only lowers the constant).
+    identical to running the blocked join once per pass and unioning,
+    which would pay N scans and N shuffle joins per side. With
+    ``max_block`` set, the hot-key screen is a SECOND consumer of each
+    side — a column-pruned count scan (it reads only ``col``) feeding
+    a broadcast anti-join — so the precise total is two pruned scans
+    per side, pass-count-independent, not one (persisting the exploded
+    frames instead would write ~N_passes×|side| rows of cache for a
+    scan the format prunes to one column, the wrong trade at 100 TB).
+    Candidate volume stays the sum of per-(pass, key) block products —
+    linear, never corpus². Each candidate inside the length band is
+    verified by the banded Levenshtein with ``max_dist`` as its bound,
+    which stops at the bound and returns -1 past it. With ONE pass each
+    (a row, b row) pair is emitted at most once, so the per-pair
+    ``min`` aggregate and its exchange are skipped —
+    ``fuzzy_join_blocked`` is that case.
 
     ``passes`` selects the blocking keys (default the classic
     prefix+suffix two-pass). ``"middle"`` adds a centered window —
@@ -345,10 +348,12 @@ def fuzzy_join_multiblock(
     which single-edit recall never needs (an edit escapes the union
     iff it lands where the prefix and suffix windows OVERLAP, i.e.
     only on strings shorter than 2·block_len — shrink ``block_len``
-    for those; measured exactly in SCALE.md r15) but MULTI-edit
-    recall does: a pair with one edit near each END escapes both the
-    prefix and suffix passes, while a middle window excludes both
-    edit sites whenever the string is longer than ~3·block_len.
+    for those; pinned by
+    ``test_fuzzy_join_multiblock_recovers_prefix_misses`` and
+    ``test_fuzzy_join_middle_pass_recovers_double_ended_edits``) but
+    MULTI-edit recall does: a pair with one edit near each END escapes
+    both the prefix and suffix passes, while a middle window excludes
+    both edit sites whenever the string is longer than ~3·block_len.
     Output: (id_a, id_b, dist), one row per pair."""
     length = F.length(F.col(col))
     keys = {
@@ -368,16 +373,15 @@ def fuzzy_join_multiblock(
             f"passes must be a non-empty subset of {sorted(keys)}, "
             f"got {passes!r}"
         )
-    # SINGLE-JOIN FORM (r15): rather than one blocked join per pass
-    # (N scans + N shuffles per side), explode each row into its
-    # (pass, key) pairs and run ONE hot screen + ONE equi-join on
-    # (pass, key) — the candidate multiset is identical (a pair
-    # matching on two passes appears twice, merged by the min() just
-    # like the unionAll form), the per-pass per-side cap semantics are
-    # exactly the (pass, key) group counts, and each side is scanned
-    # once instead of N times — at 100 TB the scans ARE the cost.
-    # Result-equality with the per-pass oracle replay is what every
-    # multiblock gate hash checks.
+    # SINGLE-JOIN FORM: rather than one blocked join per pass (N scans
+    # + N shuffles per side), explode each row into its (pass, key)
+    # pairs and run ONE hot screen + ONE equi-join on (pass, key) — the
+    # candidate multiset is identical (a pair matching on two passes
+    # appears twice, merged by the min() as a per-pass union would be),
+    # the per-pass per-side cap semantics are exactly the (pass, key)
+    # group counts, and each side is scanned once instead of N times —
+    # at 100 TB the scans ARE the cost. Result-equality with the
+    # per-pass oracle replay is what every multiblock gate hash checks.
     def keyed(side: DataFrame, id_out: str, v_out: str, l_out: str):
         pairs_arr = F.array(
             *[
@@ -390,7 +394,7 @@ def fuzzy_join_multiblock(
         return side.select(
             F.col(id_col).alias(id_out),
             F.col(col).alias(v_out),
-            F.length(F.col(col)).alias(l_out),
+            length.alias(l_out),
             F.explode(pairs_arr).alias("pb"),
         ).select(
             id_out,
@@ -405,7 +409,7 @@ def fuzzy_join_multiblock(
     if max_block is not None:
         from mriya_spark.caching import scoped_persist
 
-        # persisted (r19): the hot list is broadcast into BOTH sides'
+        # persisted: the hot list is broadcast into BOTH sides'
         # anti-joins, and without the persist each broadcast build
         # re-ran both corpus-sized count aggregates — 4 pruned scans
         # per call instead of 2. The list itself is tiny by
@@ -425,69 +429,17 @@ def fuzzy_join_multiblock(
         )
         ka = ka.join(F.broadcast(hot), ["__pass", "__blk"], "left_anti")
         kb = kb.join(F.broadcast(hot), ["__pass", "__blk"], "left_anti")
-    return (
+    pairs = (
         ka.join(kb, on=["__pass", "__blk"])
         .filter(F.abs(F.col("__la") - F.col("__lb")) <= max_dist)
-        .withColumn("dist", F.levenshtein("__va", "__vb"))
-        .filter(F.col("dist") <= max_dist)
-        .groupBy("id_a", "id_b")
-        .agg(F.min(F.col("dist").cast("long")).alias("dist"))
-    )
-
-
-def _fuzzy_pass_on_key(
-    a: DataFrame,
-    b: DataFrame,
-    *,
-    col: str,
-    id_col: str,
-    max_dist: int,
-    key,
-    max_block: int | None,
-) -> DataFrame:
-    """One blocking pass of ``fuzzy_join_multiblock`` under an
-    arbitrary blocking-key Column (prefix, suffix, soundex, ...) —
-    the same equi-join + length band + Levenshtein verify + optional
-    hot-block cap as ``fuzzy_join_blocked``."""
-    ka = a.select(
-        F.col(id_col).alias("id_a"),
-        F.col(col).alias("__va"),
-        key.alias("__blk"),
-        F.length(F.col(col)).alias("__la"),
-    )
-    kb = b.select(
-        F.col(id_col).alias("id_b"),
-        F.col(col).alias("__vb"),
-        key.alias("__blk"),
-        F.length(F.col(col)).alias("__lb"),
-    )
-    if max_block is not None:
-        from mriya_spark.caching import scoped_persist
-
-        # persisted (r19): broadcast into both anti-joins — see
-        # fuzzy_join_multiblock's hot-list persist
-        hot = scoped_persist(
-            ka.groupBy("__blk")
-            .count()
-            .filter(F.col("count") > max_block)
-            .select("__blk")
-            .unionAll(
-                kb.groupBy("__blk")
-                .count()
-                .filter(F.col("count") > max_block)
-                .select("__blk")
-            )
-            .distinct()
+        .withColumn(
+            "dist", F.levenshtein("__va", "__vb", max_dist).cast("long")
         )
-        ka = ka.join(F.broadcast(hot), "__blk", "left_anti")
-        kb = kb.join(F.broadcast(hot), "__blk", "left_anti")
-    return (
-        ka.join(kb, on="__blk")
-        .filter(F.abs(F.col("__la") - F.col("__lb")) <= max_dist)
-        .withColumn("dist", F.levenshtein("__va", "__vb"))
-        .filter(F.col("dist") <= max_dist)
-        .select("id_a", "id_b", F.col("dist").cast("long").alias("dist"))
+        .filter(F.col("dist") >= 0)
     )
+    if len(passes) == 1:
+        return pairs.select("id_a", "id_b", "dist")
+    return pairs.groupBy("id_a", "id_b").agg(F.min("dist").alias("dist"))
 
 
 #: Bloom screen defaults: 32768-bit filter in 63-bit words (520 full

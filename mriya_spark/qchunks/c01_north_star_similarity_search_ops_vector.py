@@ -2027,33 +2027,3 @@ def tokenizer_bpe_pack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return packed.withColumn(
         "token_ids", F.array_join("token_ids", ",")
     )
-
-
-@register("tokenizer_bpe_pack_bcast", _bpe_pack_oracle_sql())
-def tokenizer_bpe_pack_bcast_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The pack capstone under a second gate name, checked against the
-    SAME oracle as ``tokenizer_bpe_pack``. Encode has one path at every
-    vocabulary size; this row's plan test pins that the word->ids table
-    arrives as a BroadcastExchange, never as a map literal
-    (``test_bpe_pack_bcast_ships_symbols_broadcast_not_inlined``)."""
-    from mriya_spark.ops.text import (
-        bpe_token_ids,
-        bpe_train,
-        bpe_word_freq,
-        pack_windows,
-    )
-
-    docs = _cat(spark, sf_dir).table("documents").select("doc_id", "text")
-    wf = bpe_word_freq(docs).localCheckpoint(eager=True)
-    merges = bpe_train(docs, n_merges=_BPE_MERGES, max_batch=6, word_freq=wf)
-    ids = bpe_token_ids(docs, merges, word_freq=wf)
-    packed = pack_windows(
-        ids,
-        context_tokens=256,
-        shards=8,
-        count_col="n_bpe_tokens",
-        carry_cols=("token_ids",),
-    )
-    return packed.withColumn(
-        "token_ids", F.array_join("token_ids", ",")
-    )

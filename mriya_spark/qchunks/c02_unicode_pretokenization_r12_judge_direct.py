@@ -1792,8 +1792,8 @@ def join_fuzzy_blocked_capped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _fuzzy_pass_sql(key: str, cap: int, max_dist: int) -> str:
     """ONE blocking pass over relations ``ta``/``tb`` (columns id,
     name): per-side hot-key screen (HAVING > cap, unioned), length
-    band, Levenshtein verify — the SQL twin of
-    ``ops.relational._fuzzy_pass_on_key``. Single-sourced here and
+    band, Levenshtein verify — the SQL twin of one pass of
+    ``ops.relational.fuzzy_join_multiblock``. Single-sourced here and
     imported by the two- and three-pass prevalidation tests so the
     registered oracle and its prevalidations cannot drift (r15
     self-review)."""

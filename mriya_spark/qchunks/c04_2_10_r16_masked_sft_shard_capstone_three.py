@@ -426,8 +426,8 @@ def join_fuzzy_threeblock_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     side B drops BOTH the first and last character for every third
     customer (a double-ended 2-edit pair: the prefix window contains
     the head edit, the suffix window the tail edit, so BOTH two-pass
-    keys miss — the r15 recall probe measured 0% two-pass vs 100%
-    three-pass recall on exactly this class), drops only the first
+    keys miss — ``test_fuzzy_join_middle_pass_recovers_double_ended_edits``
+    pins this class), drops only the first
     character for custkey%3==1 (suffix/middle recover), only the last
     otherwise (prefix/middle recover). The centered middle window of
     an 18-char name excludes both ends, so the double-ended pairs are

@@ -617,6 +617,31 @@ def test_r15_queries_shuffle_ceilings(spark, queries):
         assert got <= cap, f"{name}: {got} shuffles > ceiling {cap}"
 
 
+def test_fuzzy_join_verify_is_bounded_and_single_pass_unaggregated(
+    spark, queries
+):
+    """Every Levenshtein evaluation in the blocked fuzzy joins is the
+    banded form bounded at max_dist (``Some(2)``), never the unbounded
+    ``None`` form — Catalyst pushes the ``dist`` filter into the join
+    condition and recomputes ``dist`` above it, so an unbounded call
+    would run the full quadratic DP twice per candidate. The one-pass
+    join emits each pair once, so it must carry no per-pair Aggregate
+    over (id_a, id_b); the multi-pass join must keep it."""
+    for name, want_agg in (
+        ("join_fuzzy_blocked", False),
+        ("join_fuzzy_multiblock", True),
+    ):
+        plan = (
+            queries[name](spark, SF)._jdf.queryExecution()
+            .optimizedPlan().toString()
+        )
+        calls = re.findall(r"levenshtein\((?:[^()]|\([^()]*\))*\)", plan)
+        assert calls, f"{name}: no levenshtein in the optimized plan"
+        assert all(c.endswith(", Some(2))") for c in calls), (name, calls)
+        has_agg = bool(re.search(r"Aggregate \[id_a#\d+L?, id_b#\d+L?\]", plan))
+        assert has_agg == want_agg, (name, plan)
+
+
 def test_zorder_layout_shrinks_rowgroup_rectangles(spark, tmp_path):
     """The point of the Morton layout: with rows z-ordered on (a, b),
     every parquet row group covers a small RECTANGLE in (a, b) space,
@@ -777,20 +802,19 @@ def test_pinned_shuffle_counts_on_r11_ops(spark, queries):
 
 
 def test_bpe_pack_bcast_ships_symbols_broadcast_not_inlined(spark, queries):
-    """r12 gate query (r11 judge directive 5): the word->ids table
+    """In the pack capstone ``tokenizer_bpe_pack`` the word->ids table
     must arrive as a BroadcastExchange, NOT a folded map literal — a
     30k-merge production vocab as a map literal costs 60+s of driver
     plan build and a multi-MB constant per task (measured r12: a
     string-valued map literal took 0.4s at 4096 entries, 2s at 16384,
-    62s at 65536). Budget: 3 exchanges on the audited frame, the same
-    as ``tokenizer_bpe_pack`` (encode has one path at every vocabulary
-    size; the old past-the-gate path paid 5). A 4th exchange or a
-    vanished BroadcastExchange means the word table stopped being a
-    broadcast."""
-    audit = _audit(queries["tokenizer_bpe_pack_bcast"](spark, SF))
+    62s at 65536). Budget: 3 exchanges on the audited frame (encode
+    has one path at every vocabulary size; the old past-the-gate path
+    paid 5). A 4th exchange or a vanished BroadcastExchange means the
+    word table stopped being a broadcast."""
+    audit = _audit(queries["tokenizer_bpe_pack"](spark, SF))
     assert audit["shuffles"] == 3
     assert audit["broadcasts"] >= 1
-    plan = executed_plan(queries["tokenizer_bpe_pack_bcast"](spark, SF))
+    plan = executed_plan(queries["tokenizer_bpe_pack"](spark, SF))
     assert "element_at(map(" not in plan
 
 

@@ -377,6 +377,33 @@ def test_fuzzy_join_blocked_edges(spark):
                               max_dist=1, block_len=4).count() == 0
     assert fuzzy_join_blocked(a, empty, col="name", id_col="id").count() == 0
 
+    # the bounded verify's edge, through the one-pass and the multi-pass
+    # form alike: a pair at exactly max_dist keeps its exact distance,
+    # one at max_dist + 1 is dropped, and max_dist=0 keeps exact matches
+    from mriya_spark.ops.relational import fuzzy_join_multiblock
+
+    c = spark.createDataFrame([(1, "abcdefgh")], ["id", "name"])
+    d = spark.createDataFrame(
+        [(10, "abcdefgh"),     # exact (both passes block it)
+         (11, "abcdefXh"),     # 1 substitution
+         (12, "abcdeXYh"),     # 2 substitutions
+         (13, "abcdXYZh"),     # 3 substitutions
+         (14, "abcdefghij"),   # 2 insertions
+         (15, "abcdefgXYZ")],  # 3 edits, inside the length band
+        ["id", "name"],
+    )
+    for join in (fuzzy_join_blocked, fuzzy_join_multiblock):
+        def got(max_dist):
+            return {
+                (r.id_a, r.id_b): r.dist
+                for r in join(c, d, col="name", id_col="id",
+                              max_dist=max_dist, block_len=4).collect()
+            }
+
+        assert got(2) == {(1, 10): 0, (1, 11): 1, (1, 12): 2, (1, 14): 2}, join
+        assert got(1) == {(1, 10): 0, (1, 11): 1}, join
+        assert got(0) == {(1, 10): 0}, join
+
 
 def test_table_profile_empty_frame(spark):
     from mriya_spark.ops.quality import table_profile
