@@ -485,6 +485,15 @@ class SalesforceMockReader(DataSourceReader):
         yield pa.RecordBatch.from_arrays(arrays, schema=arrow_schema)
 
 
+class _UnfilteredReader(SalesforceMockReader):
+    """The reader for a session with Python filter pushdown off. Spark
+    refuses a reader that implements ``pushFilters`` there
+    (``DATA_SOURCE_PUSHDOWN_DISABLED``); this one keeps the stock
+    method, so every page is read and Spark evaluates the filters."""
+
+    pushFilters = DataSourceReader.pushFilters
+
+
 # ------------------------------------------------------------ streaming
 
 class SalesforceMockStreamReader(SimpleDataSourceStreamReader):
@@ -590,8 +599,11 @@ class SalesforceMockDataSource(DataSource):
     ``spark.dataSource.register(SalesforceMockDataSource)``.
 
     Options: ``org_dir`` (mock org directory), ``object`` (table name),
-    ``page_size``. Schema must be supplied by the caller (the reference
-    likewise works from an explicit mapping, never inference).
+    ``page_size``, ``filter_pushdown`` (``"false"`` gives a reader
+    without ``pushFilters``; ``read_object`` passes the session's
+    ``spark.sql.python.filterPushdown.enabled``). Schema must be
+    supplied by the caller (the reference likewise works from an
+    explicit mapping, never inference).
     """
 
     @classmethod
@@ -604,6 +616,8 @@ class SalesforceMockDataSource(DataSource):
         raise ValueError("salesforce_mock requires a schema (.schema(...) or schema_ddl option)")
 
     def reader(self, schema: StructType) -> SalesforceMockReader:
+        if self.options.get("filter_pushdown", "true").lower() == "false":
+            return _UnfilteredReader(schema, self.options)
         return SalesforceMockReader(schema, self.options)
 
     def simpleStreamReader(self, schema: StructType) -> SalesforceMockStreamReader:
@@ -631,12 +645,20 @@ def read_object(
     with different predicates silently keeps the first query's pushed
     filters (observed on Spark 4.1: ``df.filter(p).count()`` then
     ``df.count()`` returns the filtered count twice).
+
+    Filter pushdown to the wire needs
+    ``spark.sql.python.filterPushdown.enabled``, which ``get_spark``
+    sets; this function reads the session's conf and never writes it.
+    On a session with pushdown off it asks for the reader without
+    ``pushFilters`` (Spark rejects the other one there), which fetches
+    every page while Spark evaluates the filters itself: the rows are
+    the same, only more pages are read.
     """
-    if spark.conf.get("spark.sql.python.filterPushdown.enabled", "false") != "true":
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    pushdown = spark.conf.get("spark.sql.python.filterPushdown.enabled", "false")
     return (
         spark.read.format("salesforce_mock")
         .schema(schema_ddl)
+        .option("filter_pushdown", pushdown)
         .option("org_dir", org_dir)
         .option("object", obj)
         .option("page_size", page_size)

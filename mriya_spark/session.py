@@ -20,6 +20,9 @@ from mriya_spark.cachedir import cache_root as _cache_root
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+#: holds only the workers' ``sitecustomize`` boot hook
+_WORKER_BOOT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_workerboot")
+
 
 def get_spark(
     app_name: str = "mriya_spark",
@@ -48,6 +51,15 @@ def get_spark(
       stays flat across warm runs. The conf is static: a session this
       function did not build (``getOrCreate`` on a running context)
       keeps 100 entries, stays correct and pays the recompiles.
+    - worker boot hook on ``spark.executorEnv.PYTHONPATH`` (ahead of
+      any value the caller passes in ``extra_conf``): every Python
+      daemon (one per kind of data-source planner call, one for UDFs)
+      loads pyspark from the compiled-code cache of
+      ``mriya_spark/_zipcache.py`` instead of compiling ``pyspark.zip``
+      twice, ~1.3 s per daemon on 4 vCPU. A session this function did
+      not build has no hook: its workers pay the stock import, and the
+      package, once unpickled there, only caches what is imported
+      after it.
     """
     _cache_dir()  # establish the 0700 cache root before Spark writes under it
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
@@ -81,7 +93,11 @@ def get_spark(
         )
         .config("spark.sql.codegen.cache.maxEntries", "2000")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+        p for p in (_WORKER_BOOT, conf.get("spark.executorEnv.PYTHONPATH")) if p
+    )
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1325,10 +1325,14 @@ def _read_seen_doc_ids(
     already-written ``doc_id`` column, or ``None`` when the target
     does not exist yet (first batch).
 
-    try/except rather than os.path.exists: the target can live on any
-    Hadoop filesystem (hdfs://, s3a://, ...), where a driver-local
+    ``fs_exists`` rather than os.path.exists: the target can live on
+    any Hadoop filesystem (hdfs://, s3a://, ...), where a driver-local
     stat is always False and the replay guard would silently disarm
-    (r16 self-review, second pass). Explicit schema (r19): the guard
+    (r16 self-review, second pass). The check comes before the read
+    because a read of a missing path makes ``FileStreamSink`` log a
+    ~50-line "Assume no metadata directory" stack trace on every first
+    batch; the ``PATH_NOT_FOUND`` except still covers a target deleted
+    between the check and the read. Explicit schema (r19): the guard
     needs doc_id alone and the target's schema is this writer's own —
     inferring it re-read parquet footers as one extra job per
     micro-batch. ONE-TIME schema validation (r19 ADVICE, r20): an
@@ -1339,6 +1343,8 @@ def _read_seen_doc_ids(
     an existing target pays one footer-inference read and asserts the
     column is really there (``validated`` is the per-stream once
     flag, amortizing the check across the run)."""
+    if not fs_exists(batch.sparkSession, target_path):
+        return None
     try:
         seen = batch.sparkSession.read.schema("doc_id long").parquet(
             target_path

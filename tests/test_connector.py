@@ -99,6 +99,28 @@ def test_fresh_load_isolates_pushdown(spark, org):
     assert n_full > n_filtered
 
 
+def test_read_object_leaves_pushdown_conf_alone(spark, org):
+    """With pushdown off, ``read_object`` does not switch it on: Spark
+    evaluates the filter over every page and returns the same rows."""
+    key = "spark.sql.python.filterPushdown.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = read_object(spark, org, "Account", CUSTOMER_DDL, page_size=40).filter(
+            F.col("c_acctbal") > 5000
+        )
+        expected = spark.read.parquet(f"{SF}/customer.parquet").filter(
+            F.col("c_acctbal") > 5000
+        )
+        assert got.count() == expected.count() > 0
+        assert got.exceptAll(expected.select(*got.columns)).count() == 0
+        assert spark.conf.get(key) == "false"
+        pages = [c for c in MockTransport(org).calls() if c["op"] == "query_page"]
+        assert pages and not any(p["filters"] for p in pages)
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_stream_reader_pages_incrementally(spark, tmp_path):
     """The DSv2 stream reader must page the org in offset-sized
     micro-batches (queryMore-cursor shape): every wire call carries

@@ -822,6 +822,33 @@ def test_stream_encode_fixed_vocab_nonpath_error_fails_loud(spark, tmp_path):
     ]
 
 
+def test_replay_guard_checks_for_the_target_before_reading_it(
+    spark, tmp_path, monkeypatch
+):
+    """A first batch does not read its missing target: that read makes
+    ``FileStreamSink`` log a ~50-line "Assume no metadata directory"
+    stack trace on a green run. A target deleted between the check and
+    the read still reads as a first batch."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    batch = spark.range(1).withColumnRenamed("id", "doc_id")
+    missing = str(tmp_path / "missing")
+    reads = []
+    stock = DataFrameReader.parquet
+
+    def parquet(self, *paths, **options):
+        reads.append(paths)
+        return stock(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    assert S._read_seen_doc_ids(batch, missing, [False]) is None
+    assert reads == []
+
+    monkeypatch.setattr(S, "fs_exists", lambda spark, path: True)
+    assert S._read_seen_doc_ids(batch, missing, [False]) is None
+    assert reads == [(missing,)]
+
+
 def test_stream_encode_fixed_vocab_foreign_target_fails_loud(
     spark, tmp_path
 ):

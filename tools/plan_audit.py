@@ -1,8 +1,9 @@
 """Physical-plan audit for the headline queries: the 100 TB facts.
 
 For each bench headline query this prints (and with ``--write``
-records to PLANS.md) the plan properties that decide whether the query
-survives a 1000-executor scale-up:
+records to PLANS.md; with ``--check`` exits 1 when the committed
+PLANS.md differs from what it prints) the plan properties that decide
+whether the query survives a 1000-executor scale-up:
 
 - shuffle exchanges (each one is a full-data network pass at scale)
 - broadcast exchanges (dimension joins that correctly avoid a shuffle)
@@ -13,11 +14,12 @@ survives a 1000-executor scale-up:
   (row-at-a-time pickle) must NEVER appear — asserted in
   tests/test_plans.py::test_headline_queries_have_no_row_python.
 
-Usage: python tools/plan_audit.py [--sf DIR] [--write]
+Usage: python tools/plan_audit.py [--sf DIR] [--write | --check]
 """
 
 from __future__ import annotations
 
+import difflib
 import os
 import re
 import sys
@@ -117,8 +119,9 @@ def audit_plan(df) -> dict:
     }
 
 
-def main() -> None:
+def main() -> int:
     write = "--write" in sys.argv
+    check = "--check" in sys.argv
     sf = DEFAULT_SF
     if "--sf" in sys.argv:
         sf = sys.argv[sys.argv.index("--sf") + 1]
@@ -196,12 +199,21 @@ def main() -> None:
         )
         print(lines[-1])
     out = "\n".join(lines) + "\n"
+    plans = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "PLANS.md")
     if write:
-        with open(os.path.join(os.path.dirname(os.path.dirname(
-                os.path.abspath(__file__))), "PLANS.md"), "w") as fh:
+        with open(plans, "w") as fh:
             fh.write(out)
         print("wrote PLANS.md")
+    if check:
+        with open(plans) as fh:
+            committed = fh.read().splitlines()
+        drift = list(difflib.unified_diff(
+            committed, out.splitlines(), "PLANS.md", "plan_audit", lineterm=""))
+        print("\n".join(drift) or "PLANS.md is current")
+        return 1 if drift else 0
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
