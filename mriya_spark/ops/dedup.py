@@ -32,7 +32,7 @@ constants) so results are reproducible run to run and node to node.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from mriya_spark.caching import cache_scope, scoped_persist
@@ -518,8 +518,8 @@ def connected_components(
     driver loop is a control plane of a few joins, same posture as
     ``ivf_train``'s Lloyd iterations. Each round is one shuffle join
     labels><edges + one min-aggregation; the early-exit check is an
-    ``Observation``-style count on the round's change set, not a
-    second pass. Raises if ``max_iterations`` rounds don't converge
+    ``Observation`` count of the round's changed labels, filled in by
+    the job that checkpoints them, not a second pass. Raises if ``max_iterations`` rounds don't converge
     (pathological chain longer than the budget).
     """
     # edges are referenced by every propagation round — materialize
@@ -569,12 +569,16 @@ def _propagate_min_labels(
                 (F.col("ncomp") < F.col("comp")).alias("__changed"),
             )
         )
-        # materialize the round once: the change count AND next round's
-        # labels come from the same localCheckpoint, no recompute and
-        # no unbounded lineage growth across iterations
-        updated = updated.localCheckpoint(eager=True)
-        n_changed = updated.filter("__changed").count()
-        labels = updated.drop("__changed")
+        # materialize the round once: the change count is observed on
+        # the same job that checkpoints next round's labels, so there
+        # is no second pass and no unbounded lineage growth
+        obs = Observation()
+        labels = (
+            updated.observe(obs, F.count_if("__changed").alias("n"))
+            .localCheckpoint(eager=True)
+            .drop("__changed")
+        )
+        n_changed = obs.get["n"]
         if n_changed == 0:
             return labels.select(F.col("u").alias("doc_id"), "comp")
     raise RuntimeError(

@@ -18,6 +18,7 @@ import bisect as _bisect
 import heapq as _heapq
 import re as _re
 from collections import defaultdict as _defaultdict
+from functools import reduce as _reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -2210,15 +2211,16 @@ def _bpe_word_ids(
 
 
 def _bpe_encode(
-    df: DataFrame, wid: DataFrame, *, id_col: str, text_col: str,
-    token_re: str,
+    df: DataFrame, wid: DataFrame, *, keys: tuple[str, ...], text_col: str,
+    token_re: str, carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Per-doc ``(id, token_ids, n_bpe_tokens)`` from a
+    """Per-key ``(*keys, *carry, token_ids, n_bpe_tokens)`` from a
     ``_bpe_word_ids`` table: tokenize with positions, broadcast-join
-    the word table, regroup each doc by word position."""
+    the word table, regroup each key by word position, and left-join
+    the sequences back to ``df``'s keys and ``carry`` columns."""
     toks = _pretokenize_expr(text_col, token_re)
     dwords = (
-        df.select(F.col(id_col), F.posexplode(toks).alias("wpos", "word"))
+        df.select(*keys, F.posexplode(toks).alias("wpos", "word"))
         .join(F.broadcast(wid), "word", "left")
         .withColumn(
             "word_ids",
@@ -2235,7 +2237,7 @@ def _bpe_encode(
             ),
         )
     )
-    dtok = dwords.groupBy(id_col).agg(
+    dtok = dwords.groupBy(*keys).agg(
         F.expr(
             "flatten(transform("
             "array_sort(collect_list(struct(wpos, word_ids))),"
@@ -2243,8 +2245,9 @@ def _bpe_encode(
         ).alias("token_ids")
     )
     empty = F.expr("cast(array() as array<bigint>)")
-    return df.select(id_col).join(dtok, id_col, "left").select(
-        id_col,
+    return df.select(*keys, *carry).join(dtok, list(keys), "left").select(
+        *keys,
+        *carry,
         F.coalesce("token_ids", empty).alias("token_ids"),
         F.size(F.coalesce("token_ids", empty)).cast("long").alias(
             "n_bpe_tokens"
@@ -2308,8 +2311,88 @@ def bpe_token_ids(
         token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
     )
     return _bpe_encode(
-        df, wid, id_col=id_col, text_col=text_col, token_re=token_re
+        df, wid, keys=(id_col,), text_col=text_col, token_re=token_re
     )
+
+
+def _bpe_encode_segments(
+    segs: DataFrame,
+    merges: list[tuple[str, str, int]],
+    *,
+    id_col: str,
+    order_cols: tuple[str, ...],
+    symbols: list[str] | None,
+    oov_id: int | None,
+    word_freq: DataFrame | None,
+    vseg: DataFrame | None,
+    token_re: str,
+) -> DataFrame:
+    """The one encode behind every multi-segment sequence: a segment
+    table ``(id, *order_cols, __stxt, __loss)`` in, ``(id, __segs)``
+    out, where ``__segs`` is the id's ``array<struct<*order_cols,
+    __loss, token_ids>>`` sorted by ``order_cols``. Rows with a NULL
+    id are dropped first (a NULL key would fold every such row into
+    one sequence). One word->ids table covers all segments: without
+    ``word_freq``/``vseg`` it is built over the union of the segment
+    texts, so a symbol gets one id everywhere in a sequence. Plan: one
+    posexplode->broadcast-join->regroup pass keyed on ``(id,
+    *order_cols)`` for the whole table, whatever the segment count,
+    then one per-id regroup; segments sort inside their own group, so
+    there is no global order."""
+    segs = segs.where(F.col(id_col).isNotNull())
+    wid = _bpe_word_ids(
+        segs, merges, text_col="__stxt", word_freq=word_freq,
+        token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
+    )
+    enc = _bpe_encode(
+        segs, wid, keys=(id_col, *order_cols), text_col="__stxt",
+        token_re=token_re, carry=("__loss",),
+    )
+    return enc.groupBy(id_col).agg(
+        F.array_sort(
+            F.collect_list(F.struct(*order_cols, "__loss", "token_ids"))
+        ).alias("__segs")
+    )
+
+
+def _segs_sequence(n_loss_col: str) -> list[Column]:
+    """``token_ids``, ``loss_mask``, ``n_tokens`` and ``n_loss_col``
+    (the masked-in token count) over ``_bpe_encode_segments``'
+    ``__segs``: ids concatenated in segment order, each segment's
+    ``__loss`` repeated over its tokens."""
+    return [
+        F.expr("flatten(transform(__segs, s -> s.token_ids))")
+        .alias("token_ids"),
+        F.expr(
+            "flatten(transform(__segs, s -> "
+            "array_repeat(s.__loss, cast(size(s.token_ids) as int))))"
+        ).alias("loss_mask"),
+        F.expr(
+            "aggregate(__segs, cast(0 as long), "
+            "(a, s) -> a + size(s.token_ids))"
+        ).alias("n_tokens"),
+        F.expr(
+            "aggregate(__segs, cast(0 as long), "
+            "(a, s) -> a + s.__loss * size(s.token_ids))"
+        ).alias(n_loss_col),
+    ]
+
+
+def _part_segments(
+    df: DataFrame, keys: tuple[str, ...], parts: list[tuple[Column, Column]]
+) -> DataFrame:
+    """One ``(*keys, __part, __stxt, __loss)`` segment per row of
+    ``df`` and entry of ``parts``, a list of ``(text, loss)`` columns
+    in part order."""
+    return _reduce(DataFrame.unionAll, [
+        df.select(
+            *keys,
+            F.lit(i).alias("__part"),
+            text.alias("__stxt"),
+            loss.alias("__loss"),
+        )
+        for i, (text, loss) in enumerate(parts)
+    ])
 
 
 def sft_encode_masks(
@@ -2332,66 +2415,34 @@ def sft_encode_masks(
     prompt position and 1 over every completion position — aligned by
     construction (``size(token_ids) == size(loss_mask)``, completion
     mask count = completion token count). Returns ``(id, token_ids,
-    loss_mask, n_tokens, n_completion_tokens)``; feed it through
-    ``pack_windows_bestfit(carry_cols=('token_ids', 'loss_mask'))`` +
-    ``pack_windows_table`` for non-straddling masked training shards
-    (both carries concatenate in the same doc order, so alignment
-    survives packing).
+    loss_mask array<int>, n_tokens, n_completion_tokens)``; feed it
+    through ``pack_windows_bestfit(carry_cols=('token_ids',
+    'loss_mask'))`` + ``pack_windows_table`` for non-straddling masked
+    training shards (both carries concatenate in the same doc order,
+    so alignment survives packing). Rows with a NULL id are dropped.
 
     ``symbols``/``oov_id`` follow ``bpe_token_ids``' id-authority
     contract. Pass ``word_freq``/``vseg`` built over a corpus whose
     word vocabulary COVERS both columns (e.g. the full text the pair
-    was split from, or the union of both columns) — the word->ids map
-    is a lookup, so a superset vocabulary is exactly right and the
-    word->ids table is built once for both encodes. When NEITHER is
-    given (r15 ADVICE, high): one shared table is built here over the
-    UNION of the two columns and joined by both encode passes — before
-    r16 each call derived its own corpus-dependent symbol-id table
-    from its own column's symbol set, so without ``symbols=`` the same
-    symbol could get DIFFERENT ids in the two halves of one
-    concatenated sequence (silently incoherent training data).
-    Plan: one pandas UDF builds the word->ids table on the executors
-    (see ``bpe_token_ids``); two posexplode->broadcast-join->
-    regroup encode passes (one per column — each column is its own
-    corpus-sized input) share it; one id-side join, scan-local mask
-    construction. Reference contract: HF/TRL
-    `DataCollatorForCompletionOnlyLM` semantics (prompt tokens
+    was split from) — the word->ids map is a lookup, so a superset
+    vocabulary is exactly right. When NEITHER is given, the table is
+    built over both columns together, so without ``symbols=`` a
+    symbol still gets the same corpus-derived id in both halves of one
+    sequence. Plan: the prompt (part 0, loss 0) and the completion
+    (part 1, loss 1) are two segments of one ``_bpe_encode_segments``
+    pass — one word-level posexplode for both columns — and the mask
+    is built scan-locally from the segment sizes. Reference contract:
+    HF/TRL `DataCollatorForCompletionOnlyLM` semantics (prompt tokens
     excluded from the loss)."""
-    if vseg is None and word_freq is None:
-        union = df.select(
-            F.col(prompt_col).alias("__sft_text")
-        ).unionAll(df.select(F.col(completion_col).alias("__sft_text")))
-        word_freq = bpe_word_freq(
-            union, text_col="__sft_text", token_re=token_re
-        )
-    wid = _bpe_word_ids(
-        df, merges, text_col=prompt_col, word_freq=word_freq,
-        token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
+    segs = _part_segments(df, (id_col,), [
+        (F.col(prompt_col), F.lit(0)), (F.col(completion_col), F.lit(1)),
+    ])
+    g = _bpe_encode_segments(
+        segs, merges, id_col=id_col, order_cols=("__part",),
+        symbols=symbols, oov_id=oov_id, word_freq=word_freq, vseg=vseg,
+        token_re=token_re,
     )
-    p = _bpe_encode(
-        df, wid, id_col=id_col, text_col=prompt_col, token_re=token_re
-    ).select(
-        id_col,
-        F.col("token_ids").alias("__p_ids"),
-        F.col("n_bpe_tokens").alias("__np"),
-    )
-    c = _bpe_encode(
-        df, wid, id_col=id_col, text_col=completion_col, token_re=token_re
-    ).select(
-        id_col,
-        F.col("token_ids").alias("__c_ids"),
-        F.col("n_bpe_tokens").alias("__nc"),
-    )
-    return p.join(c, id_col).select(
-        id_col,
-        F.expr("concat(__p_ids, __c_ids)").alias("token_ids"),
-        F.expr(
-            "concat(array_repeat(0, cast(__np as int)), "
-            "array_repeat(1, cast(__nc as int)))"
-        ).alias("loss_mask"),
-        (F.col("__np") + F.col("__nc")).cast("long").alias("n_tokens"),
-        F.col("__nc").cast("long").alias("n_completion_tokens"),
-    )
+    return g.select(id_col, *_segs_sequence("n_completion_tokens"))
 
 
 def dpo_encode_pairs(
@@ -2419,61 +2470,44 @@ def dpo_encode_pairs(
     chosen_ids, chosen_mask, rejected_ids, rejected_mask,
     n_prompt_tokens, n_chosen_tokens, n_rejected_tokens)`` — both
     masks share the same prompt-length zero run, so a loader can
-    verify pair alignment with ``n_prompt_tokens`` alone.
+    verify pair alignment with ``n_prompt_tokens`` alone. Rows with a
+    NULL id are dropped.
 
-    Vocabulary coherence follows ``sft_encode_masks``' r16 contract:
-    pass ``word_freq``/``vseg`` built over a corpus covering ALL THREE
-    columns; when neither is given, one shared segmentation is built
-    here over their union and reused by all three encode passes (one
-    word->ids table, so the same symbol can never get different ids
-    across the pair). ``symbols``/``oov_id``
-    follow ``bpe_token_ids``' id-authority contract. Plan: three
-    posexplode->broadcast-join->regroup encode passes (each column is
-    its own corpus-sized input) sharing one word->ids table,
-    two doc-keyed joins, scan-local mask construction — the masked-SFT
-    capstone's measured shape (SCALE.md r16) plus one encode pass."""
-    if vseg is None and word_freq is None:
-        union = (
-            df.select(F.col(prompt_col).alias("__dpo_text"))
-            .unionAll(df.select(F.col(chosen_col).alias("__dpo_text")))
-            .unionAll(df.select(F.col(rejected_col).alias("__dpo_text")))
-        )
-        word_freq = bpe_word_freq(
-            union, text_col="__dpo_text", token_re=token_re
-        )
-    wid = _bpe_word_ids(
-        df, merges, text_col=prompt_col, word_freq=word_freq,
-        token_re=token_re, symbols=symbols, oov_id=oov_id, vseg=vseg,
+    Vocabulary coherence follows ``sft_encode_masks``: pass
+    ``word_freq``/``vseg`` built over a corpus covering ALL THREE
+    columns; when neither is given, the word->ids table is built over
+    the three columns together, so the same symbol can never get
+    different ids across the pair. ``symbols``/``oov_id`` follow
+    ``bpe_token_ids``' id-authority contract. Plan: prompt, chosen and
+    rejected are parts 0, 1 and 2 of one ``_bpe_encode_segments``
+    pass; both sequences and masks are built scan-locally from the
+    three parts."""
+    segs = _part_segments(df, (id_col,), [
+        (F.col(c), F.lit(loss))
+        for c, loss in ((prompt_col, 0), (chosen_col, 1), (rejected_col, 1))
+    ])
+    g = _bpe_encode_segments(
+        segs, merges, id_col=id_col, order_cols=("__part",),
+        symbols=symbols, oov_id=oov_id, word_freq=word_freq, vseg=vseg,
+        token_re=token_re,
     )
+    p, ch, rj = (f"__segs[{i}].token_ids" for i in range(3))
 
-    def _enc(col: str, tag: str) -> DataFrame:
-        return _bpe_encode(
-            df, wid, id_col=id_col, text_col=col, token_re=token_re
-        ).select(
-            id_col,
-            F.col("token_ids").alias(f"__{tag}_ids"),
-            F.col("n_bpe_tokens").alias(f"__n{tag}"),
-        )
-
-    p = _enc(prompt_col, "p")
-    ch = _enc(chosen_col, "ch")
-    rj = _enc(rejected_col, "rj")
-
-    def _mask(n_cand: str) -> F.Column:
+    def _mask(c: str) -> Column:
         return F.expr(
-            f"concat(array_repeat(0, cast(__np as int)), "
-            f"array_repeat(1, cast({n_cand} as int)))"
+            f"concat(array_repeat(0, size({p})), array_repeat(1, size({c})))"
         )
 
-    return p.join(ch, id_col).join(rj, id_col).select(
+    return g.select(
         id_col,
-        F.expr("concat(__p_ids, __ch_ids)").alias("chosen_ids"),
-        _mask("__nch").alias("chosen_mask"),
-        F.expr("concat(__p_ids, __rj_ids)").alias("rejected_ids"),
-        _mask("__nrj").alias("rejected_mask"),
-        F.col("__np").cast("long").alias("n_prompt_tokens"),
-        F.col("__nch").cast("long").alias("n_chosen_tokens"),
-        F.col("__nrj").cast("long").alias("n_rejected_tokens"),
+        F.expr(f"concat({p}, {ch})").alias("chosen_ids"),
+        _mask(ch).alias("chosen_mask"),
+        F.expr(f"concat({p}, {rj})").alias("rejected_ids"),
+        _mask(rj).alias("rejected_mask"),
+        *(
+            F.expr(f"size({c})").cast("long").alias(f"n_{n}_tokens")
+            for c, n in ((p, "prompt"), (ch, "chosen"), (rj, "rejected"))
+        ),
     )
 
 
@@ -2499,94 +2533,39 @@ def chat_encode_multiturn(
     turn carries 0 (HF multi-turn ``apply_chat_template`` +
     ``assistant_only_loss`` semantics — the single-turn
     ``sft_encode_masks`` can't express a mask that switches on and off
-    mid-sequence). Returns ``(id, token_ids, loss_mask, n_tokens,
-    n_loss_tokens)``; feed through ``pack_windows_bestfit(carry_cols=
-    ('token_ids', 'loss_mask'))`` for packed multi-turn shards.
+    mid-sequence). Returns ``(id, token_ids, loss_mask array<bigint>,
+    n_tokens, n_loss_tokens)``; feed through
+    ``pack_windows_bestfit(carry_cols=('token_ids', 'loss_mask'))``
+    for packed multi-turn shards.
 
-    Plan — and why it SCALES BETTER than the per-column form: the
-    conversation explodes into (turn, part) segments (part 0 = the
-    role marker, part 1 = the content) keyed by one composite string,
-    so the whole corpus takes ONE posexplode->broadcast-join->regroup
-    encode pass regardless of turn count (the single-turn op pays one
-    corpus-sized pass PER column); one segment-count-sized join brings
-    (tpos, part, loss) back, and one per-doc regroup concatenates ids
-    and masks in turn order — segments sort by (tpos, part) inside
-    their own group, no global order. Scan-count honesty (the r15
-    multiblock lesson): the attrs side of that join re-reads the
-    conversations source a second time, but column pruning drops the
-    turn TEXT from it (only ids, positions, and roles flow), so the
-    second scan is metadata-weight, not corpus-weight — callers who
-    cannot afford even that can checkpoint ``df`` upstream.
-    Vocabulary coherence follows the
-    r16 contract: pass ``word_freq``/``vseg`` covering the RENDERED
-    text (markers included); when neither is given, the word->ids
-    table is built over the segment texts (which include the
-    markers). Docs whose ``turns`` array is empty or
-    NULL are dropped (a conversation with no turns is not a training
-    example); empty-text turns still render their marker token."""
+    Plan: the conversation explodes into (turn, part) segments (part 0
+    = the role marker, part 1 = the content), and the whole corpus
+    takes one ``_bpe_encode_segments`` pass keyed on (id, turn, part)
+    regardless of turn count. Vocabulary coherence follows
+    ``sft_encode_masks``: pass ``word_freq``/``vseg`` covering the
+    RENDERED text (markers included); when neither is given, the
+    word->ids table is built over the segment texts (which include
+    the markers). Docs whose ``turns`` array is empty or NULL are
+    dropped (a conversation with no turns is not a training example),
+    and so are docs with a NULL id; empty-text turns still render
+    their marker token."""
     t = df.select(
-        F.col(id_col),
-        F.posexplode(turns_col).alias("__tpos", "__turn"),
-    ).select(
-        id_col,
-        "__tpos",
-        F.coalesce(F.col("__turn.role"), F.lit("")).alias("__role"),
-        F.coalesce(F.col("__turn.text"), F.lit("")).alias("__txt"),
+        F.col(id_col), F.posexplode(turns_col).alias("__tpos", "__turn")
     )
-    segs = (
-        t.select(
-            id_col, "__tpos",
-            F.lit(0).alias("__part"),
-            F.col("__role").alias("__stxt"),
-            F.lit(0).cast("long").alias("__loss"),
-        )
-        .unionAll(
-            t.select(
-                id_col, "__tpos",
-                F.lit(1).alias("__part"),
-                F.col("__txt").alias("__stxt"),
-                (F.col("__role") == F.lit(assistant_role))
-                .cast("long").alias("__loss"),
-            )
-        )
-        .withColumn(
-            "__seg",
-            F.concat_ws(
-                "#", F.col(id_col).cast("string"), "__tpos", "__part"
-            ),
-        )
+    role = F.coalesce(F.col("__turn.role"), F.lit(""))
+    segs = _part_segments(t, (id_col, "__tpos"), [
+        (role, F.lit(0).cast("long")),
+        (
+            F.coalesce(F.col("__turn.text"), F.lit("")),
+            (role == F.lit(assistant_role)).cast("long"),
+        ),
+    ])
+    g = _bpe_encode_segments(
+        segs, merges, id_col=id_col, order_cols=("__tpos", "__part"),
+        symbols=symbols, oov_id=oov_id, word_freq=word_freq, vseg=vseg,
+        token_re=token_re,
     )
-    enc = bpe_token_ids(
-        segs, merges, id_col="__seg", text_col="__stxt",
-        word_freq=word_freq, token_re=token_re, symbols=symbols,
-        oov_id=oov_id, vseg=vseg,
-    )
-    joined = segs.select(
-        "__seg", id_col, "__tpos", "__part", "__loss"
-    ).join(enc, "__seg")
-    g = joined.groupBy(id_col).agg(
-        F.expr(
-            "array_sort(collect_list(struct(__tpos, __part, __loss, "
-            "token_ids)))"
-        ).alias("__segs")
-    )
-    return g.select(
-        id_col,
-        F.expr("flatten(transform(__segs, s -> s.token_ids))")
-        .alias("token_ids"),
-        F.expr(
-            "flatten(transform(__segs, s -> "
-            "array_repeat(s.__loss, cast(size(s.token_ids) as int))))"
-        ).alias("loss_mask"),
-        F.expr(
-            "aggregate(__segs, cast(0 as long), "
-            "(a, s) -> a + size(s.token_ids))"
-        ).alias("n_tokens"),
-        F.expr(
-            "aggregate(__segs, cast(0 as long), "
-            "(a, s) -> a + s.__loss * size(s.token_ids))"
-        ).alias("n_loss_tokens"),
-    )
+    return g.select(id_col, *_segs_sequence("n_loss_tokens"))
 
 
 def _strided_window_count_expr(count_col: str, window: int, stride: int) -> str:

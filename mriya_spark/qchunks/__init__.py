@@ -1,3 +1,3 @@
-"""Chunk modules of the query registry — mechanical import-only
-split of queries.py (see tools/split_queries.py). Import order =
-registration order = SURVEY §2 order; do not reorder."""
+"""Chunk modules of the query registry, imported by queries.py.
+Import order = registration order = SURVEY §2 order; do not
+reorder."""

@@ -1,6 +1,5 @@
-"""Auto-generated by tools/split_queries.py — import-only
-split of queries.py. Function sources are verbatim; edit
-here as you would have edited queries.py."""
+"""One chunk of the query registry, imported by queries.py in
+registration order. Edit the query functions here."""
 
 from __future__ import annotations
 

@@ -1,6 +1,5 @@
-"""Auto-generated by tools/split_queries.py — import-only
-split of queries.py. Function sources are verbatim; edit
-here as you would have edited queries.py."""
+"""One chunk of the query registry, imported by queries.py in
+registration order. Edit the query functions here."""
 
 from __future__ import annotations
 
@@ -198,9 +197,9 @@ def tokenizer_sft_masks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     half, or a per-column id table (the r15 ADVICE incoherence, now
     fixed in the op) all flip the hash. Plan: one corpus pass for
     word_freq, one vocab-sized merge replay shared by vocab collect
-    and BOTH encodes (``vseg=``), two posexplode->broadcast-join
-    encode passes (each column is its own corpus-sized input), one
-    id-side join, scan-local mask construction."""
+    and the encode (``vseg=``), ONE posexplode->broadcast-join encode
+    pass over both columns as (doc, part) segments, one per-doc
+    regroup, scan-local mask construction."""
     from mriya_spark.ops.text import (
         bpe_segment_vocab,
         bpe_symbols,
@@ -322,8 +321,8 @@ def _sft_masked_pack_oracle_sql(
 def tokenizer_pack_masked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE MASKED SFT SHARD CAPSTONE (r15 judge directive 1): the
     (token_ids, loss_mask) training shard a fine-tuning loader
-    actually consumes — ``sft_encode_masks`` (two encodes under one
-    vocabulary, completion-only mask) ->
+    actually consumes — ``sft_encode_masks`` (both columns in one
+    encode under one vocabulary, completion-only mask) ->
     ``pack_windows_bestfit(carry_cols=('token_ids', 'loss_mask'))``
     (non-straddling FFD, both arrays riding the same rows) ->
     ``pack_windows_table(extra_ids_cols=('loss_mask',))`` (ONE
@@ -335,9 +334,9 @@ def tokenizer_pack_masked_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-checked through the pack, not just counted: a one-position
     mask shift, a payload ordered differently from the other, or a
     straddle anywhere changes a window's loss_mask string and flips
-    the hash. Plan: the sft encode plan + one shard shuffle + one
-    Arrow-batched grouped-map (segment-tree FFD) + one (shard, win)
-    aggregate — identical shape to ``tokenizer_pack_bestfit`` with a
+    the hash. Plan: the sft encode plan (one segment-keyed encode
+    pass) + one shard shuffle + one Arrow-batched grouped-map
+    (segment-tree FFD) + one (shard, win) aggregate — identical shape to ``tokenizer_pack_bestfit`` with a
     second carried array (weak-scaling probed at 100x in SCALE.md
     r16). Reference contract: the SFT counterpart of
     ``tokenizer_pack_bestfit`` with completion-only-loss semantics."""
@@ -1106,9 +1105,9 @@ def tokenizer_sft_chat_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     user token masked 0, ONLY assistant tokens carry 1, and the oracle
     hash-checks mask values position-for-position. Plan: identical
     exchange shape to ``tokenizer_sft_masks`` (one corpus pass for
-    word_freq, one shared merge replay, two posexplode->broadcast-join
-    encodes, one doc-keyed join) — the template adds a single
-    scan-local projection."""
+    word_freq, one shared merge replay, one segment-keyed
+    posexplode->broadcast-join encode over both columns, one per-doc
+    regroup) — the template adds a single scan-local projection."""
     from mriya_spark.ops.text import (
         chat_render,
         sft_encode_masks,
@@ -1216,9 +1215,10 @@ def tokenizer_dpo_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequences share the same prompt-length zero run). The oracle
     replays training plus all THREE encode chains under the shared
     symbol table and hash-checks every id and mask position. Plan:
-    the masked-SFT shape plus one encode pass — one corpus pass for
-    word_freq, one shared merge replay, three posexplode->broadcast-
-    join encodes, two doc-keyed joins, scan-local masks."""
+    the masked-SFT shape with a third segment per doc — one corpus
+    pass for word_freq, one shared merge replay, ONE segment-keyed
+    posexplode->broadcast-join encode over all three columns, one
+    per-doc regroup, scan-local masks."""
     from mriya_spark.ops.text import (
         dpo_encode_pairs,
     )
@@ -1415,9 +1415,8 @@ def tokenizer_chat_multiturn_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``assistant_only_loss`` semantics). The oracle replays training
     plus the single segment-keyed encode chain and hash-checks every
     id and mask position. Plan: ONE corpus-sized encode pass
-    regardless of turn count (segments keyed by a composite id), one
-    segment-count join, one per-doc regroup — the multi-turn form
-    scales BETTER per byte than the per-column single-turn gates."""
+    regardless of turn count (segments keyed by (doc, turn, part)),
+    one per-doc regroup — the same encode as the single-turn gates."""
     out = _chat_multiturn_encoded(spark, sf_dir)
     return out.select(
         "doc_id",

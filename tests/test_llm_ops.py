@@ -223,6 +223,28 @@ def test_connected_components_matches_union_find(spark):
     assert got == want
 
 
+def test_connected_components_round_is_its_checkpoint_jobs(spark):
+    """One propagation round runs only the jobs of its eager
+    localCheckpoint: the change count that decides the early exit is
+    an ``Observation`` filled in by that same job. A separate count
+    on the checkpoint would add two jobs per round (its scan stage and
+    its final aggregate)."""
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 1), (2, 3), (3, 2)], "u long, v long"
+    ).localCheckpoint(eager=True)
+
+    def one_round():
+        with pytest.raises(RuntimeError, match="did not converge in 1"):
+            dedup._propagate_min_labels(edges, 1)
+
+    _, n = _spark_jobs(spark, one_round)
+    assert n == 7, n
+    # the observed count still drives the exit: 2 rounds change
+    # labels, the third sees none
+    got = dedup._propagate_min_labels(edges, 3).collect()
+    assert sorted(map(tuple, got)) == [(1, 1), (2, 1), (3, 1)]
+
+
 def test_decontaminate_recall_vs_exact(catalog, spark):
     """Bipartite LSH decontamination, in both hash families (xxhash64
     production, md5 portable twin): never drops a doc the exact form
@@ -3760,6 +3782,50 @@ def test_chat_multiturn_sql_replay_prevalidation(spark):
         for r in con.execute(sql).fetchall()
     }
     assert got == want
+
+
+def test_sequence_encoders_drop_null_ids(spark):
+    """sft_encode_masks, dpo_encode_pairs and chat_encode_multiturn
+    drop rows with a NULL id: with two NULL-id rows in the input, each
+    encoder returns exactly what it returns for the non-NULL rows
+    alone (corpus-derived ids included, so the dropped rows do not
+    reach the vocabulary either). Kept, a NULL key would fold every
+    such row into one sequence."""
+    from mriya_spark.ops.text import (
+        chat_encode_multiturn,
+        dpo_encode_pairs,
+        sft_encode_masks,
+    )
+
+    merges = [("l", "o", 1), ("lo", "w", 2), ("e", "r", 3)]
+    pairs = spark.createDataFrame(
+        [
+            (1, "low lower", "slower", "blow"),
+            (None, "zany", "quiz", "jazz"),
+            (2, "newer", "lowest", "old"),
+            (None, "fizz", "buzz", "zoo"),
+        ],
+        "doc_id long, prompt string, chosen string, rejected string",
+    )
+    chats = spark.createDataFrame(
+        [
+            (1, [("user", "low"), ("assistant", "lower")]),
+            (None, [("user", "zany"), ("assistant", "quiz")]),
+            (None, [("user", "fizz"), ("assistant", "buzz")]),
+            (2, [("user", "newer"), ("assistant", "lowest old")]),
+        ],
+        "doc_id long, turns array<struct<role:string,text:string>>",
+    )
+    for name, enc, df in (
+        ("sft", lambda d: sft_encode_masks(
+            d, merges, completion_col="chosen"), pairs),
+        ("dpo", lambda d: dpo_encode_pairs(d, merges), pairs),
+        ("chat", lambda d: chat_encode_multiturn(d, merges), chats),
+    ):
+        got = sorted(map(tuple, enc(df).collect()))
+        want = sorted(map(tuple, enc(df.where("doc_id IS NOT NULL")).collect()))
+        assert [r[0] for r in got] == [1, 2], (name, got)
+        assert got == want, name
 
 
 def test_pack_windows_attention_extra_payloads(spark):

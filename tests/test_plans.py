@@ -1084,19 +1084,19 @@ def test_label_prop_iteration_keeps_skew_axis_unpinned(spark):
 def test_r16s2_queries_shuffle_ceilings(spark, queries):
     """Pin the r16 session-2 additions' exchange budgets (raw
     plan-string counts, persisted-subtree reprints included — same
-    convention as test_r15_queries_shuffle_ceilings). Measured at the
-    registration tip: sft_chat 8 (the masks pipeline + the template
-    projection, which adds NO exchange), dpo_pairs 12 (three encode
-    passes + two id-side joins), chat_multiturn 6 (ONE segment-keyed
-    encode pass + one attrs join + one per-doc regroup — the
-    single-pass form's whole point), pack_chat 10 (multiturn + shard
-    shuffle + FFD grouped-map + window aggregate). A regression that
-    re-derives the shared vseg, loses a broadcast, or adds a pass
-    breaks the ceiling here."""
+    convention as test_r15_queries_shuffle_ceilings). Every sequence
+    encoder is one segment-keyed encode pass (regroup per segment,
+    left join back to the segments, regroup per doc), so sft_chat,
+    dpo_pairs and chat_multiturn all measure 6 whatever their column
+    or turn count (the template projection and the mask construction
+    add NO exchange); pack_chat 10 (multiturn + shard shuffle + FFD
+    grouped-map + window aggregate). A regression that re-derives the
+    shared vseg, loses a broadcast, or adds a pass breaks the ceiling
+    here."""
     sf = "/root/testdata/sf0.001"
     ceilings = {
-        "tokenizer_sft_chat": 8,
-        "tokenizer_dpo_pairs": 12,
+        "tokenizer_sft_chat": 6,
+        "tokenizer_dpo_pairs": 6,
         "tokenizer_chat_multiturn": 6,
         "tokenizer_pack_chat": 10,
         # the complete varlen batch: pack_chat's exchanges exactly —
@@ -1110,7 +1110,7 @@ def test_r16s2_queries_shuffle_ceilings(spark, queries):
         # (the dual-array window explosion adds zero); mixed turn
         # counts: the fixed-count multiturn ceiling exactly (the op
         # is turn-count-agnostic, which this pin makes enforceable)
-        "tokenizer_chunk_masked": 8,
+        "tokenizer_chunk_masked": 6,
         "tokenizer_chat_varturns": 6,
     }
     for name, cap in ceilings.items():
@@ -1118,6 +1118,36 @@ def test_r16s2_queries_shuffle_ceilings(spark, queries):
         df.collect()  # finalize AQE
         got = n_shuffles(executed_plan(df))
         assert got <= cap, f"{name}: {got} shuffles > ceiling {cap}"
+
+
+def test_sequence_encoders_plan_one_word_posexplode(spark):
+    """sft_encode_masks, dpo_encode_pairs and chat_encode_multiturn
+    tokenize every text column (or turn part) in ONE keyed encode
+    pass: each optimized plan holds exactly one word-level posexplode
+    (chat's turn posexplode is not word-level)."""
+    from mriya_spark.ops.text import (
+        chat_encode_multiturn,
+        dpo_encode_pairs,
+        sft_encode_masks,
+    )
+
+    merges = [("l", "o", 1)]
+    pairs = spark.createDataFrame(
+        [(1, "low", "lower", "slow")],
+        "doc_id long, prompt string, chosen string, rejected string",
+    )
+    chats = spark.createDataFrame(
+        [(1, [("user", "low"), ("assistant", "lower")])],
+        "doc_id long, turns array<struct<role:string,text:string>>",
+    )
+    for name, df in (
+        ("sft", sft_encode_masks(pairs, merges, completion_col="chosen")),
+        ("dpo", dpo_encode_pairs(pairs, merges)),
+        ("chat", chat_encode_multiturn(chats, merges)),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        got = len(re.findall(r"posexplode\(filter\(split\(", plan))
+        assert got == 1, f"{name}: {got} word-level posexplodes\n{plan}"
 
 
 def test_r17_queries_shuffle_ceilings(spark, queries):
