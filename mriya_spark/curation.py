@@ -36,8 +36,9 @@ Spec form::
 Filter/dedup stages run in spec order; ``emit`` stages run AFTER
 dedup (epoch oversampling before dedup would just create exact
 duplicates for the dedup stage to collapse). Scale shape mirrors
-``queries._curate``: scoring is inline in the scan projection, exact
-dedup is one fingerprint shuffle, near-dup stages shingle once into a
+``_curate`` (``qchunks/c02_unicode_pretokenization_r12_judge_direct.py``):
+scoring is inline in the scan projection, exact dedup is one
+fingerprint shuffle, near-dup stages shingle once into a
 scope-cached frame that serves candidates and the final anti-join.
 """
 

@@ -93,7 +93,8 @@ def add_shingle_hashes(
     inlining the tokenizer once per reference. Keeps every input
     column, so pipelines can shingle once, drop the text, and persist
     a compact frame that serves both candidate generation and final
-    reporting (see ``queries._curate``).
+    reporting (see ``_curate`` in
+    ``qchunks/c02_unicode_pretokenization_r12_judge_direct.py``).
     """
     grams = ", ".join(f"element_at(__w, i + {k + 1})" for k in range(n))
     hashed = F.expr(

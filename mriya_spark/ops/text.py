@@ -572,6 +572,52 @@ def pack_sequences_bestfit(
     )
 
 
+def _guard(bad: str, value: str, dtype: str, msg: str, id_ref: str) -> str:
+    """The one fail-loud payload guard, as SQL: ``value`` unless
+    ``bad`` holds, else a ``raise_error`` whose message is ``msg`` with
+    its ``{}`` replaced by the offending id (``id_ref``). The error
+    branch is cast to ``dtype``, the guarded value's OWN type, so an
+    ``array<int>`` payload stays ``array<int>`` and a non-bigint one
+    reaches the runtime message instead of failing analysis on an
+    if-branch type mismatch (r16 ADVICE)."""
+    head, tail = msg.split("{}")
+    return (
+        f"if({bad}, cast(raise_error(concat('{head}', "
+        f"cast({id_ref} as string), '{tail}')) as {dtype}), {value})"
+    )
+
+
+def _window_members(
+    packed: DataFrame, id_col: str, cols: tuple[str, ...]
+) -> DataFrame:
+    """The one window aggregate behind every packed-window view: per
+    (shard, win), ``n_docs``, ``fill``, ``pad`` and ONE member list
+    ``__m`` of ``struct(id_col, *cols)`` sorted by id, so every payload
+    flattened from it concatenates in identical (doc id) order and
+    stays position-aligned by construction. No global sort."""
+    return packed.groupBy("shard", "win").agg(
+        F.count(F.lit(1)).cast("long").alias("n_docs"),
+        F.max("win_fill").cast("long").alias("fill"),
+        F.max("pad").cast("long").alias("pad"),
+        F.expr(
+            f"array_sort(collect_list(struct({', '.join([id_col, *cols])})))"
+        ).alias("__m"),
+    )
+
+
+def _flatten_guarded(
+    packed: DataFrame, c: str, bad: str, msg: str, id_col: str
+) -> F.Column:
+    """Payload ``c`` flattened from ``__m`` in member order, each
+    member checked by ``_guard`` (``bad``/``msg`` over the lambda
+    variable ``x``)."""
+    dtype = packed.schema[c].dataType.simpleString()
+    return F.expr(
+        f"flatten(transform(__m, x -> "
+        f"{_guard(bad, f'x.{c}', dtype, msg, f'x.{id_col}')}))"
+    ).alias(c)
+
+
 def pack_windows_table(
     packed: DataFrame,
     *,
@@ -584,58 +630,52 @@ def pack_windows_table(
     ``(shard, win, n_docs, fill, pad, token_ids)`` with each window's
     id sequences concatenated in (doc id) order. Non-straddling
     packing means the concatenation is exact — no window's payload
-    references another window. One grouped aggregate on (shard, win);
-    order inside the window is rebuilt from collected (id, ids)
-    structs, so no global sort. The per-doc frame stays the
-    lineage/debug view; this is the view a data loader mmaps.
+    references another window. One grouped aggregate on (shard, win)
+    (``_window_members``); order inside the window is rebuilt from the
+    collected (id, payloads) structs, so no global sort. The per-doc
+    frame stays the lineage/debug view; this is the view a data
+    loader mmaps.
 
-    ``extra_ids_cols`` concatenates further carried arrays in the SAME
-    per-window order inside the SAME aggregate — the masked-SFT shard
-    emits (token_ids, loss_mask) pairs this way, position-aligned
-    because every payload concatenates in identical doc-id order (the
-    r16 capstone; two separate ``pack_windows_table`` calls joined on
-    (shard, win) would instead re-run the whole upstream per call).
-    NULL-member handling differs by mode (r16 self-review): with ONE
-    payload a NULL member array is dropped before flatten (flatten
-    would otherwise NULL the whole window, and with a single payload
-    there is nothing to misalign against); with ``extra_ids_cols``
-    the payloads must stay position-aligned, and dropping a member
-    from one payload but not another would silently misalign them —
-    so multi-payload mode FAILS LOUD on any NULL member instead."""
-    strict = bool(extra_ids_cols)
-
-    def _payload(c: str):
-        if strict:
-            return F.expr(
-                f"flatten(transform(array_sort(collect_list("
-                f"struct({id_col}, {c}))), x -> if(x.{c} is null, "
-                f"cast(raise_error(concat('pack_windows_table: NULL "
-                f"{c} for {id_col} ', cast(x.{id_col} as string), "
-                f"' — with extra_ids_cols every payload must be a "
-                f"non-NULL array (alignment)')) as array<bigint>), "
-                f"x.{c})))"
-            ).alias(c)
+    ``extra_ids_cols`` concatenates further carried arrays from the
+    SAME member list — the masked-SFT shard emits (token_ids,
+    loss_mask) pairs this way, position-aligned because every payload
+    flattens the one list (one collect+sort aggregate for any number
+    of payloads; two ``pack_windows_table`` calls joined on (shard,
+    win) would instead re-run the whole upstream per call). Each
+    payload keeps its input type. NULL-member handling differs by
+    mode (r16 self-review): with ONE payload a NULL member array is
+    dropped before flatten (flatten would otherwise NULL the whole
+    window, and with a single payload there is nothing to misalign
+    against); with ``extra_ids_cols`` the payloads must stay
+    position-aligned, and dropping a member from one payload but not
+    another would silently misalign them — so multi-payload mode
+    FAILS LOUD on any NULL member instead, naming the doc id."""
+    cols = (ids_col, *extra_ids_cols)
+    win = _window_members(packed, id_col, cols)
+    if extra_ids_cols:
+        payloads = [
+            _flatten_guarded(
+                packed, c, f"x.{c} is null",
+                f"pack_windows_table: NULL {c} for {id_col} {{}} — with "
+                "extra_ids_cols every payload must be a non-NULL array "
+                "(alignment)",
+                id_col,
+            )
+            for c in cols
+        ]
+    else:
         # drop NULL member arrays before flatten(): flatten returns
         # NULL when the outer array holds a NULL element, which would
         # emit a window whose n_docs/fill claim content but whose
         # payload is silently NULL (bpe_token_ids never emits NULL
         # arrays; this guards arbitrary library callers)
-        return F.expr(
-            f"flatten(filter(transform(array_sort(collect_list("
-            f"struct({id_col}, {c}))), x -> x.{c}), "
-            f"a -> a is not null))"
-        ).alias(c)
-
-    return (
-        packed.groupBy("shard", "win")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_docs"),
-            F.max("win_fill").cast("long").alias("fill"),
-            F.max("pad").cast("long").alias("pad"),
-            _payload(ids_col),
-            *[_payload(c) for c in extra_ids_cols],
-        )
-    )
+        payloads = [
+            F.expr(
+                f"flatten(filter(transform(__m, x -> x.{ids_col}), "
+                "a -> a is not null))"
+            ).alias(ids_col)
+        ]
+    return win.select("shard", "win", "n_docs", "fill", "pad", *payloads)
 
 
 def chat_render(
@@ -718,9 +758,9 @@ def pack_windows_attention(
     ``segment_ids`` carrying each token's document ordinal WITHIN the
     window (0-based, by id order over ALL members including
     zero-token docs) — the pair from which the block-diagonal
-    attention mask is derived (attend iff same segment). All three
-    payloads concatenate in identical (doc id) order from ONE
-    collected struct list, so they are position-aligned by
+    attention mask is derived (attend iff same segment). Every
+    payload flattens the one ``_window_members`` list (the aggregate
+    ``pack_windows_table`` runs), so all are position-aligned by
     construction; non-straddling packing makes each row one complete
     training sequence. One grouped aggregate on (shard, win), no
     global sort; zero-token members contribute an empty slice to
@@ -728,20 +768,28 @@ def pack_windows_attention(
     rank them identically). ``extra_ids_cols`` names further per-doc
     arrays carried through the pack (e.g. ``('loss_mask',)`` for the
     COMPLETE packed varlen SFT batch: ids + positions + segments +
-    mask); each rides the same collected member list and the same
-    fail-loud length guard, so every emitted payload is aligned with
-    every other by construction."""
-    members = F.expr(
-        "array_sort(collect_list(struct("
-        + ", ".join([id_col, count_col, ids_col, *extra_ids_cols])
-        + ")))"
-    )
-    win = packed.groupBy("shard", "win").agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.max("win_fill").cast("long").alias("fill"),
-        F.max("pad").cast("long").alias("pad"),
-        members.alias("__m"),
-    )
+    mask); each rides the same member list and the same fail-loud
+    length guard and keeps its input type.
+
+    STRICTER than ``pack_windows_table``'s single-payload drop-NULL
+    view: position_ids/segment_ids derive from ``count_col``, so a
+    NULL payload OR a count that disagrees with the payload's length
+    (a truncation after counting, a NULL count surviving a left join)
+    would silently emit payloads of DIFFERENT lengths — misaligned
+    training data, the worst failure mode this op exists to prevent —
+    so every payload fails loud instead, naming the doc id."""
+    win = _window_members(packed, id_col, (count_col, ids_col, *extra_ids_cols))
+
+    def _payload(c: str, null_count: str = "") -> F.Column:
+        return _flatten_guarded(
+            packed, c,
+            f"x.{c} is null{null_count} or size(x.{c}) != x.{count_col}",
+            f"pack_windows_attention: NULL or count-mismatched {c} for "
+            f"{id_col} {{}} — need non-NULL arrays with size({c}) == "
+            f"{count_col}",
+            id_col,
+        )
+
     empty = "cast(array() as array<bigint>)"
     return win.select(
         "shard",
@@ -749,25 +797,7 @@ def pack_windows_attention(
         "n_docs",
         "fill",
         "pad",
-        # STRICTER than pack_windows_table's drop-NULL guard:
-        # position_ids/segment_ids derive from count_col, so a NULL
-        # payload OR a count that disagrees with the payload's length
-        # (a truncation after counting, a NULL count surviving a
-        # left join) would silently emit payloads of DIFFERENT
-        # lengths — misaligned training data, the worst failure mode
-        # this op exists to prevent — so fail loud instead of
-        # dropping or diverging
-        F.expr(
-            f"flatten(transform(__m, x -> if(x.{ids_col} is null "
-            f"or x.{count_col} is null "
-            f"or size(x.{ids_col}) != x.{count_col}, "
-            f"cast(raise_error(concat('pack_windows_attention: NULL "
-            f"or count-mismatched {ids_col} for {id_col} ', "
-            f"cast(x.{id_col} as string), "
-            f"' — need non-NULL arrays with size({ids_col}) == "
-            f"{count_col}')) as "
-            f"array<bigint>), x.{ids_col})))"
-        ).alias(ids_col),
+        _payload(ids_col, f" or x.{count_col} is null"),
         F.expr(
             f"flatten(transform(__m, x -> if(x.{count_col} <= 0, "
             f"{empty}, sequence(cast(0 as bigint), "
@@ -777,24 +807,7 @@ def pack_windows_attention(
             "flatten(transform(__m, (x, i) -> "
             f"array_repeat(cast(i as bigint), cast(x.{count_col} as int))))"
         ).alias("segment_ids"),
-        *[
-            F.expr(
-                f"flatten(transform(__m, x -> if(x.{c} is null "
-                f"or size(x.{c}) != x.{count_col}, "
-                f"cast(raise_error(concat('pack_windows_attention: NULL "
-                f"or count-mismatched {c} for {id_col} ', "
-                f"cast(x.{id_col} as string), "
-                f"' — need non-NULL arrays with size({c}) == "
-                # the raise_error branch must carry the extra column's
-                # OWN type, not a hard-coded array<bigint>: otherwise an
-                # array<int>/array<double> extra fails analysis with a
-                # confusing if-branch type mismatch instead of the
-                # intended runtime message (r16 ADVICE)
-                f"{count_col}')) as "
-                f"{packed.schema[c].dataType.simpleString()}), x.{c})))"
-            ).alias(c)
-            for c in extra_ids_cols
-        ],
+        *[_payload(c) for c in extra_ids_cols],
     )
 
 
@@ -2613,7 +2626,9 @@ def chunk_strided(
     ``('loss_mask',)`` for masked strided eval chunks) — each must be
     position-aligned with ``ids_col``, which is asserted fail-loud per
     doc (a mask shorter than its ids would silently desynchronize
-    every window after the mismatch)."""
+    every window after the mismatch); each keeps its input type. Both
+    row guards (extra length, ids vs ``count_col``) are ``_guard``, the
+    packed-window views' fail-loud guard, and name the doc id."""
     if window <= 0 or stride <= 0 or stride > window:
         raise ValueError(
             "need window > 0 and 0 < stride <= window "
@@ -2624,18 +2639,14 @@ def chunk_strided(
     def _guarded(c: str) -> F.Column:
         # alignment guard (the pack_windows_attention class): an extra
         # array whose length disagrees with the ids is silently
-        # desynchronized training data — fail loud with the doc id.
-        # The error branch carries the extra column's OWN type (r16
-        # ADVICE — a hard-coded array<bigint> made non-bigint extras
-        # fail analysis with a confusing if-branch type mismatch)
-        return F.expr(
-            f"if({c} is null or size({c}) != size({ids_col}), "
-            f"cast(raise_error(concat('chunk_strided: NULL or "
-            f"length-mismatched {c} for {id_col} ', "
-            f"cast({id_col} as string), "
-            f"' — need size({c}) == size({ids_col})')) as "
-            f"{enc.schema[c].dataType.simpleString()}), {c})"
-        ).alias(c)
+        # desynchronized training data — fail loud with the doc id
+        return F.expr(_guard(
+            f"{c} is null or size({c}) != size({ids_col})", c,
+            enc.schema[c].dataType.simpleString(),
+            f"chunk_strided: NULL or length-mismatched {c} for {id_col} "
+            f"{{}} — need size({c}) == size({ids_col})",
+            id_col,
+        )).alias(c)
 
     # the ids array itself gets the same class of guard: the window
     # COUNT comes from count_col but every slice comes from ids_col,
@@ -2646,15 +2657,14 @@ def chunk_strided(
     # evaluate; a projected-then-dropped check column would be pruned
     # away by Catalyst), so a 0-count row carrying non-empty ids
     # raises rather than silently vanishing.
-    guarded_filter = F.expr(
-        f"if(size(coalesce({ids_col}, array())) != {count_col} "
-        f"or {count_col} is null, "
-        f"cast(raise_error(concat('chunk_strided: NULL or "
-        f"count-mismatched {ids_col} for {id_col} ', "
-        f"cast({id_col} as string), "
-        f"' — need size({ids_col}) == {count_col}')) as boolean), "
-        f"{count_col} > 0)"
-    )
+    guarded_filter = F.expr(_guard(
+        f"size(coalesce({ids_col}, array())) != {count_col} "
+        f"or {count_col} is null",
+        f"{count_col} > 0", "boolean",
+        f"chunk_strided: NULL or count-mismatched {ids_col} for {id_col} "
+        f"{{}} — need size({ids_col}) == {count_col}",
+        id_col,
+    ))
     base = enc.filter(guarded_filter).select(
         F.col(id_col),
         F.col(count_col),

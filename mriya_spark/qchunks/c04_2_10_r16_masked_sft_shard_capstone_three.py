@@ -1092,7 +1092,7 @@ def _chat_conv_frame(docs: DataFrame) -> DataFrame:
 @register("tokenizer_sft_chat", _sft_chat_oracle_sql())
 @scoped_build
 def tokenizer_sft_chat_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chat-template SFT capstone (the r16 SCALE.md pre-validated
+    """Chat-template SFT capstone (the r16 in-memory pre-validated
     recipe): single-turn (system, user, assistant) conversations —
     rebuilt deterministically as word-split thirds of
     ``documents.text`` — rendered through ``ops.text.chat_render``

@@ -1,5 +1,5 @@
 """The query-registry header: the shared, ACYCLIC core that both
-``queries.py`` (the public re-exporting facade) and every
+``queries.py`` (which imports the chunks in order) and every
 ``qchunks/`` family module import.
 
 This module exists so a chunk module can be imported DIRECTLY —
@@ -13,7 +13,7 @@ function by reference (a Spark python worker resolving
 ``fn.__module__``) imports the chunk first, so the cycle had to go.
 
 ``REGISTRY`` here is THE one registry object; ``queries.py`` re-exports
-it (same dict), so registration order remains chunk import order =
+it (same dict) and imports the chunks, so registration order remains chunk import order =
 SURVEY §2 order.
 """
 

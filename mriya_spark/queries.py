@@ -16,421 +16,28 @@ DuckDB runs over the same parquet tables (driver contract,
 
 from __future__ import annotations
 
-# the registry header lives in the ACYCLIC mriya_spark.qregistry module
-# (r18 self-review: chunks importing it from HERE while this module
-# imports the chunks back made direct chunk imports die on the
-# partially-initialized cycle); this facade re-exports it, so every
-# historical `from mriya_spark.queries import register/...` keeps
-# working and REGISTRY is the same single object
-import os as _os  # noqa: F401
-
-import pandas as pd  # noqa: F401
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: F401
-from pyspark.sql import functions as F  # noqa: F401
-
-from mriya_spark.catalog import Catalog  # noqa: F401
+# the registry header lives in the acyclic mriya_spark.qregistry
+# module; REGISTRY is that one object
 from mriya_spark.qregistry import (  # noqa: F401
     Query,
-    QueryFn,
     REGISTRY,
-    _cat,
     oracle_sql,
     queries,
     register,
 )
 
+# Registered query families, one chunk module each under qchunks/;
+# importing a chunk registers its queries, so import order IS
+# registration order (REGISTRY order = SURVEY §2 order). Helpers are
+# imported from their chunk module, not from here.
+import mriya_spark.qchunks.c00_2_1_scans  # noqa: F401,E402
+import mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector  # noqa: F401,E402
+import mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct  # noqa: F401,E402
+import mriya_spark.qchunks.c03_r6_additions_training_data_pipeline_ops_  # noqa: F401,E402
+import mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three  # noqa: F401,E402
+import mriya_spark.qchunks.c05_r17_additions_packed_shard_delivery_epoc  # noqa: F401,E402
+import mriya_spark.qchunks.c06_r19_semantic_dedup_epoch_resume_stream  # noqa: F401,E402
 
-# ---------------------------------------------------------------------------
-# Registered query families, one chunk module each under qchunks/.
-# Import order IS registration order
-# (REGISTRY order = SURVEY §2 order); every top-level name is
-# re-exported so `from mriya_spark.queries import X` keeps working.
-# ---------------------------------------------------------------------------
-from mriya_spark.qchunks.c00_2_1_scans import (  # noqa: F401,E402
-    scan_table,
-    project_columns,
-    filter_expr_q,
-    _ISIN_KEYS,
-    filter_isin_q,
-    limit_rows_q,
-    orderby_topk,
-    join_lookup,
-    join_semi_q,
-    join_anti_q,
-    join_backfill_q,
-    join_inner_multi,
-    transform_rename_q,
-    transform_lit_q,
-    agg_count,
-    agg_filtered_count,
-    agg_groupby,
-    FLAGSHIP_MAPPING,
-    _FrameCatalog,
-    _migration_frames,
-    run_migration,
-    _MIGRATION_ORACLE_SQL,
-    migration_pipeline,
-    MULTI_MAPPING,
-    _MULTI_MAPPING_ORACLE_SQL,
-    _multi_mapping_result,
-    migration_multi_mapping_q,
-    migration_multi_e2e_q,
-    _cache_subdir,
-    _sweep_stale,
-    _cache_root_dir,
-    _STAGE_DIR,
-    sink_csv_roundtrip,
-    scan_csv,
-    scan_jsonl,
-    scan_orc,
-    sink_insert,
-    sink_update_merge,
-    sink_upsert_merge,
-    sink_scd2_merge,
-    delete_by_predicate,
-    generate_rows,
-    _generate_rows_portable_oracle,
-    _e2e_portable_oracle,
-    generate_rows_portable,
-    window_rank_q,
-    window_running_q,
-    agg_rollup,
-    agg_cube,
-    agg_grouping_sets,
-    distinct_values,
-    pivot_agg,
-    having_filter,
-    count_distinct_q,
-    string_funcs,
-    date_funcs,
-    json_extract_q,
-    case_when_q,
-    setop_union,
-    setop_intersect,
-    setop_except,
-    join_asof,
-    join_asof_forward,
-    join_band,
-    sessionize_q,
-    events_retention_q,
-    _FUNNEL_ORACLE_SQL,
-    events_funnel_q,
-    events_funnel_singlescan_q,
-    agg_histogram_q,
-    stats_corr_q,
-    events_gapfill_q,
-    text_stats_q,
-    text_quality_q,
-    text_lang_id_q,
-    text_fingerprint_q,
-    lang_group_stats_q,
-    text_chunking_q,
-    text_gopher_signals_q,
-    _dup_corpus,
-    _DUP_CORPUS_SQL,
-    dedup_exact_q,
-    _neardup_corpus,
-    _NEARDUP_CORPUS_SQL,
-    dedup_ngram_jaccard_q,
-    dedup_clusters_q,
-    dedup_minhash_lsh_q,
-    _MINHASH_PORTABLE_PERMS,
-    _MINHASH_BAND_MATCH,
-    dedup_minhash_lsh_portable_q,
-    _SIMHASH_SIG_TERMS,
-    dedup_simhash_q,
-    dedup_substring_q,
-    dedup_substring_self_q,
-    dedup_span_surgery_q,
-    pipeline_decontaminate_ngram_q,
-    decontaminate_report_q,
-    split_leakage_check_q,
-    pipeline_decontaminate_ngram_bloom_q,
-    sample_group_quota_q,
-    pipeline_decontaminate_q,
-    pipeline_decontaminate_lsh_portable_q,
-    pipeline_decontaminate_lsh_q,
-    dedup_embedding_cosine_q,
-    _emb_lsh_oracle_sql,
-    dedup_embedding_cosine_lsh_q,
-)
-from mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector import (  # noqa: F401,E402
-    similarity_topk_q,
-    _CENTROID_DIM,
-    embedding_group_centroid_q,
-    _ann_lsh_oracle_sql,
-    similarity_ann_lsh_q,
-    _IVF_INDEX_CACHE,
-    _ivf_index_for,
-    _validated_ivf_meta,
-    similarity_ann_ivf_q,
-    _ann_ivf_portable_oracle_sql,
-    similarity_ann_ivf_portable_q,
-    multimodal_meta_q,
-    multimodal_decode_portable_q,
-    multimodal_decode_q,
-    multimodal_frames_q,
-    multimodal_segments_q,
-    stream_tumbling_window,
-    stream_sliding_window,
-    stream_session_window,
-    stream_dedup,
-    stream_upsert_foreachbatch,
-    stream_corpus_ingest_q,
-    stream_neardup_ingest_q,
-    _stream_neardup_portable_oracle_sql,
-    stream_neardup_ingest_portable_q,
-    stream_stateful_counter,
-    stream_stateful_rocksdb_q,
-    _seeded_org,
-    connector_scan_pushdown,
-    connector_write_roundtrip,
-    subquery_exists,
-    subquery_scalar,
-    cte_query,
-    explode_words,
-    array_funcs,
-    math_funcs,
-    null_funcs,
-    date_arithmetic,
-    unpivot_stack,
-    percentile_exact,
-    percentile_sampled_q,
-    approx_aggs,
-    sample_rows,
-    udf_pandas_score,
-    sketch_hll_mergeable,
-    _bloom_screen_oracle_sql,
-    join_bloom_screen_q,
-    _hll_portable_oracle_sql,
-    sketch_hll_portable_q,
-    _qsketch_state_ctes,
-    _qsketch_state_oracle_sql,
-    _qsketch_estimate_oracle_sql,
-    sketch_quantile_portable_q,
-    _qsketch_grouped_oracle_sql,
-    sketch_quantile_grouped_q,
-    sketch_quantile_estimate_q,
-    stream_sketch_quantile_q,
-    _BPE_MERGES,
-    _bpe_oracle_sql,
-    _bpe_encode_oracle_sql,
-    tokenizer_bpe_train_q,
-    tokenizer_bpe_encode_q,
-    _bpe_pack_oracle_sql,
-    tokenizer_bpe_pack_q,
-)
-from mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct import (  # noqa: F401,E402
-    _U_FROM,
-    _U_TO,
-    _U_TOKEN_RE,
-    _U_PRELUDE,
-    tokenizer_bpe_encode_unicode_q,
-    tokenizer_pack_from_artifact_q,
-    _APPROX_MERGES,
-    _APPROX_BATCH,
-    tokenizer_approx_roundtrip_q,
-    _bpe_fixed_vocab_oracle_sql,
-    tokenizer_encode_fixed_vocab_q,
-    _TOPK_KEEP,
-    _bpe_topk_oracle_sql,
-    tokenizer_vocab_topk_q,
-    tokenizer_roundtrip_unicode_q,
-    udaf_geomean,
-    grouped_map_zscore,
-    udtf_char_ngrams,
-    stream_dedup_watermark,
-    mriya_e2e_pipeline,
-    _run_e2e_checked,
-    mriya_e2e_deterministic,
-    mriya_e2e_portable,
-    agg_stats,
-    agg_arg_extrema,
-    window_range_frame,
-    window_lead_lag,
-    window_distribution,
-    string_distance_pairs,
-    orderby_full_sort,
-    map_funcs,
-    stream_static_enrich,
-    stream_stream_join,
-    pipeline_corpus_curation,
-    _curate,
-    pipeline_corpus_curation_lsh_portable_q,
-    pipeline_corpus_curation_lsh,
-    curation_recipe_q,
-    _CURATION_SURV_CTES,
-    _EPOCH_COPIES_SQL,
-    curation_recipe_epochs_q,
-    pipeline_training_export_q,
-    sample_temperature_mix_q,
-    text_lm_perplexity_q,
-    join_fuzzy_blocked_q,
-    join_fuzzy_blocked_capped_q,
-    _fuzzy_pass_sql,
-    _fuzzy_pass_keys,
-    _fuzzy_multiblock_oracle_sql,
-    join_fuzzy_multiblock_q,
-    table_profile_q,
-    _profile_hll_oracle_sql,
-    table_profile_hll_q,
-    sample_weighted_q,
-    _EPOCH_WEIGHTS,
-    _EPOCH_DEFAULT_W,
-    sample_oversample_q,
-    curation_recipe_spans_q,
-    _rag_ingest_oracle_sql,
-    pipeline_rag_ingest,
-    catalog_profile,
-    join_salted,
-    _bucketed_twin_tables,
-    join_bucketed,
-    window_nth_value,
-    connector_stream_read,
-    stream_migration_pipeline_q,
-    join_full_outer,
-    join_null_safe,
-    agg_incremental_merge,
-    sample_stratified,
-    sample_weighted_mix,
-    sink_json_roundtrip,
-)
-from mriya_spark.qchunks.c03_r6_additions_training_data_pipeline_ops_ import (  # noqa: F401,E402
-    split_train_holdout,
-    shard_shuffle_q,
-    sink_training_shards_q,
-    text_pii_redact,
-    embedding_quantize_int8,
-    variant_shred,
-    sketch_topk_freq,
-    agg_string_concat,
-    pack_sequences_q,
-    _BESTFIT_CAP,
-    pack_sequences_bestfit_q,
-    _SFT_CAP,
-    _SFT_SHARDS,
-    _sft_pack_oracle_sql,
-    tokenizer_pack_bestfit_q,
-    quality_expectations_q,
-    table_diff_q,
-    _BM25_ORACLE_SQL,
-    search_bm25_q,
-    _bm25_index_for,
-    search_bm25_indexed_q,
-    zorder_curve_q,
-    schema_evolution_q,
-    search_hybrid_rrf_q,
-    _pagerank_oracle_sql,
-    graph_pagerank_q,
-    observed_aggregate_q,
-    _clf_gram_ctes,
-    _clf_scored_ctes,
-    _clf_oracle_sql,
-    text_classifier_score_q,
-    _clf_unicode_oracle_sql,
-    text_classifier_score_unicode_q,
-    _CLF_BIG_BUCKETS,
-    _clf_bigvocab_oracle_sql,
-    text_classifier_score_bigvocab_q,
-    _CLF_TRAIN_BUCKETS,
-    _CLF_TRAIN_ITERS,
-    _clf_train_oracle_sql,
-    text_classifier_train_q,
-    _clf_train_score_oracle_sql,
-    _CLF_EVAL_ITERS,
-    _CLF_EVAL_LABEL_SQL,
-    _clf_eval_oracle_sql,
-    text_classifier_eval_q,
-    text_classifier_train_score_q,
-    _CURATION_DOMAINS,
-    _DOMAIN_SEED,
-    _DOMAIN_QUOTA,
-    _derived_url,
-    _domain_quota_oracle_sql,
-    curation_domain_quota_q,
-    _recipe_r9_oracle_sql,
-    curation_recipe_r9_q,
-    stream_classifier_score_q,
-    quality_outlier_iqr_q,
-)
-from mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three import (  # noqa: F401,E402
-    _sft_pairs_prelude_sql,
-    _cols_encode_sql,
-    _sft_masks_encode_sql,
-    _sft_masks_oracle_sql,
-    _sft_pairs_frame,
-    tokenizer_sft_masks_q,
-    _ffd_step_sql,
-    _sft_masked_pack_oracle_sql,
-    tokenizer_pack_masked_q,
-    _fuzzy_threeblock_oracle_sql,
-    join_fuzzy_threeblock_q,
-    _pack_string_id_oracle_sql,
-    pack_bestfit_string_id_q,
-    _rank_gate_merge_list,
-    _RANK_GATE_MERGES,
-    _rank_gate_oracle_sql,
-    tokenizer_encode_rank_engine_q,
-    _pack_positions_oracle_sql,
-    tokenizer_pack_positions_q,
-    _pack_eos_oracle_sql,
-    tokenizer_pack_eos_q,
-    _train_vocab,
-    _chat_conv_prelude_sql,
-    _sft_chat_oracle_sql,
-    _thirds_frame,
-    _chat_conv_frame,
-    tokenizer_sft_chat_q,
-    _dpo_pairs_prelude_sql,
-    _dpo_pairs_oracle_sql,
-    _dpo_pairs_frame,
-    tokenizer_dpo_pairs_q,
-    _segs_encode_sql,
-    _MULTITURN_FINAL_SQL,
-    _multiturn_prelude_sql,
-    _multiturn_oracle_sql,
-    _multiturn_conv_frame,
-    _chat_multiturn_encoded,
-    tokenizer_chat_multiturn_q,
-    _chat_pack_body_sql,
-    _chat_pack_oracle_sql,
-    tokenizer_pack_chat_q,
-    stats_linreg_q,
-    _chat_pack_attention_oracle_sql,
-    tokenizer_pack_chat_attention_q,
-    stream_encode_fixed_vocab_q,
-    _CHUNK_W,
-    _CHUNK_S,
-    _chunk_strided_oracle_sql,
-    tokenizer_chunk_strided_q,
-    _chunk_masked_oracle_sql,
-    tokenizer_chunk_masked_q,
-    _multiturn_var_prelude_sql,
-    _multiturn_var_oracle_sql,
-    _multiturn_var_conv_frame,
-    tokenizer_chat_varturns_q,
-)
-from mriya_spark.qchunks.c05_r17_additions_packed_shard_delivery_epoc import (  # noqa: F401,E402
-    _packed_shards_oracle_sql,
-    sink_packed_shards_q,
-    shard_shuffle_epoch_q,
-    stream_decode_fixed_vocab_q,
-    _RESUME_SHARD,
-    _RESUME_POS,
-    sink_shards_resume_q,
-    _packed_attention_shards_oracle_sql,
-    sink_packed_shards_attention_q,
-    sample_epoch_plan_q,
-)
-from mriya_spark.qchunks.c06_r19_semantic_dedup_epoch_resume_stream import (  # noqa: F401,E402
-    _EPOCH_RESUME_EPOCH,
-    _EPOCH_RESUME_SHARD,
-    _EPOCH_RESUME_POS,
-    _epoch_resume_oracle_sql,
-    sink_epoch_resume_q,
-    _semantic_dedup_oracle_sql,
-    dedup_semantic_ivf_q,
-    dedup_semantic_kmeans_q,
-    stream_shard_delivery_q,
-)
+# the flagship migration pipeline, called as queries.run_migration by
+# __spark_entry__.entry
+from mriya_spark.qchunks.c00_2_1_scans import run_migration  # noqa: F401,E402

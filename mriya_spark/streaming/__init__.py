@@ -110,6 +110,18 @@ def _ckpt_dir(tag: str) -> str:
     return tempfile.mkdtemp(prefix=f"mriya_ckpt_{os.getpid()}_{tag}_", dir=root)
 
 
+def _staged_once(out: str, build) -> str:
+    """Run ``build()`` to stage ``out`` unless its ``_STAGED`` marker
+    exists, then write the marker: a fixture is staged once per path
+    and reused by every later replay."""
+    marker = f"{out}/_STAGED"
+    if not os.path.exists(marker):
+        build()
+        with open(marker, "w") as f:
+            f.write("ok")
+    return out
+
+
 def stage_events_files(
     spark: SparkSession, sf_dir: str, *, n_files: int = 8,
     time_ordered: bool = False,
@@ -126,30 +138,20 @@ def stage_events_files(
     tag = sf_dir.rstrip("/").replace("/", "_")
     suffix = "_ord" if time_ordered else ""
     out = f"{_STAGE_ROOT}/events_{tag}_{n_files}{suffix}"
-    marker = f"{out}/_STAGED"
-    if not os.path.exists(marker):
+
+    def build() -> None:
         from mriya_spark.catalog import normalize_events_ts
 
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
         if time_ordered:
-            df = df.repartitionByRange(n_files, "ts")
+            stage_frame_files(spark, df, out, n_files=n_files, order_col="ts")
         else:
-            df = df.repartition(n_files, "event_id")
-        df.write.mode("overwrite").parquet(out)
-        if time_ordered:
-            # part-file index == ts-range order; make mtimes monotone
-            import time as _time
+            df.repartition(n_files, "event_id").write.mode(
+                "overwrite"
+            ).parquet(out)
 
-            parts = sorted(
-                f for f in os.listdir(out) if f.startswith("part-")
-            )
-            base = _time.time() - len(parts) * 10
-            for i, fname in enumerate(parts):
-                os.utime(os.path.join(out, fname), (base + i * 10, base + i * 10))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return out
+    return _staged_once(out, build)
 
 
 def read_events_stream(
@@ -202,25 +204,53 @@ def _bounded_drain(spark: SparkSession, tag: str, n: int = 8):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _drain(
+    spark: SparkSession, writer, tag: str, *, available_now: bool = True,
+    n: int = 8,
+) -> None:
+    """Run ``writer`` (a configured ``DataStreamWriter``) to the end of
+    its bounded input under ``_bounded_drain(spark, tag, n)``. The one
+    place the two trigger protocols live: ``Trigger.AvailableNow`` +
+    ``awaitTermination``, or, for sources that don't support it
+    (Python DSv2 stream readers), continuous micro-batches blocked on
+    ``processAllAvailable()`` until the source reports no new data,
+    then ``stop``."""
+    with _bounded_drain(spark, tag, n) as ckpt:
+        writer = writer.option("checkpointLocation", ckpt)
+        if available_now:
+            q = writer.trigger(availableNow=True).start()
+        else:
+            q = writer.start()
+            try:
+                q.processAllAvailable()
+            finally:
+                q.stop()
+        q.awaitTermination()
+
+
+def _drain_to_memory(
+    stream_df: DataFrame, output_mode: str, n: int, available_now: bool
+) -> DataFrame:
+    """``_drain`` into a fresh memory-sink table, returned as a batch
+    DataFrame."""
+    name = f"out_{uuid.uuid4().hex[:12]}"
+    spark = stream_df.sparkSession
+    writer = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+    )
+    _drain(spark, writer, name, available_now=available_now, n=n)
+    return spark.table(name)
+
+
 def run_to_memory_sink(
     stream_df: DataFrame, *, output_mode: str = "complete",
     state_partitions: int = 8,
 ) -> DataFrame:
     """Drive a bounded stream to completion into a memory sink and
     return the final result as a batch DataFrame."""
-    name = f"out_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    with _bounded_drain(spark, name, state_partitions) as ckpt:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(stream_df, output_mode, state_partitions, True)
 
 
 def run_until_idle(
@@ -231,22 +261,7 @@ def run_until_idle(
     ``Trigger.AvailableNow`` (e.g. Python DSv2 stream readers): run
     continuous micro-batches and block with ``processAllAvailable()``
     until the source reports no new data, then stop."""
-    name = f"out_{uuid.uuid4().hex[:12]}"
-    spark = stream_df.sparkSession
-    with _bounded_drain(spark, name, state_partitions) as ckpt:
-        q = (
-            stream_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        q.awaitTermination()
-    return spark.table(name)
+    return _drain_to_memory(stream_df, output_mode, state_partitions, False)
 
 
 def _event_time(events: DataFrame) -> DataFrame:
@@ -461,20 +476,10 @@ def run_foreach_batch(
     processAllAvailable/stop protocol for sources that don't support
     ``Trigger.AvailableNow`` (Python DSv2 stream readers — the
     ``run_until_idle`` caveat)."""
-    spark = stream.sparkSession
-    with _bounded_drain(spark, ckpt_prefix.rstrip("_")) as ckpt:
-        writer = stream.writeStream.foreachBatch(batch_fn).option(
-            "checkpointLocation", ckpt
-        )
-        if available_now:
-            q = writer.trigger(availableNow=True).start()
-        else:
-            q = writer.start()
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
-        q.awaitTermination()
+    _drain(
+        stream.sparkSession, stream.writeStream.foreachBatch(batch_fn),
+        ckpt_prefix.rstrip("_"), available_now=available_now,
+    )
 
 
 def stateful_user_counts(events: DataFrame) -> DataFrame:
@@ -683,25 +688,14 @@ def stage_docs_files(
     doc_id order — which makes first-arrival-wins dedup deterministic
     (first arrival == smallest doc_id). The SOURCE ``sf_dir`` may live
     anywhere Spark can read; the staged OUTPUT always lands under the
-    local ``_STAGE_ROOT`` (user cache dir), which is what the
-    ``os.listdir``/``os.utime`` mtime staggering requires — see
-    ``stage_frame_files`` for the caller-supplied-output variant that
-    must guard its path."""
+    local ``_STAGE_ROOT`` (user cache dir), which is what
+    ``stage_frame_files``' mtime staggering requires."""
     tag = sf_dir.rstrip("/").replace("/", "_")
     out = f"{_STAGE_ROOT}/docs_{tag}_{n_files}"
-    marker = f"{out}/_STAGED"
-    if not os.path.exists(marker):
-        df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        df.repartitionByRange(n_files, "doc_id").write.mode("overwrite").parquet(out)
-        import time as _time
-
-        parts = sorted(f for f in os.listdir(out) if f.startswith("part-"))
-        base = _time.time() - len(parts) * 10
-        for i, fname in enumerate(parts):
-            os.utime(os.path.join(out, fname), (base + i * 10, base + i * 10))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return out
+    return _staged_once(out, lambda: stage_frame_files(
+        spark, spark.read.parquet(f"{sf_dir}/documents.parquet"), out,
+        n_files=n_files,
+    ))
 
 
 def stream_corpus_ingest(
@@ -1080,8 +1074,8 @@ def stage_neardup_docs_fixed(spark: SparkSession, sf_dir: str) -> str:
 
     tag = sf_dir.rstrip("/").replace("/", "_")
     out = f"{_STAGE_ROOT}/neardup_fixed_{tag}"
-    marker = f"{out}/_STAGED"
-    if not os.path.exists(marker):
+
+    def build() -> None:
         os.makedirs(out, exist_ok=True)
         docs = (
             spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1111,9 +1105,8 @@ def stage_neardup_docs_fixed(spark: SparkSession, sf_dir: str) -> str:
                 pa.Table.from_pandas(part, preserve_index=False), fpath
             )
             os.utime(fpath, (base + i * 10, base + i * 10))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return out
+
+    return _staged_once(out, build)
 
 
 def stream_neardup_ingest_portable(
@@ -1173,8 +1166,8 @@ def stage_neardup_docs(
     against the already-ingested target."""
     tag = sf_dir.rstrip("/").replace("/", "_")
     out = f"{_STAGE_ROOT}/neardup_docs_{tag}_{n_files}"
-    marker = f"{out}/_STAGED"
-    if not os.path.exists(marker):
+
+    def build() -> None:
         docs = (
             spark.read.parquet(f"{sf_dir}/documents.parquet")
             .filter(F.col("doc_id") < 150)
@@ -1188,19 +1181,11 @@ def stage_neardup_docs(
                 F.ltrim(F.regexp_replace("text", r"^\S+\s*", "")).alias("text"),
             )
         )
-        corpus = docs.unionByName(perturbed)
-        corpus.repartitionByRange(n_files, "doc_id").write.mode(
-            "overwrite"
-        ).parquet(out)
-        import time as _time
+        stage_frame_files(
+            spark, docs.unionByName(perturbed), out, n_files=n_files
+        )
 
-        parts = sorted(f for f in os.listdir(out) if f.startswith("part-"))
-        base = _time.time() - len(parts) * 10
-        for i, fname in enumerate(parts):
-            os.utime(os.path.join(out, fname), (base + i * 10, base + i * 10))
-        with open(marker, "w") as f:
-            f.write("ok")
-    return out
+    return _staged_once(out, build)
 
 
 def stream_quantile_ingest(
@@ -1449,12 +1434,14 @@ def stage_frame_files(
     n_files: int = 8,
     order_col: str = "doc_id",
 ) -> str:
-    """``stage_docs_files`` for an ARBITRARY frame: write ``df`` as
-    ``n_files`` range-partitioned parquet files with monotone mtimes
-    under ``out``, so a file stream replays it in ``order_col`` order
-    with deterministic batch composition. No reuse marker — callers
-    stage query-specific frames under uuid paths and age-sweep them
-    like every staged artifact.
+    """The one range-staged file writer: write ``df`` as ``n_files``
+    range-partitioned parquet files with monotone mtimes (sorted
+    ``part-`` name order) under ``out``, so a file stream replays it
+    in ``order_col`` order with deterministic batch composition. No
+    reuse marker here — the fixed fixtures (``stage_docs_files``,
+    ``stage_neardup_docs``, time-ordered ``stage_events_files``) wrap
+    it in ``_staged_once``; query-specific frames are staged under
+    uuid paths and age-swept like every staged artifact.
 
     LOCAL-FS ONLY (like ``stage_docs_files``): the mtime staggering
     that makes replay order deterministic needs ``os.listdir``/

@@ -18,15 +18,11 @@ import uuid
 import pytest
 
 from mriya_spark import cachedir
-from mriya_spark import queries as Q
-
-# patch the IVF cache where the helper actually LOOKS it up: its own
-# defining module (queries.py re-exports the name, but rebinding the
-# re-export would not touch the function's globals — the r18 qchunks
-# split made that distinction real)
-import sys as _sys
-
-IVF_MOD = _sys.modules[Q._ivf_index_for.__module__]
+from mriya_spark.qchunks import (
+    c01_north_star_similarity_search_ops_vector as IVF_MOD,
+)
+from mriya_spark.qchunks.c00_2_1_scans import _STAGE_DIR
+from mriya_spark.queries import REGISTRY
 
 SF_SMOKE = "/root/testdata/sf0.001"
 
@@ -59,7 +55,7 @@ def test_stream_staging_under_user_cache():
 
 
 def test_stage_dir_and_org_under_user_cache():
-    assert Q._STAGE_DIR.startswith(cachedir.cache_root())
+    assert _STAGE_DIR.startswith(cachedir.cache_root())
 
 
 @pytest.fixture()
@@ -82,7 +78,7 @@ def ivf_sandbox(tmp_path, monkeypatch):
 
 
 def test_ivf_index_built_under_cache_root_and_reused(spark, ivf_sandbox):
-    path1, cents1 = Q._ivf_index_for(spark, SF_SMOKE)
+    path1, cents1 = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     assert path1.startswith(cachedir.cache_root())
     assert ivf_sandbox["n"] == 1
     assert os.path.isfile(os.path.join(path1, "_SUCCESS"))
@@ -90,12 +86,12 @@ def test_ivf_index_built_under_cache_root_and_reused(spark, ivf_sandbox):
     assert meta["params"]["n_centroids"] == len(meta["centroids"]) == 16
 
     # warm in-memory reuse
-    path2, cents2 = Q._ivf_index_for(spark, SF_SMOKE)
+    path2, cents2 = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     assert (path2, cents2) == (path1, cents1) and ivf_sandbox["n"] == 1
 
     # cross-process reuse: cleared in-memory cache, valid disk index
     IVF_MOD._IVF_INDEX_CACHE.clear()
-    path3, cents3 = Q._ivf_index_for(spark, SF_SMOKE)
+    path3, cents3 = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     assert path3 == path1 and cents3 == cents1 and ivf_sandbox["n"] == 1
 
 
@@ -109,7 +105,7 @@ def test_ivf_tampered_or_torn_index_retrains(spark, ivf_sandbox, tamper):
     verifies the params echo, centroid shape, and completed write, and
     falls back to a retrain on any mismatch (r5 'query-result
     poisoning' scenario)."""
-    path, cents = Q._ivf_index_for(spark, SF_SMOKE)
+    path, cents = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     meta_path = os.path.join(path, "_centroids.json")
     meta = json.load(open(meta_path))
 
@@ -130,12 +126,12 @@ def test_ivf_tampered_or_torn_index_retrains(spark, ivf_sandbox, tamper):
                     os.remove(os.path.join(root, f))
 
     IVF_MOD._IVF_INDEX_CACHE.clear()
-    path2, cents2 = Q._ivf_index_for(spark, SF_SMOKE)
+    path2, cents2 = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     assert ivf_sandbox["n"] == 2, f"{tamper}: tampered index was trusted"
     assert path2 == path and cents2 == cents  # deterministic retrain
     # and the rebuilt index verifies again without a third build
     IVF_MOD._IVF_INDEX_CACHE.clear()
-    Q._ivf_index_for(spark, SF_SMOKE)
+    IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     assert ivf_sandbox["n"] == 2
 
 
@@ -144,7 +140,7 @@ def test_ivf_index_with_old_cell_numbering_is_rebuilt(spark, ivf_sandbox):
     ``cell=0..k-1`` directories and a params echo without
     ``first_cell``. Probing it with 1-based ids would silently miss
     cell 0, so the loader must refuse it and rebuild."""
-    path, cents = Q._ivf_index_for(spark, SF_SMOKE)
+    path, cents = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     meta_path = os.path.join(path, "_centroids.json")
     meta = json.load(open(meta_path))
     assert meta["params"]["first_cell"] == 1
@@ -159,7 +155,7 @@ def test_ivf_index_with_old_cell_numbering_is_rebuilt(spark, ivf_sandbox):
         )
 
     IVF_MOD._IVF_INDEX_CACHE.clear()
-    path2, cents2 = Q._ivf_index_for(spark, SF_SMOKE)
+    path2, cents2 = IVF_MOD._ivf_index_for(spark, SF_SMOKE)
     assert ivf_sandbox["n"] == 2, "old-numbering index was trusted"
     assert path2 == path and cents2 == cents
     cells = sorted(
@@ -172,7 +168,7 @@ def test_ivf_query_still_correct_after_cache_move(spark, ivf_sandbox):
     """End-to-end: the registered ANN query runs against the relocated
     index and matches brute-force top-1 for every probe (recall@10
     invariant kept by tests/test_llm_ops.py; this is the smoke)."""
-    df = Q.REGISTRY["similarity_ann_ivf"].fn(spark, SF_SMOKE)
+    df = REGISTRY["similarity_ann_ivf"].fn(spark, SF_SMOKE)
     rows = df.collect()
     assert len(rows) > 0
     assert {r.query_id for r in rows} == {0, 1, 2, 3, 4}
@@ -200,7 +196,7 @@ def test_warm_pipeline_compiles_no_generated_code(spark):
             # query's own plan
             release_caches()
             spark.catalog.clearCache()
-            df = Q.REGISTRY[name].fn(spark, SF_SMOKE)
+            df = REGISTRY[name].fn(spark, SF_SMOKE)
             df.write.format("noop").mode("overwrite").save()
 
     one_round()

@@ -727,7 +727,9 @@ def test_registered_ivf_query_reuses_materialized_index(spark):
     on-disk index — same path, _centroids.json untouched."""
     import os
 
-    from mriya_spark import queries as qmod
+    from mriya_spark.qchunks import (
+        c01_north_star_similarity_search_ops_vector as qmod,
+    )
 
     sf = "/root/testdata/sf0.001"
     qmod._IVF_INDEX_CACHE.clear()
@@ -1949,7 +1951,9 @@ def test_qsketch_grouped_oracle_is_null_safe(spark):
     import duckdb
     import pandas as pd
 
-    from mriya_spark.queries import _qsketch_grouped_oracle_sql
+    from mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector import (
+        _qsketch_grouped_oracle_sql,
+    )
     from mriya_spark.ops.aggregate import quantile_sketch_grouped
 
     rows = [
@@ -2124,7 +2128,9 @@ def test_bpe_unicode_pretokenizer(spark):
         bpe_train,
         bpe_word_freq,
     )
-    from mriya_spark.queries import _U_TOKEN_RE
+    from mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct import (
+        _U_TOKEN_RE,
+    )
 
     assert _U_TOKEN_RE == UNICODE_TOKEN_RE
 
@@ -2609,7 +2615,9 @@ def test_bpe_symbols_topk_sql_replay_prevalidation(spark):
         bpe_token_ids,
         bpe_train,
     )
-    from mriya_spark.queries import _bpe_topk_oracle_sql
+    from mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct import (
+        _bpe_topk_oracle_sql,
+    )
 
     texts = ["low lower lowest low", "new low newer", "aaa aa a9 low"]
     df = spark.createDataFrame(
@@ -2689,7 +2697,10 @@ def test_fuzzy_join_multiblock_sql_replay_prevalidation(spark):
     con = duckdb.connect()
     con.register("ta", pd.DataFrame(names, columns=["id", "name"]))
     con.register("tb", pd.DataFrame(b_names, columns=["id", "name"]))
-    from mriya_spark.queries import _fuzzy_pass_keys, _fuzzy_pass_sql
+    from mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct import (
+        _fuzzy_pass_keys,
+        _fuzzy_pass_sql,
+    )
 
     keys = _fuzzy_pass_keys(blk)
     passes = [_fuzzy_pass_sql(keys["prefix"], cap, maxd),
@@ -2721,7 +2732,9 @@ def test_sft_pack_capstone_sql_replay_prevalidation(spark):
         pack_windows_bestfit,
         pack_windows_table,
     )
-    from mriya_spark.queries import _sft_pack_oracle_sql
+    from mriya_spark.qchunks.c03_r6_additions_training_data_pipeline_ops_ import (
+        _sft_pack_oracle_sql,
+    )
 
     texts = ["low lower lowest low", "new low newer", "aaa aa a9 low",
              "", "newer lowest aa aa"]
@@ -2768,6 +2781,48 @@ def test_pack_windows_table_tolerates_null_member_ids(spark):
     )
     row = pack_windows_table(packed).collect()[0]
     assert row.token_ids == [7, 8] and row.n_docs == 2
+
+
+def _packed_masked(spark, mask_b):
+    return spark.createDataFrame(
+        [(0, 2, 0, 1, 3, 0, [7, 8], [0, 1]), (1, 1, 0, 1, 3, 0, [9], mask_b)],
+        "doc_id long, n_tokens long, shard int, win long, win_fill long, "
+        "pad long, token_ids array<bigint>, loss_mask array<int>",
+    )
+
+
+def test_pack_windows_table_multi_payload_null_member_fails_loud(spark):
+    """With ``extra_ids_cols`` dropping a NULL member from one payload
+    but not the other would misalign them, so the table raises and
+    names the doc id; the payloads keep their input types."""
+    from mriya_spark.ops.text import pack_windows_table
+
+    ok = pack_windows_table(
+        _packed_masked(spark, [1]), extra_ids_cols=("loss_mask",)
+    )
+    assert ok.schema["loss_mask"].dataType.simpleString() == "array<int>"
+    assert ok.schema["token_ids"].dataType.simpleString() == "array<bigint>"
+    row = ok.collect()[0]
+    assert row.token_ids == [7, 8, 9] and row.loss_mask == [0, 1, 1]
+    with pytest.raises(Exception, match="NULL loss_mask for doc_id 1"):
+        pack_windows_table(
+            _packed_masked(spark, None), extra_ids_cols=("loss_mask",)
+        ).collect()
+
+
+def test_packed_window_views_collect_one_member_list(spark):
+    """Every payload of a packed-window view flattens ONE collected
+    member list: the multi-payload table and attention with extras
+    each plan exactly one ``collect_list``."""
+    from mriya_spark.ops.text import pack_windows_attention, pack_windows_table
+
+    packed = _packed_masked(spark, [1])
+    for df in (
+        pack_windows_table(packed, extra_ids_cols=("loss_mask",)),
+        pack_windows_attention(packed, extra_ids_cols=("loss_mask",)),
+    ):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count("collect_list(") == 1, plan
 
 
 def test_pack_windows_bestfit_rejects_negative_counts(spark):
@@ -3116,7 +3171,9 @@ def test_rank_engine_encode_sql_replay_prevalidation(spark):
         bpe_train,
         bpe_word_freq,
     )
-    from mriya_spark.queries import _bpe_topk_oracle_sql
+    from mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct import (
+        _bpe_topk_oracle_sql,
+    )
 
     texts = ["low lower lowest low", "new low newer", "aaa aa a9 low"]
     df = spark.createDataFrame(
@@ -3167,7 +3224,9 @@ def test_sft_encode_masks_sql_replay_prevalidation(spark):
         bpe_train,
         sft_encode_masks,
     )
-    from mriya_spark.queries import _bpe_oracle_sql
+    from mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector import (
+        _bpe_oracle_sql,
+    )
 
     rows = [
         (0, "what is low", "low is a word"),
@@ -3327,7 +3386,9 @@ def test_rank_gate_merges_premise_and_scale(spark):
         bpe_train_approx,
         bpe_word_freq,
     )
-    from mriya_spark.queries import _RANK_GATE_MERGES
+    from mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three import (
+        _RANK_GATE_MERGES,
+    )
 
     assert len(_RANK_GATE_MERGES) == 1100
 
@@ -3486,7 +3547,9 @@ def test_chat_template_sft_sql_replay_prevalidation(spark):
         chat_render,
         sft_encode_masks,
     )
-    from mriya_spark.queries import _bpe_oracle_sql
+    from mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector import (
+        _bpe_oracle_sql,
+    )
 
     rows = [
         (0, "be low", "what is low", "low is a word"),
@@ -3540,7 +3603,9 @@ def test_chat_template_sft_sql_replay_prevalidation(spark):
     """
     train = _bpe_oracle_sql(n_merges, "[^a-z0-9]+", "docs_train", prelude)
     body = train[: train.rindex("SELECT CAST(1 AS BIGINT) AS rank")]
-    from mriya_spark.queries import _sft_masks_encode_sql
+    from mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three import (
+        _sft_masks_encode_sql,
+    )
 
     sql = body + _sft_masks_encode_sql(n_merges, "[^a-z0-9]+") + """
     SELECT p.doc_id,
@@ -3565,7 +3630,10 @@ def test_cols_encode_sql_matches_recorded_two_col_form():
     IDENTICAL text to the recorded r16 two-column form — the recorded
     SFT oracles stay untouched while the DPO oracle shares the exact
     recipe (no drift possible)."""
-    from mriya_spark.queries import _cols_encode_sql, _sft_masks_encode_sql
+    from mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three import (
+        _cols_encode_sql,
+        _sft_masks_encode_sql,
+    )
 
     for n, tre in ((12, "[^a-z0-9]+"), (3, "[^a-z0-9]+")):
         assert _cols_encode_sql(
@@ -3589,7 +3657,12 @@ def test_dpo_pairs_sql_replay_prevalidation(spark):
         bpe_word_freq,
         dpo_encode_pairs,
     )
-    from mriya_spark.queries import _bpe_oracle_sql, _cols_encode_sql
+    from mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector import (
+        _bpe_oracle_sql,
+    )
+    from mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three import (
+        _cols_encode_sql,
+    )
 
     rows = [
         (0, "what is low", "low is a word", "lowest aa a9"),
@@ -3696,10 +3769,12 @@ def test_chat_multiturn_sql_replay_prevalidation(spark):
         bpe_word_freq,
         chat_encode_multiturn,
     )
-    from mriya_spark.queries import (
+    from mriya_spark.qchunks.c04_2_10_r16_masked_sft_shard_capstone_three import (
         _MULTITURN_FINAL_SQL,
-        _bpe_oracle_sql,
         _segs_encode_sql,
+    )
+    from mriya_spark.qchunks.c01_north_star_similarity_search_ops_vector import (
+        _bpe_oracle_sql,
     )
 
     convs = [

@@ -3,7 +3,7 @@ import json
 import pytest
 
 from mriya_spark.mapping import MappingRule, MappingSpec
-from mriya_spark.queries import FLAGSHIP_MAPPING, run_migration
+from mriya_spark.qchunks.c00_2_1_scans import FLAGSHIP_MAPPING, run_migration
 
 
 def test_mapping_requires_rules():

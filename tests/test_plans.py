@@ -848,7 +848,7 @@ def test_exact_jaccard_explode_keeps_tokenizer_out_of_scan_filters(spark):
     per pass (measured 40x on pair generation). The shingled frame is
     now scope-persisted; no scan filter may contain the tokenizer."""
     from mriya_spark.ops.dedup import ngram_jaccard_pairs
-    from mriya_spark.queries import _neardup_corpus
+    from mriya_spark.qchunks.c00_2_1_scans import _neardup_corpus
 
     pairs = ngram_jaccard_pairs(
         _neardup_corpus(spark, SF), text_col="text", n=3, threshold=0.5

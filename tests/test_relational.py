@@ -677,7 +677,10 @@ def test_fuzzy_join_threeblock_sql_replay_prevalidation(spark):
     con = duckdb.connect()
     con.register("ta", pd.DataFrame(names, columns=["id", "name"]))
     con.register("tb", pd.DataFrame(b_names, columns=["id", "name"]))
-    from mriya_spark.queries import _fuzzy_pass_keys, _fuzzy_pass_sql
+    from mriya_spark.qchunks.c02_unicode_pretokenization_r12_judge_direct import (
+        _fuzzy_pass_keys,
+        _fuzzy_pass_sql,
+    )
 
     keys = _fuzzy_pass_keys(blk)
     passes = [_fuzzy_pass_sql(keys[p], cap, maxd)

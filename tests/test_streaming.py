@@ -531,7 +531,7 @@ def test_stream_migration_replay_is_idempotent(spark, tmp_path):
     flagship's output."""
     from mriya_spark.catalog import Catalog
     from mriya_spark.mapping import MappingSpec
-    from mriya_spark.queries import (
+    from mriya_spark.qchunks.c00_2_1_scans import (
         FLAGSHIP_MAPPING,
         _FrameCatalog,
         _migration_frames,
